@@ -299,11 +299,12 @@ def _fse_build_table(probs: tuple[int, ...], acc_log: int) -> _FseTable:
             c += 1
     if pos != 0:
         raise ZstdDecodeError("FSE spread did not complete")
-    return _FseTable(sym, nbits, base, acc_log)
+    # tuples: the cached table is shared by every later decode
+    return _FseTable(tuple(sym), tuple(nbits), tuple(base), acc_log)
 
 
 def _fse_rle(symbol: int) -> _FseTable:
-    return _FseTable([symbol], [0], [0], 0)
+    return _FseTable((symbol,), (0,), (0,), 0)
 
 
 def _fse_parse(fb: _FwdBits, max_acc: int, max_sym: int) -> _FseTable:

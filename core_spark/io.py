@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 TABLES = (
     "region",
@@ -30,25 +31,100 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table.
+class ParquetSchemaError(ValueError):
+    """A parquet footer holds a column type `footer_schema` does not map."""
 
-    The driver's `events.parquet` stores ts as TIMESTAMP(NANOS), which
-    Spark's vectorized parquet reader rejects; we read nanos as long
-    (runtime SQL conf, so this works under any caller's session) and
-    rebuild the micros-precision timestamp with integer arithmetic —
-    the data carries no sub-microsecond components, and DuckDB's view
-    of the same file is micros-precision too.
+
+# Arrow's name for a footer's primitive type -> the type Spark infers for it.
+_SCALAR_TYPES = {
+    "int32": T.IntegerType(),
+    "int64": T.LongType(),
+    "float": T.FloatType(),
+    "double": T.DoubleType(),
+    "string": T.StringType(),
+    "bool": T.BooleanType(),
+    "binary": T.BinaryType(),
+}
+
+
+def footer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The StructType Spark's parquet inference would give `path`,
+    derived on the driver from the file's footer with no Spark job.
+
+    Matches inference under `spark.sql.legacy.parquet.nanosAsLong`:
+    INT64 TIMESTAMP(NANOS) -> LongType; INT96 -> TimestampType; a
+    micros timestamp with isAdjustedToUTC=false -> TimestampNTZType
+    when `spark.sql.parquet.inferTimestampNTZ.enabled` is on, else
+    TimestampType; `list<x>` -> ArrayType(x); every field nullable.
+    Any other type raises ParquetSchemaError naming the file and type.
+    A directory table is read from its first data file, as Spark's
+    inference does without schema merging.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = _first_data_file(path)
+    meta = pq.read_metadata(path)
+    # INT96 reads back as timestamp[ns] too; only the physical type tells
+    int96 = {c.path for c in meta.schema if c.physical_type == "INT96"}
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+
+    def spark_type(col: str, t):
+        if pa.types.is_list(t):
+            item = f"{col}.list.{t.value_field.name}"
+            return T.ArrayType(spark_type(item, t.value_type), True)
+        if pa.types.is_timestamp(t):
+            if col in int96:
+                return T.TimestampType()
+            if t.unit == "ns":
+                return T.LongType()
+            if t.unit == "us":
+                return T.TimestampType() if t.tz or not ntz else T.TimestampNTZType()
+        elif str(t) in _SCALAR_TYPES:
+            return _SCALAR_TYPES[str(t)]
+        raise ParquetSchemaError(f"{path}: column {col!r} has type {t}, which has no Spark mapping")
+
+    return T.StructType(
+        [T.StructField(f.name, spark_type(f.name, f.type), True) for f in meta.schema.to_arrow_schema()]
+    )
+
+
+def _first_data_file(path: str) -> str:
+    """`path`, or for a directory the first file under it, in name order,
+    that Spark would read: names starting with `_` or `.` are skipped."""
+    if not os.path.isdir(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if not f.startswith(("_", ".")):
+                return os.path.join(root, f)
+    raise ParquetSchemaError(f"{path}: directory holds no parquet data file")
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one testdata table with the schema from its footer
+    (`footer_schema`), so planning starts without an inference job.
+
+    Every fixture table stores `ts`, `o_orderdate` and `l_shipdate` as
+    TIMESTAMP(MICROS, isAdjustedToUTC=false); they arrive as
+    TIMESTAMP_NTZ (or TIMESTAMP, with NTZ inference off) and are cast
+    to TIMESTAMP below. An externally written `events.parquet` may
+    store ts as TIMESTAMP(NANOS), which Spark's reader rejects as a
+    timestamp; the footer schema reads it as raw nanosecond longs and
+    the micros timestamp is rebuilt with integer arithmetic — the data
+    carries no sub-microsecond components, and DuckDB's view of the
+    same file is micros-precision too.
+    """
     # Timestamp parity with the DuckDB oracle (naive-UTC) must hold even
     # under a caller-owned session (the driver's) — pin the session TZ.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = footer_schema(spark, path)
+    df = spark.read.schema(schema).parquet(path)
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
-    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
+    if name == "events" and isinstance(schema["ts"].dataType, T.LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Depending on the writer's parquet metadata (isAdjustedToUTC) and the
     # reader's inferTimestampNTZ setting, ts may arrive as TIMESTAMP_NTZ.
@@ -61,7 +137,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # measured to defeat parquet predicate pushdown on these columns —
     # filters like l_shipdate >= X stop reaching the scan — so the
     # pinned-conf contract is the right trade.)
-    for field in df.schema.fields:
+    for field in schema.fields:
         if isinstance(field.dataType, T.TimestampNTZType):
             df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
     return df

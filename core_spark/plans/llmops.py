@@ -6607,7 +6607,10 @@ def q_bits_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Late-r9 PYTEST_ONLY naming (after the window cutoff) — rotates
     into the driver window in r10 per the r5/r7/r9 protocol."""
-    from core_spark.functions.parquetfile import read_parquet_column
+    from core_spark.functions.parquetfile import (
+        parse_parquet_footer,
+        read_parquet_column,
+    )
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
@@ -6670,10 +6673,6 @@ def q_bits_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # column reads share it (r14 opt, guide §1.2 — the
                 # orcfile tail= discipline: the footer walk was ~60%
                 # of this kernel's CPU and ran 3x per document)
-                from core_spark.functions.parquetfile import (
-                    parse_parquet_footer,
-                )
-
                 ftr = parse_parquet_footer(raw)
                 idxs = read_parquet_column(raw, "idx", footer=ftr)
                 words = read_parquet_column(raw, "word", footer=ftr)
@@ -7003,7 +7002,10 @@ def q_bits_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     presentation sort (the q_bits_* discipline; pure-Python decode
     scoped to the verification/recovery tier, bulk reads native)."""
     from core_spark.functions.orcfile import read_orc_list_column
-    from core_spark.functions.parquetfile import read_parquet_list_column
+    from core_spark.functions.parquetfile import (
+        parse_parquet_footer,
+        read_parquet_list_column,
+    )
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
@@ -7062,10 +7064,6 @@ def q_bits_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ],
                 )
                 # one footer parse for both nested reads (guide §1.2)
-                from core_spark.functions.parquetfile import (
-                    parse_parquet_footer,
-                )
-
                 praw = pbuf.getvalue()
                 ftr = parse_parquet_footer(praw)
                 xs = read_parquet_list_column(praw, "ev.x", footer=ftr)
