@@ -66,7 +66,3 @@ def duck_md5i32(expr: str) -> str:
 
 def duck_seeded_md5i32(expr: str, seed: int) -> str:
     return duck_md5i32(f"'s{seed}:' || {expr}")
-
-
-def duck_modulo_mapping(expr: str, n_partitions: int) -> str:
-    return f"({duck_md5i32(expr)} % {n_partitions})"

@@ -41,6 +41,15 @@ Two modes:
   naming the library a cluster image would add (PIL / libsndfile /
   pyav); the Spark-side contract is identical either way.
 
+A per-document kernel is written once, as `doc_kernel(docs, per_doc,
+schema)`: `per_doc(doc_id, text)` yields each output row without its
+leading `doc_id`, and `doc_kernel` supplies the batch loop, the frame
+columns and the `MapInPandas` stage (through `_kernel`, so it fuses
+like every other stage here). Hand-rolled `for pdf in batches` loops
+over `(doc_id, text)` are reserved for the kernels listed in
+tests/test_plan_sweep.py, which build numpy columns or chain two
+stages.
+
 Worker closures are self-contained up to this package (stdlib +
 pandas + numpy + the pure-python codec modules, imported lazily
 inside each closure) — a cluster deployment ships `core_spark` as a
@@ -54,6 +63,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 IMAGE_META_SCHEMA = (
     "doc_id long, mime string, width long, height long, n_bytes long"
@@ -137,6 +147,30 @@ def _kernel(
     out = df.mapInPandas(gen, schema=schema)
     out._kernel_chain = (df, (gen,))
     return out
+
+
+def doc_kernel(docs: DataFrame, per_doc, schema: str) -> DataFrame:
+    """Run `per_doc(doc_id, text)` over every document of `docs`.
+
+    `per_doc` yields each output row as a tuple WITHOUT its leading
+    `doc_id`; the kernel prepends the document's id. `schema` is a DDL
+    string whose first column is `doc_id long`; its column names are
+    parsed once, here on the driver. The stage is named after
+    `per_doc`, so the plan's MapInPandas node reads `walk(...)`,
+    `chain(...)`, … exactly as a hand-written generator would."""
+    names = StructType.fromDDL(schema).names
+
+    def gen(batches):
+        for pdf in batches:
+            rows = [
+                (int(doc_id), *row)
+                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
+                for row in per_doc(doc_id, text)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    gen.__name__ = per_doc.__name__
+    return _kernel(docs, gen, schema, cols=("doc_id", "text"))
 
 
 def attach_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:

@@ -163,19 +163,6 @@ def _mean_from_el(el: DataFrame) -> DataFrame:
     ).select(F.col("cluster").alias("cidx"), "cv")
 
 
-def lloyd_centroids(
-    df: DataFrame,
-    k: int = 8,
-    rounds: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The trained quantizer itself: (cidx, cv) after `rounds` Lloyd
-    iterations over the quantized vectors."""
-    vecs = persisted_quantized(quantize_vectors(df, id_col, vec_col))
-    return train_centroids(vecs, k, rounds)
-
-
 def persisted_quantized(vecs: DataFrame) -> DataFrame:
     """Iterative-input cache: every round reads the quantized corpus
     twice (assignment and update) and each centroid broadcast is its

@@ -38,11 +38,6 @@ SPARK_SHINGLES = (
 SPARK_MD5I32 = "CAST(conv(substring(md5({x}), 1, 8), 16, 10) AS BIGINT)"
 
 
-def _spark_shingles(col: str) -> str:
-    toks = SPARK_TOKS.format(col=col)
-    return SPARK_SHINGLES.format(toks=toks)
-
-
 def _with_shingles(docs: DataFrame, text_col: str, keep: list, out: str = "sh") -> DataFrame:
     """Shingle a document set with the token array materialized as a
     named column FIRST. Substituting `split(text)` textually into the

@@ -13,6 +13,12 @@ flip a row (Jaccard thresholds as cross-multiplication; checksums mod
 
 from __future__ import annotations
 
+import hashlib
+import io
+import lzma
+import struct
+import unicodedata
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -26,6 +32,7 @@ from core_spark.functions.text import (
     spark_stopword_ratio,
 )
 from core_spark.io import load_table, spread, spread_ranged
+from core_spark.multimodal.columns import doc_kernel
 from core_spark.operators.dedup import (
     MAX_SHINGLE_DF,
     MINHASH_P,
@@ -2021,39 +2028,20 @@ def q_clean_html(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def clean(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                out = html_to_text(build_html_fixture(text, digest))
-                rows.append(
-                    (
-                        int(doc_id), out["title"], out["text"],
-                        out["n_links"], out["blocks_kept"],
-                        out["blocks_dropped"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "title", "clean_text", "n_links",
-                    "blocks_kept", "blocks_dropped",
-                ],
-            )
+    def clean(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        out = html_to_text(build_html_fixture(text, digest))
+        yield (
+            out["title"], out["text"], out["n_links"],
+            out["blocks_kept"], out["blocks_dropped"],
+        )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             clean,
-            schema=(
-                "doc_id long, title string, clean_text string,"
-                " n_links long, blocks_kept long, blocks_dropped long"
-            ),
+            "doc_id long, title string, clean_text string,"
+            " n_links long, blocks_kept long, blocks_dropped long",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -2105,36 +2093,24 @@ def q_canon_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def canon(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                std = int(h[6], 16) % 2
-                a, b = int(h[7:9], 16), int(h[9:11], 16)
-                url = (
-                    f"HTTPS://WWW.Example{h[0:2]}.COM."
-                    f"{':443' if std else ':8080'}"
-                    f"/Docs/{h[2:6]}"
-                    f"?b={b}&utm_source=feed&gclid=zz&a={a}#sec"
-                )
-                cu = canonical_url(url)
-                rows.append(
-                    (int(doc_id), url, cu, urlsplit(cu).hostname)
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "url", "canon", "host"]
-            )
+    def canon(doc_id, text):
+        h = hashlib.md5(text.encode("utf-8")).hexdigest()
+        std = int(h[6], 16) % 2
+        a, b = int(h[7:9], 16), int(h[9:11], 16)
+        url = (
+            f"HTTPS://WWW.Example{h[0:2]}.COM."
+            f"{':443' if std else ':8080'}"
+            f"/Docs/{h[2:6]}"
+            f"?b={b}&utm_source=feed&gclid=zz&a={a}#sec"
+        )
+        cu = canonical_url(url)
+        yield url, cu, urlsplit(cu).hostname
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             canon,
-            schema="doc_id long, url string, canon string, host string",
+            "doc_id long, url string, canon string, host string",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -2295,46 +2271,25 @@ def q_crawl_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def chain(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                raw = build_warc_fixture(text, digest)
-                for r in warc_records(raw):
-                    if r["rec_type"] != "response":
-                        continue
-                    page = raw[
-                        r["payload_off"] : r["payload_off"]
-                        + r["payload_len"]
-                    ].decode("utf-8")
-                    out = html_to_text(page)
-                    rows.append(
-                        (
-                            int(doc_id), r["rec_idx"], r["target_uri"],
-                            out["n_links"], out["text"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "rec_idx", "target_uri", "n_links",
-                    "page_text",
-                ],
-            )
+    def chain(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        raw = build_warc_fixture(text, digest)
+        for r in warc_records(raw):
+            if r["rec_type"] != "response":
+                continue
+            page = raw[
+                r["payload_off"] : r["payload_off"]
+                + r["payload_len"]
+            ].decode("utf-8")
+            out = html_to_text(page)
+            yield (r["rec_idx"], r["target_uri"], out["n_links"], out["text"])
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             chain,
-            schema=(
-                "doc_id long, rec_idx long, target_uri string,"
-                " n_links long, page_text string"
-            ),
+            "doc_id long, rec_idx long, target_uri string,"
+            " n_links long, page_text string",
         )
         .sortWithinPartitions("doc_id", "rec_idx")
     )
@@ -2391,46 +2346,28 @@ def q_cc_warc_gz(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def chain(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                gz = build_warc_gz_fixture(text, digest)
-                for m in warc_gz_members(gz):
-                    (r,) = warc_records(m["data"])
-                    if r["rec_type"] != "response":
-                        continue
-                    page = m["data"][
-                        r["payload_off"] : r["payload_off"]
-                        + r["payload_len"]
-                    ].decode("utf-8")
-                    rows.append(
-                        (
-                            int(doc_id), m["member_idx"],
-                            r["target_uri"],
-                            html_to_text(page)["text"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "member_idx", "target_uri", "page_text",
-                ],
+    def chain(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        gz = build_warc_gz_fixture(text, digest)
+        for m in warc_gz_members(gz):
+            (r,) = warc_records(m["data"])
+            if r["rec_type"] != "response":
+                continue
+            page = m["data"][
+                r["payload_off"] : r["payload_off"]
+                + r["payload_len"]
+            ].decode("utf-8")
+            yield (
+                m["member_idx"], r["target_uri"],
+                html_to_text(page)["text"],
             )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             chain,
-            schema=(
-                "doc_id long, member_idx long, target_uri string,"
-                " page_text string"
-            ),
+            "doc_id long, member_idx long, target_uri string,"
+            " page_text string",
         )
         .sortWithinPartitions("doc_id", "member_idx")
     )
@@ -2486,66 +2423,41 @@ def q_blocks_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Late-r8 PYTEST_ONLY name, window-rotated r9 per the r5/r7
     protocol; content unchanged."""
+    import pyarrow as pa
+    import pyarrow.orc as orc
+
     from core_spark.functions.orcfile import parse_orc_tail
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-        import io
-
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.orc as orc
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                n = 3 + int(h[0], 16) % 5
-                base = int(h[2:4], 16) - 128
-                comp = ("uncompressed", "zlib", "snappy", "lz4")[
-                    int(h[4], 16) % 4
-                ]
-                v = [base + 7 * i for i in range(2 * n)]
-                buf = io.BytesIO()
-                orc.write_table(
-                    pa.table({"v": pa.array(v, type=pa.int64())}),
-                    buf,
-                    compression=comp,
-                )
-                meta = parse_orc_tail(buf.getvalue())
-                assert meta["types"][1]["kind"] == "long"
-                (stripe,) = meta["stripes"]
-                st = meta["stats"][1]["int"]
-                rows.append(
-                    (
-                        int(doc_id),
-                        meta["n_rows"],
-                        stripe["n_rows"],
-                        st["min"],
-                        st["max"],
-                        st["sum"],
-                        meta["compression"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_rows", "stripe_rows", "v_min",
-                    "v_max", "v_sum", "compression",
-                ],
-            )
+    def walk(doc_id, text):
+        h = hashlib.md5(text.encode("utf-8")).hexdigest()
+        n = 3 + int(h[0], 16) % 5
+        base = int(h[2:4], 16) - 128
+        comp = ("uncompressed", "zlib", "snappy", "lz4")[int(h[4], 16) % 4]
+        v = [base + 7 * i for i in range(2 * n)]
+        buf = io.BytesIO()
+        orc.write_table(
+            pa.table({"v": pa.array(v, type=pa.int64())}),
+            buf,
+            compression=comp,
+        )
+        meta = parse_orc_tail(buf.getvalue())
+        assert meta["types"][1]["kind"] == "long"
+        (stripe,) = meta["stripes"]
+        st = meta["stats"][1]["int"]
+        yield (
+            meta["n_rows"], stripe["n_rows"], st["min"], st["max"],
+            st["sum"], meta["compression"],
+        )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, n_rows long, stripe_rows long,"
-                " v_min long, v_max long, v_sum long,"
-                " compression string"
-            ),
+            "doc_id long, n_rows long, stripe_rows long,"
+            " v_min long, v_max long, v_sum long,"
+            " compression string",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -3003,71 +2915,45 @@ def q_blocks_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Late-r8 PYTEST_ONLY name, window-rotated r9 per the r5/r7
     protocol; content unchanged."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from core_spark.functions.parquetfile import parse_parquet_footer
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-        import io
-
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                n = 3 + int(h[0], 16) % 5
-                base = int(h[2:4], 16) - 128
-                v = [
-                    base + 7 * i - 5 * g
-                    for g in (0, 1)
-                    for i in range(n)
-                ]
-                tag = [f"{h[:4]}-{j}" for j in range(2 * n)]
-                buf = io.BytesIO()
-                pq.write_table(
-                    pa.table(
-                        {"v": pa.array(v, type=pa.int64()),
-                         "tag": pa.array(tag)}
-                    ),
-                    buf,
-                    row_group_size=n,
-                )
-                meta = parse_parquet_footer(buf.getvalue())
-                assert meta["schema"] == ["v", "tag"]
-                for rg_idx, rg in enumerate(meta["row_groups"]):
-                    vcol = rg["columns"][0]
-                    assert vcol["path"] == "v"
-                    rows.append(
-                        (
-                            int(doc_id),
-                            rg_idx,
-                            rg["num_rows"],
-                            vcol["stats"]["min"],
-                            vcol["stats"]["max"],
-                            len(rg["columns"]),
-                            meta["num_rows"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "rg", "n_rows", "v_min", "v_max",
-                    "n_cols", "file_rows",
-                ],
+    def walk(doc_id, text):
+        h = hashlib.md5(text.encode("utf-8")).hexdigest()
+        n = 3 + int(h[0], 16) % 5
+        base = int(h[2:4], 16) - 128
+        v = [base + 7 * i - 5 * g for g in (0, 1) for i in range(n)]
+        tag = [f"{h[:4]}-{j}" for j in range(2 * n)]
+        buf = io.BytesIO()
+        pq.write_table(
+            pa.table(
+                {"v": pa.array(v, type=pa.int64()),
+                 "tag": pa.array(tag)}
+            ),
+            buf,
+            row_group_size=n,
+        )
+        meta = parse_parquet_footer(buf.getvalue())
+        assert meta["schema"] == ["v", "tag"]
+        for rg_idx, rg in enumerate(meta["row_groups"]):
+            vcol = rg["columns"][0]
+            assert vcol["path"] == "v"
+            yield (
+                rg_idx, rg["num_rows"], vcol["stats"]["min"],
+                vcol["stats"]["max"], len(rg["columns"]),
+                meta["num_rows"],
             )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, rg long, n_rows long, v_min long,"
-                " v_max long, n_cols long, file_rows long"
-            ),
+            "doc_id long, rg long, n_rows long, v_min long,"
+            " v_max long, n_cols long, file_rows long",
         )
         .sortWithinPartitions("doc_id", "rg")
     )
@@ -3325,49 +3211,26 @@ def q_bundle_wiki(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                raw = build_wikidump_fixture(text, digest)
-                page_idx = 0
-                for s in wikidump_streams(raw):
-                    chunk = raw[s["off"]: s["off"] + s["length"]]
-                    for pg in wikidump_pages(chunk):
-                        rows.append(
-                            (
-                                int(doc_id),
-                                s["stream_idx"],
-                                page_idx,
-                                pg["page_id"],
-                                pg["title"],
-                                pg["ns"],
-                                pg["text"],
-                            )
-                        )
-                        page_idx += 1
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "stream_idx", "page_idx", "page_id",
-                    "title", "ns", "page_text",
-                ],
-            )
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        raw = build_wikidump_fixture(text, digest)
+        page_idx = 0
+        for s in wikidump_streams(raw):
+            chunk = raw[s["off"]: s["off"] + s["length"]]
+            for pg in wikidump_pages(chunk):
+                yield (
+                    s["stream_idx"], page_idx, pg["page_id"],
+                    pg["title"], pg["ns"], pg["text"],
+                )
+                page_idx += 1
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, stream_idx long, page_idx long,"
-                " page_id long, title string, ns long,"
-                " page_text string"
-            ),
+            "doc_id long, stream_idx long, page_idx long,"
+            " page_id long, title string, ns long,"
+            " page_text string",
         )
         .sortWithinPartitions("doc_id", "page_idx")
     )
@@ -3436,56 +3299,33 @@ def q_avro_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
     fields = [("seq", "long"), ("tag", "string"), ("score", "long")]
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                raw = build_avro_fixture(digest)
-                meta = avro_ocf_meta(raw)
-                assert meta["schema"]["name"] == "doc_stat"
-                for blk in avro_blocks(raw):
-                    recs = avro_block_records(
-                        raw[
-                            blk["data_off"]: blk["data_off"]
-                            + blk["data_len"]
-                        ],
-                        meta["codec"],
-                        fields,
-                        blk["n_records"],
-                    )
-                    for i, rec in enumerate(recs):
-                        rows.append(
-                            (
-                                int(doc_id),
-                                blk["block_idx"],
-                                i,
-                                rec["seq"],
-                                rec["tag"],
-                                rec["score"],
-                                meta["codec"],
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "block_idx", "rec_idx", "seq", "tag",
-                    "score", "codec",
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        raw = build_avro_fixture(digest)
+        meta = avro_ocf_meta(raw)
+        assert meta["schema"]["name"] == "doc_stat"
+        for blk in avro_blocks(raw):
+            recs = avro_block_records(
+                raw[
+                    blk["data_off"]: blk["data_off"]
+                    + blk["data_len"]
                 ],
+                meta["codec"],
+                fields,
+                blk["n_records"],
             )
+            for i, rec in enumerate(recs):
+                yield (
+                    blk["block_idx"], i, rec["seq"], rec["tag"],
+                    rec["score"], meta["codec"],
+                )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, block_idx long, rec_idx long, seq long,"
-                " tag string, score long, codec string"
-            ),
+            "doc_id long, block_idx long, rec_idx long, seq long,"
+            " tag string, score long, codec string",
         )
         .sortWithinPartitions("doc_id", "block_idx", "rec_idx")
     )
@@ -3574,66 +3414,46 @@ def q_bits_avro(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                raw = build_avro_typed_fixture(digest)
-                meta = avro_ocf_meta(raw)
-                for blk in avro_blocks(raw):
-                    recs = avro_block_records(
-                        raw[
-                            blk["data_off"]: blk["data_off"]
-                            + blk["data_len"]
-                        ],
-                        meta["codec"],
-                        _TYPED_FIELDS,
-                        blk["n_records"],
-                    )
-                    for i, rec in enumerate(recs):
-                        rows.append(
-                            (
-                                int(doc_id),
-                                blk["block_idx"],
-                                i,
-                                rec["seq"],
-                                rec["flag"],
-                                rec["ratio"],
-                                float(rec["fval"]),
-                                rec["note"],
-                                len(rec["blob"]),
-                                str(rec["dec"]),
-                                rec["day"].isoformat(),
-                                rec["ts"].strftime(
-                                    "%Y-%m-%d %H:%M:%S.%f"
-                                ),
-                                meta["codec"],
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "block_idx", "rec_idx", "seq", "flag",
-                    "ratio", "fval", "note", "blob_len", "dec", "day",
-                    "ts", "codec",
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        raw = build_avro_typed_fixture(digest)
+        meta = avro_ocf_meta(raw)
+        for blk in avro_blocks(raw):
+            recs = avro_block_records(
+                raw[
+                    blk["data_off"]: blk["data_off"]
+                    + blk["data_len"]
                 ],
+                meta["codec"],
+                _TYPED_FIELDS,
+                blk["n_records"],
             )
+            for i, rec in enumerate(recs):
+                yield (
+                    blk["block_idx"],
+                    i,
+                    rec["seq"],
+                    rec["flag"],
+                    rec["ratio"],
+                    float(rec["fval"]),
+                    rec["note"],
+                    len(rec["blob"]),
+                    str(rec["dec"]),
+                    rec["day"].isoformat(),
+                    rec["ts"].strftime(
+                        "%Y-%m-%d %H:%M:%S.%f"
+                    ),
+                    meta["codec"],
+                )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, block_idx long, rec_idx long, seq long,"
-                " flag boolean, ratio double, fval double,"
-                " note string, blob_len long, dec string, day string,"
-                " ts string, codec string"
-            ),
+            "doc_id long, block_idx long, rec_idx long, seq long,"
+            " flag boolean, ratio double, fval double,"
+            " note string, blob_len long, dec string, day string,"
+            " ts string, codec string",
         )
         .sortWithinPartitions("doc_id", "block_idx", "rec_idx")
     )
@@ -3746,56 +3566,33 @@ def q_cc_cdx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def cdx(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                raw = build_warc_fixture(text, digest)
-                recs = warc_records(raw)
-                bounds = [r["rec_off"] for r in recs] + [len(raw)]
-                ridx = 0
-                for j, r in enumerate(recs):
-                    if r["rec_type"] != "response":
-                        continue
-                    payload = raw[
-                        r["payload_off"]: r["payload_off"]
-                        + r["payload_len"]
-                    ]
-                    rows.append(
-                        (
-                            int(doc_id),
-                            ridx,
-                            r["target_uri"],
-                            r["rec_off"],
-                            bounds[j + 1] - r["rec_off"],
-                            r["payload_off"],
-                            r["payload_len"],
-                            hashlib.sha256(payload).hexdigest(),
-                        )
-                    )
-                    ridx += 1
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "response_idx", "target_uri", "rec_off",
-                    "rec_len", "payload_off", "payload_len", "sha_hex",
-                ],
+    def cdx(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        raw = build_warc_fixture(text, digest)
+        recs = warc_records(raw)
+        bounds = [r["rec_off"] for r in recs] + [len(raw)]
+        ridx = 0
+        for j, r in enumerate(recs):
+            if r["rec_type"] != "response":
+                continue
+            payload = raw[
+                r["payload_off"]: r["payload_off"]
+                + r["payload_len"]
+            ]
+            yield (
+                ridx, r["target_uri"], r["rec_off"],
+                bounds[j + 1] - r["rec_off"], r["payload_off"],
+                r["payload_len"], hashlib.sha256(payload).hexdigest(),
             )
+            ridx += 1
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             cdx,
-            schema=(
-                "doc_id long, response_idx long, target_uri string,"
-                " rec_off long, rec_len long, payload_off long,"
-                " payload_len long, sha_hex string"
-            ),
+            "doc_id long, response_idx long, target_uri string,"
+            " rec_off long, rec_len long, payload_off long,"
+            " payload_len long, sha_hex string",
         )
         .sortWithinPartitions("doc_id", "response_idx")
     )
@@ -3869,47 +3666,26 @@ def q_cc_sitemap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                index, children = build_sitemap_fixture(digest)
-                idx = parse_sitemap(index)
-                assert idx["kind"] == "index"
-                for loc in idx["sitemaps"]:
-                    child = parse_sitemap(children[loc])
-                    assert child["kind"] == "urlset"
-                    for u in child["urls"]:
-                        rows.append(
-                            (
-                                int(doc_id),
-                                u["loc"],
-                                u["lastmod"],
-                                u["changefreq"],
-                                u["priority_tenths"],
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "url", "lastmod", "changefreq",
-                    "prio_tenths",
-                ],
-            )
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        index, children = build_sitemap_fixture(digest)
+        idx = parse_sitemap(index)
+        assert idx["kind"] == "index"
+        for loc in idx["sitemaps"]:
+            child = parse_sitemap(children[loc])
+            assert child["kind"] == "urlset"
+            for u in child["urls"]:
+                yield (
+                    u["loc"], u["lastmod"], u["changefreq"],
+                    u["priority_tenths"],
+                )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, url string, lastmod string,"
-                " changefreq string, prio_tenths long"
-            ),
+            "doc_id long, url string, lastmod string,"
+            " changefreq string, prio_tenths long",
         )
         .sortWithinPartitions("doc_id", "url")
     )
@@ -3991,59 +3767,36 @@ def q_bundle_tar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def chain(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                blob = build_webdataset_fixture(text, digest)
-                members = tar_members(blob)
-                by_key: dict[str, dict[str, dict]] = {}
-                order: list[str] = []
-                for m in members:
-                    key, _, ext = m["name"].rpartition(".")
-                    if key not in by_key:
-                        by_key[key] = {}
-                        order.append(key)
-                    by_key[key][ext] = m
-                for idx, key in enumerate(order):
-                    t = by_key[key].get("txt")
-                    c = by_key[key].get("cls")
-                    if t is None or c is None:
-                        continue  # incomplete sample: skip, don't lie
-                    txt = blob[
-                        t["data_off"] : t["data_off"] + t["size"]
-                    ].decode("utf-8")
-                    cls = int(
-                        blob[c["data_off"] : c["data_off"] + c["size"]]
-                    )
-                    rows.append(
-                        (
-                            int(doc_id), idx, key, cls,
-                            t["data_off"], t["size"], txt,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_idx", "key", "cls_label",
-                    "txt_off", "txt_len", "sample_text",
-                ],
-            )
+    def chain(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        blob = build_webdataset_fixture(text, digest)
+        members = tar_members(blob)
+        by_key: dict[str, dict[str, dict]] = {}
+        order: list[str] = []
+        for m in members:
+            key, _, ext = m["name"].rpartition(".")
+            if key not in by_key:
+                by_key[key] = {}
+                order.append(key)
+            by_key[key][ext] = m
+        for idx, key in enumerate(order):
+            t = by_key[key].get("txt")
+            c = by_key[key].get("cls")
+            if t is None or c is None:
+                continue  # incomplete sample: skip, don't lie
+            txt = blob[
+                t["data_off"] : t["data_off"] + t["size"]
+            ].decode("utf-8")
+            cls = int(blob[c["data_off"] : c["data_off"] + c["size"]])
+            yield idx, key, cls, t["data_off"], t["size"], txt
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             chain,
-            schema=(
-                "doc_id long, sample_idx long, key string,"
-                " cls_label long, txt_off long, txt_len long,"
-                " sample_text string"
-            ),
+            "doc_id long, sample_idx long, key string,"
+            " cls_label long, txt_off long, txt_len long,"
+            " sample_text string",
         )
         .sortWithinPartitions("doc_id", "sample_idx")
     )
@@ -4155,48 +3908,25 @@ def q_bundle_zip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                form = int(digest[2], 16) % 4
-                blob = build_zip_bundle_fixture(text, digest)
-                for m in zip_members(blob):
-                    data = zip_extract(blob, m)
-                    rows.append(
-                        (
-                            int(doc_id),
-                            m["member_idx"],
-                            m["name"],
-                            form,
-                            m["method_name"],
-                            m["data_off"],
-                            m["size"],
-                            hashlib.md5(data).hexdigest(),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "member_idx", "name", "form",
-                    "method", "data_off", "size", "content_md5",
-                ],
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        form = int(digest[2], 16) % 4
+        blob = build_zip_bundle_fixture(text, digest)
+        for m in zip_members(blob):
+            data = zip_extract(blob, m)
+            yield (
+                m["member_idx"], m["name"], form, m["method_name"],
+                m["data_off"], m["size"],
+                hashlib.md5(data).hexdigest(),
             )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, member_idx long, name string,"
-                " form long, method string, data_off long,"
-                " size long, content_md5 string"
-            ),
+            "doc_id long, member_idx long, name string,"
+            " form long, method string, data_off long,"
+            " size long, content_md5 string",
         )
         .sortWithinPartitions("doc_id", "member_idx")
     )
@@ -4261,46 +3991,23 @@ def q_bundle_epub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                form = int(digest[9], 16) % 4
-                book = epub_chapters(build_epub_fixture(text, digest))
-                for ch in book["chapters"]:
-                    rows.append(
-                        (
-                            int(doc_id),
-                            ch["chapter_idx"],
-                            form,
-                            book["ocf_strict"],
-                            book["title"],
-                            book["creator"],
-                            ch["text"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "chapter_idx", "form", "ocf_strict",
-                    "title", "creator", "chapter_text",
-                ],
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        form = int(digest[9], 16) % 4
+        book = epub_chapters(build_epub_fixture(text, digest))
+        for ch in book["chapters"]:
+            yield (
+                ch["chapter_idx"], form, book["ocf_strict"],
+                book["title"], book["creator"], ch["text"],
             )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, chapter_idx long, form long,"
-                " ocf_strict boolean, title string, creator string,"
-                " chapter_text string"
-            ),
+            "doc_id long, chapter_idx long, form long,"
+            " ocf_strict boolean, title string, creator string,"
+            " chapter_text string",
         )
         .sortWithinPartitions("doc_id", "chapter_idx")
     )
@@ -4370,46 +4077,22 @@ def q_cc_ipynb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                form = int(digest[-4], 16) % 4
-                for cell in ipynb_cells(
-                    build_ipynb_fixture(text, digest)
-                ):
-                    rows.append(
-                        (
-                            int(doc_id),
-                            cell["cell_idx"],
-                            form,
-                            cell["cell_type"],
-                            cell["text"],
-                            cell["n_outputs"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "cell_idx", "form", "cell_type",
-                    "cell_text", "n_outputs",
-                ],
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        form = int(digest[-4], 16) % 4
+        for cell in ipynb_cells(build_ipynb_fixture(text, digest)):
+            yield (
+                cell["cell_idx"], form, cell["cell_type"],
+                cell["text"], cell["n_outputs"],
             )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, cell_idx long, form long,"
-                " cell_type string, cell_text string,"
-                " n_outputs long"
-            ),
+            "doc_id long, cell_idx long, form long,"
+            " cell_type string, cell_text string,"
+            " n_outputs long",
         )
         .sortWithinPartitions("doc_id", "cell_idx")
     )
@@ -4483,45 +4166,22 @@ def q_cc_latex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                form = int(digest[-3], 16) % 4
-                m = latex_to_text(build_latex_fixture(text, digest))
-                rows.append(
-                    (
-                        int(doc_id),
-                        form,
-                        m["title"],
-                        m["n_math"],
-                        m["n_figures"],
-                        m["n_cites"],
-                        m["text"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "form", "title", "n_math",
-                    "n_figures", "n_cites", "body_text",
-                ],
-            )
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        form = int(digest[-3], 16) % 4
+        m = latex_to_text(build_latex_fixture(text, digest))
+        yield (
+            form, m["title"], m["n_math"], m["n_figures"],
+            m["n_cites"], m["text"],
+        )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, form long, title string,"
-                " n_math long, n_figures long, n_cites long,"
-                " body_text string"
-            ),
+            "doc_id long, form long, title string,"
+            " n_math long, n_figures long, n_cites long,"
+            " body_text string",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -4591,45 +4251,22 @@ def q_cc_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                form = int(digest[-2], 16) % 4
-                m = md_to_text(build_md_fixture(text, digest))
-                rows.append(
-                    (
-                        int(doc_id),
-                        form,
-                        m["title"],
-                        len(m["headings"]),
-                        m["n_code_blocks"],
-                        m["n_links"],
-                        m["text"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "form", "title", "n_headings",
-                    "n_code_blocks", "n_links", "body_text",
-                ],
-            )
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        form = int(digest[-2], 16) % 4
+        m = md_to_text(build_md_fixture(text, digest))
+        yield (
+            form, m["title"], len(m["headings"]), m["n_code_blocks"],
+            m["n_links"], m["text"],
+        )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, form long, title string,"
-                " n_headings long, n_code_blocks long,"
-                " n_links long, body_text string"
-            ),
+            "doc_id long, form long, title string,"
+            " n_headings long, n_code_blocks long,"
+            " n_links long, body_text string",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -4695,45 +4332,23 @@ def q_bundle_mbox(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                raw = build_mbox_fixture(text, digest)
-                for j, msg in enumerate(mbox_messages(raw)):
-                    m = parse_eml(msg)
-                    rows.append(
-                        (
-                            int(doc_id),
-                            j,
-                            m["subject"],
-                            m["from_addr"],
-                            m["date_epoch"],
-                            m["body_text"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "msg_idx", "subject", "from_addr",
-                    "date_epoch", "body_text",
-                ],
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        raw = build_mbox_fixture(text, digest)
+        for j, msg in enumerate(mbox_messages(raw)):
+            m = parse_eml(msg)
+            yield (
+                j, m["subject"], m["from_addr"], m["date_epoch"],
+                m["body_text"],
             )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, msg_idx long, subject string,"
-                " from_addr string, date_epoch long,"
-                " body_text string"
-            ),
+            "doc_id long, msg_idx long, subject string,"
+            " from_addr string, date_epoch long,"
+            " body_text string",
         )
         .sortWithinPartitions("doc_id", "msg_idx")
     )
@@ -4818,49 +4433,24 @@ def q_cc_eml(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                form = int(digest[14], 16) % 4
-                m = parse_eml(build_eml_fixture(text, digest))
-                rows.append(
-                    (
-                        int(doc_id),
-                        form,
-                        m["subject"],
-                        m["from_addr"],
-                        m["to_addr"],
-                        m["date_epoch"],
-                        m["n_parts"],
-                        m["body_source"],
-                        m["body_text"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "form", "subject", "from_addr",
-                    "to_addr", "date_epoch", "n_parts",
-                    "body_source", "body_text",
-                ],
-            )
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        form = int(digest[14], 16) % 4
+        m = parse_eml(build_eml_fixture(text, digest))
+        yield (
+            form, m["subject"], m["from_addr"], m["to_addr"],
+            m["date_epoch"], m["n_parts"], m["body_source"],
+            m["body_text"],
+        )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, form long, subject string,"
-                " from_addr string, to_addr string,"
-                " date_epoch long, n_parts long,"
-                " body_source string, body_text string"
-            ),
+            "doc_id long, form long, subject string,"
+            " from_addr string, to_addr string,"
+            " date_epoch long, n_parts long,"
+            " body_source string, body_text string",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -4911,36 +4501,19 @@ def q_cc_rtf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                form = int(digest[13], 16) % 4
-                extracted = rtf_to_text(
-                    build_rtf_fixture(text, digest)
-                )
-                for j, para in enumerate(
-                    extracted.rstrip("\n").split("\n")
-                ):
-                    rows.append((int(doc_id), j, form, para))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "para_idx", "form", "para_text"],
-            )
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        form = int(digest[13], 16) % 4
+        extracted = rtf_to_text(build_rtf_fixture(text, digest))
+        for j, para in enumerate(extracted.rstrip("\n").split("\n")):
+            yield j, form, para
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, para_idx long, form long,"
-                " para_text string"
-            ),
+            "doc_id long, para_idx long, form long,"
+            " para_text string",
         )
         .sortWithinPartitions("doc_id", "para_idx")
     )
@@ -5007,49 +4580,23 @@ def q_crawl_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                form = int(digest[10], 16) % 4
-                feed = parse_feed(build_feed_fixture(text, digest))
-                for e in feed["entries"]:
-                    rows.append(
-                        (
-                            int(doc_id),
-                            e["entry_idx"],
-                            form,
-                            feed["kind"],
-                            feed["feed_title"],
-                            e["title"],
-                            e["url"],
-                            e["pub_epoch"],
-                            e["summary"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "entry_idx", "form", "kind",
-                    "feed_title", "title", "url", "pub_epoch",
-                    "summary",
-                ],
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        form = int(digest[10], 16) % 4
+        feed = parse_feed(build_feed_fixture(text, digest))
+        for e in feed["entries"]:
+            yield (
+                e["entry_idx"], form, feed["kind"], feed["feed_title"],
+                e["title"], e["url"], e["pub_epoch"], e["summary"],
             )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, entry_idx long, form long,"
-                " kind string, feed_title string, title string,"
-                " url string, pub_epoch long, summary string"
-            ),
+            "doc_id long, entry_idx long, form long,"
+            " kind string, feed_title string, title string,"
+            " url string, pub_epoch long, summary string",
         )
         .sortWithinPartitions("doc_id", "entry_idx")
     )
@@ -5113,52 +4660,24 @@ def q_crawl_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                form = int(digest[7], 16) % 4
-                m = extract_structured_meta(
-                    build_meta_fixture(text, digest)
-                )
-                rows.append(
-                    (
-                        int(doc_id),
-                        form,
-                        m["title"],
-                        m["canonical"],
-                        m["headline"],
-                        m["headline_src"],
-                        m["pub_date"],
-                        m["author"],
-                        m["n_og"],
-                        m["ld_ok"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "form", "title", "canonical_url",
-                    "headline", "headline_src", "pub_date", "author",
-                    "n_og", "ld_ok",
-                ],
-            )
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        form = int(digest[7], 16) % 4
+        m = extract_structured_meta(build_meta_fixture(text, digest))
+        yield (
+            form, m["title"], m["canonical"], m["headline"],
+            m["headline_src"], m["pub_date"], m["author"], m["n_og"],
+            m["ld_ok"],
+        )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, form long, title string,"
-                " canonical_url string, headline string,"
-                " headline_src string, pub_date string,"
-                " author string, n_og long, ld_ok boolean"
-            ),
+            "doc_id long, form long, title string,"
+            " canonical_url string, headline string,"
+            " headline_src string, pub_date string,"
+            " author string, n_og long, ld_ok boolean",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -5649,66 +5168,47 @@ def q_crawl_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def gate(batches):
-        import hashlib
+    def h(s: str) -> str:
+        return hashlib.md5(s.encode("utf-8")).hexdigest()
 
-        import pandas as pd
-
-        def h(s: str) -> str:
-            return hashlib.md5(s.encode("utf-8")).hexdigest()
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                hd = h(text)
-                host = f"example{hd[0:2]}.com"
-                ha = int(h(host)[0], 16)
-                pb = int(hd[2], 16) % 4
-                sfx = hd[3:7]
-                path = [
-                    f"/private/pub/{sfx}",
-                    f"/private/{sfx}",
-                    f"/tmp/{sfx}",
-                    f"/docs/{sfx}",
-                ][pb]
-                lines = [
-                    f"# robots for {host}",
-                    "User-agent: BadBot",
-                    "Disallow: /",
-                    "",
-                    "User-agent: *",
-                    "Disallow: /private   # members area",
-                ]
-                if ha % 2 == 1:
-                    lines.append("Allow: /private/pub")
-                if ha % 3 == 0:
-                    lines.append("Disallow: /tmp")
-                lines.append(f"Crawl-delay: {1 + ha % 5}")
-                pol = parse_robots("\n".join(lines))
-                ok, rule = pol.decide(path)
-                rows.append(
-                    (
-                        int(doc_id), host, path,
-                        "fetch" if ok else "skip", rule,
-                        int(pol.crawl_delay or 0),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "host", "path", "verdict", "rule",
-                    "delay_s",
-                ],
-            )
+    def gate(doc_id, text):
+        hd = h(text)
+        host = f"example{hd[0:2]}.com"
+        ha = int(h(host)[0], 16)
+        pb = int(hd[2], 16) % 4
+        sfx = hd[3:7]
+        path = [
+            f"/private/pub/{sfx}",
+            f"/private/{sfx}",
+            f"/tmp/{sfx}",
+            f"/docs/{sfx}",
+        ][pb]
+        lines = [
+            f"# robots for {host}",
+            "User-agent: BadBot",
+            "Disallow: /",
+            "",
+            "User-agent: *",
+            "Disallow: /private   # members area",
+        ]
+        if ha % 2 == 1:
+            lines.append("Allow: /private/pub")
+        if ha % 3 == 0:
+            lines.append("Disallow: /tmp")
+        lines.append(f"Crawl-delay: {1 + ha % 5}")
+        pol = parse_robots("\n".join(lines))
+        ok, rule = pol.decide(path)
+        yield (
+            host, path, "fetch" if ok else "skip", rule,
+            int(pol.crawl_delay or 0),
+        )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             gate,
-            schema=(
-                "doc_id long, host string, path string, verdict string,"
-                " rule string, delay_s long"
-            ),
+            "doc_id long, host string, path string, verdict string,"
+            " rule string, delay_s long",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -5771,60 +5271,34 @@ def q_audio_flac(spark: SparkSession, sf_dir: str) -> DataFrame:
     (columns.py stub discipline)."""
     import numpy as np
 
+    from core_spark.multimodal.flac import flac_decode, flac_encode, flac_meta
+
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
     rates = (8000, 16000, 22050, 44100)
 
-    def roundtrip(batches):
-        import hashlib
-
-        import pandas as pd
-
-        from core_spark.multimodal.flac import (
-            flac_decode,
-            flac_encode,
-            flac_meta,
-        )
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                n = 128 + int(h[0:3], 16) % 256
-                rate = rates[int(h[3], 16) % 4]
-                nch = 1 + int(h[4], 16) % 2
-                a, b, c = 1 + int(h[5:7], 16), int(h[7:9], 16), int(h[9:11], 16)
-                i = np.arange(n, dtype=np.int64)
-                v = (a * i * i + b * i + c) % 4096 - 2048
-                pcm_in = np.column_stack([v, v[::-1]]) if nch == 2 else v
-                blob = flac_encode(
-                    pcm_in, sample_rate=rate, bps=16, block_size=128
-                )
-                m_rate, m_nch, m_bps, m_total = flac_meta(blob)
-                pcm, _ = flac_decode(blob)
-                nf, ch = pcm.shape
-                energy = int(
-                    (pcm.astype(np.int64) ** 2).sum() // (nf * ch)
-                )
-                peak = int(np.abs(pcm).max())
-                rows.append(
-                    (int(doc_id), m_rate, m_total, m_nch, energy, peak)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "rate", "n_samples", "channels",
-                    "energy", "peak",
-                ],
-            )
+    def roundtrip(doc_id, text):
+        h = hashlib.md5(text.encode("utf-8")).hexdigest()
+        n = 128 + int(h[0:3], 16) % 256
+        rate = rates[int(h[3], 16) % 4]
+        nch = 1 + int(h[4], 16) % 2
+        a, b, c = 1 + int(h[5:7], 16), int(h[7:9], 16), int(h[9:11], 16)
+        i = np.arange(n, dtype=np.int64)
+        v = (a * i * i + b * i + c) % 4096 - 2048
+        pcm_in = np.column_stack([v, v[::-1]]) if nch == 2 else v
+        blob = flac_encode(pcm_in, sample_rate=rate, bps=16, block_size=128)
+        m_rate, m_nch, m_bps, m_total = flac_meta(blob)
+        pcm, _ = flac_decode(blob)
+        nf, ch = pcm.shape
+        energy = int((pcm.astype(np.int64) ** 2).sum() // (nf * ch))
+        peak = int(np.abs(pcm).max())
+        yield m_rate, m_total, m_nch, energy, peak
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             roundtrip,
-            schema=(
-                "doc_id long, rate long, n_samples long,"
-                " channels long, energy long, peak long"
-            ),
+            "doc_id long, rate long, n_samples long,"
+            " channels long, energy long, peak long",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -5876,28 +5350,19 @@ def q_anchor_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread(load_table(spark, sf_dir, "documents"))
 
-    def edges(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                page = build_link_fixture(text, digest)
-                for href, anchor in extract_links(page):
-                    if href.startswith("https://") and ".org/" in href:
-                        host = href[len("https://"):].split("/", 1)[0]
-                        rows.append((int(doc_id), host, anchor))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "target_host", "anchor"]
-            )
+    def edges(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        page = build_link_fixture(text, digest)
+        for href, anchor in extract_links(page):
+            if href.startswith("https://") and ".org/" in href:
+                host = href[len("https://"):].split("/", 1)[0]
+                yield host, anchor
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
-            edges, schema="doc_id long, target_host string, anchor string"
+        doc_kernel(
+            docs,
+            edges,
+            "doc_id long, target_host string, anchor string",
         )
         .groupBy("target_host")
         .agg(
@@ -5989,48 +5454,23 @@ def q_blocks_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                content = text.encode("utf-8")
-                digest = hashlib.md5(content).hexdigest()
-                k = 2 + int(digest[0], 16) % 3
-                blob = build_skippable(b"seektbl1") + build_zstd_frames(
-                    content, k
-                )
-                for fr in zstd_frames(blob):
-                    rows.append(
-                        (
-                            int(doc_id),
-                            fr["frame_idx"],
-                            fr["off"],
-                            fr["length"],
-                            fr["kind"],
-                            fr["content_size"],
-                            fr["n_blocks"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "off", "length", "kind",
-                    "content_size", "n_blocks",
-                ],
+    def walk(doc_id, text):
+        content = text.encode("utf-8")
+        digest = hashlib.md5(content).hexdigest()
+        k = 2 + int(digest[0], 16) % 3
+        blob = build_skippable(b"seektbl1") + build_zstd_frames(content, k)
+        for fr in zstd_frames(blob):
+            yield (
+                fr["frame_idx"], fr["off"], fr["length"], fr["kind"],
+                fr["content_size"], fr["n_blocks"],
             )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, frame_idx long, off long, length long,"
-                " kind string, content_size long, n_blocks long"
-            ),
+            "doc_id long, frame_idx long, off long, length long,"
+            " kind string, content_size long, n_blocks long",
         )
         .sortWithinPartitions("doc_id", "frame_idx")
     )
@@ -6140,64 +5580,41 @@ def q_blocks_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def resolve(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                raw = build_warc_revisit_fixture(text, digest)
-                recs = warc_records(raw)
-                by_uri = {
-                    r["target_uri"]: r
-                    for r in recs
-                    if r["rec_type"] == "response"
-                }
-                ridx = 0
-                for r in recs:
-                    if r["rec_type"] != "revisit":
-                        continue
-                    orig = by_uri.get(r["refers_to"])
-                    if orig is None:
-                        continue  # dangling pointer: not servable
-                    payload = raw[
-                        orig["payload_off"]: orig["payload_off"]
-                        + orig["payload_len"]
-                    ]
-                    sha = hashlib.sha256(payload).hexdigest()
-                    claimed = r["payload_digest"].split(":", 1)[-1]
-                    rows.append(
-                        (
-                            int(doc_id),
-                            ridx,
-                            r["target_uri"],
-                            r["refers_to"],
-                            orig["payload_len"],
-                            sha,
-                            sha == claimed,
-                        )
-                    )
-                    ridx += 1
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "revisit_idx", "uri", "orig_uri",
-                    "saved_bytes", "digest_hex", "digest_ok",
-                ],
+    def resolve(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        raw = build_warc_revisit_fixture(text, digest)
+        recs = warc_records(raw)
+        by_uri = {
+            r["target_uri"]: r
+            for r in recs
+            if r["rec_type"] == "response"
+        }
+        ridx = 0
+        for r in recs:
+            if r["rec_type"] != "revisit":
+                continue
+            orig = by_uri.get(r["refers_to"])
+            if orig is None:
+                continue  # dangling pointer: not servable
+            payload = raw[
+                orig["payload_off"]: orig["payload_off"]
+                + orig["payload_len"]
+            ]
+            sha = hashlib.sha256(payload).hexdigest()
+            claimed = r["payload_digest"].split(":", 1)[-1]
+            yield (
+                ridx, r["target_uri"], r["refers_to"],
+                orig["payload_len"], sha, sha == claimed,
             )
+            ridx += 1
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             resolve,
-            schema=(
-                "doc_id long, revisit_idx long, uri string,"
-                " orig_uri string, saved_bytes long,"
-                " digest_hex string, digest_ok boolean"
-            ),
+            "doc_id long, revisit_idx long, uri string,"
+            " orig_uri string, saved_bytes long,"
+            " digest_hex string, digest_ok boolean",
         )
         .sortWithinPartitions("doc_id", "revisit_idx")
     )
@@ -6269,45 +5686,23 @@ def q_blocks_zstd_seek(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                content = text.encode("utf-8")
-                digest = hashlib.md5(content).hexdigest()
-                k = 2 + int(digest[0], 16) % 3
-                blob = build_seekable(content, k)
-                for e in zstd_seek_table(blob):
-                    rows.append(
-                        (
-                            int(doc_id),
-                            e["frame_idx"],
-                            e["c_off"],
-                            e["c_size"],
-                            e["d_off"],
-                            e["d_size"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "c_off", "c_size",
-                    "d_off", "d_size",
-                ],
+    def walk(doc_id, text):
+        content = text.encode("utf-8")
+        digest = hashlib.md5(content).hexdigest()
+        k = 2 + int(digest[0], 16) % 3
+        blob = build_seekable(content, k)
+        for e in zstd_seek_table(blob):
+            yield (
+                e["frame_idx"], e["c_off"], e["c_size"], e["d_off"],
+                e["d_size"],
             )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, frame_idx long, c_off long,"
-                " c_size long, d_off long, d_size long"
-            ),
+            "doc_id long, frame_idx long, c_off long,"
+            " c_size long, d_off long, d_size long",
         )
         .sortWithinPartitions("doc_id", "frame_idx")
     )
@@ -6366,6 +5761,8 @@ def q_bits_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Late-r9 PYTEST_ONLY naming (after the window cutoff) — rotates
     into the driver window in r10 per the r5/r7/r9 protocol."""
+    import pyarrow as pa
+
     from core_spark.functions.zstd_decode import zstd_decompress_frame
     from core_spark.functions.zstdfile import (
         SEEK_NIBBLE,
@@ -6375,74 +5772,53 @@ def q_bits_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-        import struct as _struct
-
-        import pandas as pd
-        import pyarrow as pa
-
+    def walk(doc_id, text):
+        # pa.Codec does not pickle, so it cannot ride the closure
         codec = pa.Codec("zstd", compression_level=3)
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                content = text.encode("utf-8")
-                digest = hashlib.md5(content).hexdigest()
-                k = 2 + int(digest[0], 16) % 3
-                base, rem = divmod(len(content), k)
-                # A real seekable archive: independent C encoder per
-                # frame + the contrib-format seek table.
-                body = bytearray()
-                table = bytearray()
-                pos = 0
-                for i in range(k):
-                    ln = base + (1 if i < rem else 0)
-                    frame = codec.compress(
-                        content[pos : pos + ln], asbytes=True
-                    )
-                    pos += ln
-                    body += frame
-                    table += _struct.pack("<II", len(frame), ln)
-                table += _struct.pack("<IBI", k, 0, 0x8F92EAB1)
-                blob = bytes(
-                    body
-                    + _struct.pack("<I", SKIP_MAGIC_LO | SEEK_NIBBLE)
-                    + _struct.pack("<I", len(table))
-                    + table
-                )
-                # Reader: tail-only plan, then ONE ranged frame read.
-                mid = len(content) // 2
-                entry = next(
-                    e
-                    for e in zstd_seek_table(blob)
-                    if e["d_off"] <= mid < e["d_off"] + e["d_size"]
-                )
-                span = blob[entry["c_off"] : entry["c_off"] + entry["c_size"]]
-                chunk, used = zstd_decompress_frame(span)
-                if used != len(span) or len(chunk) != entry["d_size"]:
-                    raise ValueError("seek-table/frame disagreement")
-                rows.append(
-                    (
-                        int(doc_id),
-                        entry["frame_idx"],
-                        entry["d_off"],
-                        entry["d_size"],
-                        chunk.decode("utf-8"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "frame_idx", "d_off", "d_size", "chunk"],
-            )
+        content = text.encode("utf-8")
+        digest = hashlib.md5(content).hexdigest()
+        k = 2 + int(digest[0], 16) % 3
+        base, rem = divmod(len(content), k)
+        # A real seekable archive: independent C encoder per
+        # frame + the contrib-format seek table.
+        body = bytearray()
+        table = bytearray()
+        pos = 0
+        for i in range(k):
+            ln = base + (1 if i < rem else 0)
+            frame = codec.compress(content[pos : pos + ln], asbytes=True)
+            pos += ln
+            body += frame
+            table += struct.pack("<II", len(frame), ln)
+        table += struct.pack("<IBI", k, 0, 0x8F92EAB1)
+        blob = bytes(
+            body
+            + struct.pack("<I", SKIP_MAGIC_LO | SEEK_NIBBLE)
+            + struct.pack("<I", len(table))
+            + table
+        )
+        # Reader: tail-only plan, then ONE ranged frame read.
+        mid = len(content) // 2
+        entry = next(
+            e
+            for e in zstd_seek_table(blob)
+            if e["d_off"] <= mid < e["d_off"] + e["d_size"]
+        )
+        span = blob[entry["c_off"] : entry["c_off"] + entry["c_size"]]
+        chunk, used = zstd_decompress_frame(span)
+        if used != len(span) or len(chunk) != entry["d_size"]:
+            raise ValueError("seek-table/frame disagreement")
+        yield (
+            entry["frame_idx"], entry["d_off"], entry["d_size"],
+            chunk.decode("utf-8"),
+        )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, frame_idx long, d_off long, d_size long,"
-                " chunk string"
-            ),
+            "doc_id long, frame_idx long, d_off long, d_size long,"
+            " chunk string",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -6510,50 +5886,32 @@ def q_bits_dict(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                words = text.split(" ")
-                payload = "|".join(reversed(words)).encode("utf-8")
-                dict_content = text.encode("utf-8")
-                comp = zstd_compress(
-                    payload,
-                    dictionary=dict_content,
-                    dict_only=True,
-                    economize=False,
-                )
-                got = zstd_decompress(comp, dictionary=dict_content)
-                if got != payload:
-                    raise ValueError("dictionary round-trip mismatch")
-                try:
-                    undictd = zstd_decompress(comp)
-                    dict_needed = undictd != payload
-                except ZstdDecodeError:
-                    dict_needed = True
-                rows.append(
-                    (
-                        int(doc_id),
-                        len(words),
-                        bool(dict_needed),
-                        got.decode("utf-8"),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "n_words", "dict_needed", "payload"],
-            )
+    def walk(doc_id, text):
+        words = text.split(" ")
+        payload = "|".join(reversed(words)).encode("utf-8")
+        dict_content = text.encode("utf-8")
+        comp = zstd_compress(
+            payload,
+            dictionary=dict_content,
+            dict_only=True,
+            economize=False,
+        )
+        got = zstd_decompress(comp, dictionary=dict_content)
+        if got != payload:
+            raise ValueError("dictionary round-trip mismatch")
+        try:
+            undictd = zstd_decompress(comp)
+            dict_needed = undictd != payload
+        except ZstdDecodeError:
+            dict_needed = True
+        yield len(words), bool(dict_needed), got.decode("utf-8")
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, n_words long, dict_needed boolean,"
-                " payload string"
-            ),
+            "doc_id long, n_words long, dict_needed boolean,"
+            " payload string",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -6607,6 +5965,9 @@ def q_bits_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Late-r9 PYTEST_ONLY naming (after the window cutoff) — rotates
     into the driver window in r10 per the r5/r7/r9 protocol."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from core_spark.functions.parquetfile import (
         parse_parquet_footer,
         read_parquet_column,
@@ -6614,82 +5975,68 @@ def q_bits_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import io
+    schema = pa.schema(
+        [
+            pa.field("idx", pa.int64(), nullable=False),
+            pa.field("word", pa.string(), nullable=False),
+            pa.field("score", pa.int64(), nullable=True),
+        ]
+    )
 
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        schema = pa.schema(
-            [
-                pa.field("idx", pa.int64(), nullable=False),
-                pa.field("word", pa.string(), nullable=False),
-                pa.field("score", pa.int64(), nullable=True),
-            ]
+    def walk(doc_id, text):
+        ws = text.split(" ")[:32]
+        t = pa.table(
+            {
+                "idx": list(range(len(ws))),
+                "word": ws,
+                "score": [
+                    None if k % 5 == 0 else k * 7 + len(w)
+                    for k, w in enumerate(ws)
+                ],
+            },
+            schema=schema,
         )
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                ws = text.split(" ")[:32]
-                t = pa.table(
-                    {
-                        "idx": list(range(len(ws))),
-                        "word": ws,
-                        "score": [
-                            None if k % 5 == 0 else k * 7 + len(w)
-                            for k, w in enumerate(ws)
-                        ],
-                    },
-                    schema=schema,
-                )
-                buf = io.BytesIO()
-                if int(doc_id) % 2 == 0:
-                    pq.write_table(
-                        t,
-                        buf,
-                        compression="zstd",
-                        version="1.0",
-                        use_dictionary=["word"],
-                        row_group_size=8,
-                    )
-                else:
-                    pq.write_table(
-                        t,
-                        buf,
-                        compression="snappy",
-                        version="2.6",
-                        data_page_version="2.0",
-                        use_dictionary=False,
-                        row_group_size=8,
-                        column_encoding={
-                            "idx": "DELTA_BINARY_PACKED",
-                            "word": "DELTA_BYTE_ARRAY",
-                            "score": "DELTA_BINARY_PACKED",
-                        },
-                    )
-                raw = buf.getvalue()
-                # parse the thrift footer ONCE per file; all three
-                # column reads share it (r14 opt, guide §1.2 — the
-                # orcfile tail= discipline: the footer walk was ~60%
-                # of this kernel's CPU and ran 3x per document)
-                ftr = parse_parquet_footer(raw)
-                idxs = read_parquet_column(raw, "idx", footer=ftr)
-                words = read_parquet_column(raw, "word", footer=ftr)
-                scores = read_parquet_column(raw, "score", footer=ftr)
-                rows.extend(
-                    (int(doc_id), i, w, s)
-                    for i, w, s in zip(idxs, words, scores)
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "idx", "word", "score"]
+        buf = io.BytesIO()
+        if int(doc_id) % 2 == 0:
+            pq.write_table(
+                t,
+                buf,
+                compression="zstd",
+                version="1.0",
+                use_dictionary=["word"],
+                row_group_size=8,
             )
+        else:
+            pq.write_table(
+                t,
+                buf,
+                compression="snappy",
+                version="2.6",
+                data_page_version="2.0",
+                use_dictionary=False,
+                row_group_size=8,
+                column_encoding={
+                    "idx": "DELTA_BINARY_PACKED",
+                    "word": "DELTA_BYTE_ARRAY",
+                    "score": "DELTA_BINARY_PACKED",
+                },
+            )
+        raw = buf.getvalue()
+        # parse the thrift footer ONCE per file; all three
+        # column reads share it (r14 opt, guide §1.2 — the
+        # orcfile tail= discipline: the footer walk was ~60%
+        # of this kernel's CPU and ran 3x per document)
+        ftr = parse_parquet_footer(raw)
+        idxs = read_parquet_column(raw, "idx", footer=ftr)
+        words = read_parquet_column(raw, "word", footer=ftr)
+        scores = read_parquet_column(raw, "score", footer=ftr)
+        yield from zip(idxs, words, scores)
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema="doc_id long, idx long, word string, score long",
+            "doc_id long, idx long, word string, score long",
         )
         .sortWithinPartitions("doc_id", "idx")
     )
@@ -6745,79 +6092,58 @@ def q_bits_parquet_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     presentation sort; the row group stays the split unit
     (read_parquet_list_column's row_groups selector is the
     per-split entry point at real scale)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from core_spark.functions.parquetfile import read_parquet_list_column
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-        import io
-
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = hashlib.md5(text.encode("utf-8")).hexdigest()
-                nr = 3 + int(d[0], 16) % 3
-                d1 = int(d[1], 16)
-                base = int(d[4:6], 16)
-                data = []
-                for i in range(nr):
-                    shape = (i + d1) % 4
-                    k = base + 5 * i
-                    data.append(
-                        [None, [], [k, None], [k, k + 7, 2 * k]][shape]
-                    )
-                buf = io.BytesIO()
-                pq.write_table(
-                    pa.table(
-                        {"xs": pa.array(data, type=pa.list_(pa.int64()))}
-                    ),
-                    buf,
-                    compression=("NONE", "ZSTD", "SNAPPY")[
-                        int(d[2], 16) % 3
-                    ],
-                    data_page_version="2.0"
-                    if int(d[3], 16) % 2
-                    else "1.0",
-                    row_group_size=2,
-                )
-                got = read_parquet_list_column(buf.getvalue(), "xs")
-                assert len(got) == nr
-                for i, v in enumerate(got):
-                    rows.append(
-                        (
-                            int(doc_id),
-                            i,
-                            v is None,
-                            None if v is None else len(v),
-                            None
-                            if v is None
-                            else sum(x for x in v if x is not None),
-                            None
-                            if v is None
-                            else sum(1 for x in v if x is None),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "row_idx", "is_null", "n_elems",
-                    "sum_elems", "n_null_elems",
-                ],
+    def walk(doc_id, text):
+        d = hashlib.md5(text.encode("utf-8")).hexdigest()
+        nr = 3 + int(d[0], 16) % 3
+        d1 = int(d[1], 16)
+        base = int(d[4:6], 16)
+        data = []
+        for i in range(nr):
+            shape = (i + d1) % 4
+            k = base + 5 * i
+            data.append([None, [], [k, None], [k, k + 7, 2 * k]][shape])
+        buf = io.BytesIO()
+        pq.write_table(
+            pa.table(
+                {"xs": pa.array(data, type=pa.list_(pa.int64()))}
+            ),
+            buf,
+            compression=("NONE", "ZSTD", "SNAPPY")[
+                int(d[2], 16) % 3
+            ],
+            data_page_version="2.0"
+            if int(d[3], 16) % 2
+            else "1.0",
+            row_group_size=2,
+        )
+        got = read_parquet_list_column(buf.getvalue(), "xs")
+        assert len(got) == nr
+        for i, v in enumerate(got):
+            yield (
+                i,
+                v is None,
+                None if v is None else len(v),
+                None
+                if v is None
+                else sum(x for x in v if x is not None),
+                None
+                if v is None
+                else sum(1 for x in v if x is None),
             )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, row_idx long, is_null boolean,"
-                " n_elems long, sum_elems long, n_null_elems long"
-            ),
+            "doc_id long, row_idx long, is_null boolean,"
+            " n_elems long, sum_elems long, n_null_elems long",
         )
         .sortWithinPartitions("doc_id", "row_idx")
     )
@@ -6871,75 +6197,54 @@ def q_bits_orc_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     presentation sort; the stripe is ORC's split unit and the
     per-stripe decode is self-aligned, exactly as the native reader
     parallelizes."""
+    import pyarrow as pa
+    from pyarrow import orc as pa_orc
+
     from core_spark.functions.orcfile import read_orc_list_column
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-        import io
-
-        import pandas as pd
-        import pyarrow as pa
-        from pyarrow import orc as pa_orc
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = hashlib.md5(text.encode("utf-8")).hexdigest()
-                nr = 3 + int(d[0], 16) % 3
-                d1 = int(d[1], 16)
-                base = int(d[4:6], 16)
-                data = []
-                for i in range(nr):
-                    shape = (i + d1) % 4
-                    k = base + 5 * i
-                    data.append(
-                        [None, [], [k, None], [k, k + 7, 2 * k]][shape]
-                    )
-                buf = io.BytesIO()
-                pa_orc.write_table(
-                    pa.table(
-                        {"xs": pa.array(data, type=pa.list_(pa.int64()))}
-                    ),
-                    buf,
-                    compression=("UNCOMPRESSED", "ZLIB", "ZSTD")[
-                        int(d[2], 16) % 3
-                    ],
-                )
-                got = read_orc_list_column(buf.getvalue(), "xs")
-                assert len(got) == nr
-                for i, v in enumerate(got):
-                    rows.append(
-                        (
-                            int(doc_id),
-                            i,
-                            v is None,
-                            None if v is None else len(v),
-                            None
-                            if v is None
-                            else sum(x for x in v if x is not None),
-                            None
-                            if v is None
-                            else sum(1 for x in v if x is None),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "row_idx", "is_null", "n_elems",
-                    "sum_elems", "n_null_elems",
-                ],
+    def walk(doc_id, text):
+        d = hashlib.md5(text.encode("utf-8")).hexdigest()
+        nr = 3 + int(d[0], 16) % 3
+        d1 = int(d[1], 16)
+        base = int(d[4:6], 16)
+        data = []
+        for i in range(nr):
+            shape = (i + d1) % 4
+            k = base + 5 * i
+            data.append([None, [], [k, None], [k, k + 7, 2 * k]][shape])
+        buf = io.BytesIO()
+        pa_orc.write_table(
+            pa.table(
+                {"xs": pa.array(data, type=pa.list_(pa.int64()))}
+            ),
+            buf,
+            compression=("UNCOMPRESSED", "ZLIB", "ZSTD")[
+                int(d[2], 16) % 3
+            ],
+        )
+        got = read_orc_list_column(buf.getvalue(), "xs")
+        assert len(got) == nr
+        for i, v in enumerate(got):
+            yield (
+                i,
+                v is None,
+                None if v is None else len(v),
+                None
+                if v is None
+                else sum(x for x in v if x is not None),
+                None
+                if v is None
+                else sum(1 for x in v if x is None),
             )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, row_idx long, is_null boolean,"
-                " n_elems long, sum_elems long, n_null_elems long"
-            ),
+            "doc_id long, row_idx long, is_null boolean,"
+            " n_elems long, sum_elems long, n_null_elems long",
         )
         .sortWithinPartitions("doc_id", "row_idx")
     )
@@ -7001,6 +6306,10 @@ def q_bits_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: map-side Arrow kernel, zero shuffles before the
     presentation sort (the q_bits_* discipline; pure-Python decode
     scoped to the verification/recovery tier, bulk reads native)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyarrow import orc as pa_orc
+
     from core_spark.functions.orcfile import read_orc_list_column
     from core_spark.functions.parquetfile import (
         parse_parquet_footer,
@@ -7009,123 +6318,90 @@ def q_bits_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-        import io
+    typ = pa.list_(
+        pa.struct([("x", pa.int64()), ("tags", pa.list_(pa.int64()))])
+    )
 
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyarrow import orc as pa_orc
-
-        typ = pa.list_(
-            pa.struct([("x", pa.int64()), ("tags", pa.list_(pa.int64()))])
-        )
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = hashlib.md5(text.encode("utf-8")).hexdigest()
-                nr = 3 + int(d[0], 16) % 3
-                d1 = int(d[1], 16)
-                base = int(d[4:6], 16)
-                data = []
-                for i in range(nr):
-                    shape = (i + d1) % 5
-                    k = base + 5 * i
-                    data.append(
-                        [
-                            None,
-                            [],
-                            [None],
-                            [
-                                {"x": k, "tags": None},
-                                {"x": None, "tags": []},
-                            ],
-                            [{"x": k, "tags": [k, None, 2 * k]}],
-                        ][shape]
-                    )
-                arr = pa.table({"ev": pa.array(data, type=typ)})
-                pbuf = io.BytesIO()
-                pq.write_table(
-                    arr,
-                    pbuf,
-                    compression=("NONE", "ZSTD")[int(d[2], 16) % 2],
-                    data_page_version="2.0"
-                    if int(d[3], 16) % 2
-                    else "1.0",
-                    row_group_size=2,
-                )
-                obuf = io.BytesIO()
-                pa_orc.write_table(
-                    arr,
-                    obuf,
-                    compression=("UNCOMPRESSED", "ZSTD")[
-                        int(d[6], 16) % 2
+    def walk(doc_id, text):
+        d = hashlib.md5(text.encode("utf-8")).hexdigest()
+        nr = 3 + int(d[0], 16) % 3
+        d1 = int(d[1], 16)
+        base = int(d[4:6], 16)
+        data = []
+        for i in range(nr):
+            shape = (i + d1) % 5
+            k = base + 5 * i
+            data.append(
+                [
+                    None,
+                    [],
+                    [None],
+                    [
+                        {"x": k, "tags": None},
+                        {"x": None, "tags": []},
                     ],
-                )
-                # one footer parse for both nested reads (guide §1.2)
-                praw = pbuf.getvalue()
-                ftr = parse_parquet_footer(praw)
-                xs = read_parquet_list_column(praw, "ev.x", footer=ftr)
-                ts = read_parquet_list_column(praw, "ev.tags", footer=ftr)
-                evs = read_orc_list_column(obuf.getvalue(), "ev")
-                assert len(xs) == len(ts) == len(evs) == nr
-                for i, (x_r, t_r, ev) in enumerate(zip(xs, ts, evs)):
-                    if ev is None:
-                        assert x_r is None and t_r is None
-                        rows.append(
-                            (int(doc_id), i, True, None, None, None,
-                             None, None)
-                        )
-                        continue
-                    # the two walkers must agree field-for-field
-                    assert x_r == [
-                        None if s is None else s["x"] for s in ev
-                    ]
-                    assert t_r == [
-                        None if s is None else s["tags"] for s in ev
-                    ]
-                    n_null = sum(
-                        1
-                        for xv, tv in zip(x_r, t_r)
-                        if xv is None and tv is None
-                    )
-                    tags_flat = [
-                        e
-                        for tv in t_r
-                        if tv is not None
-                        for e in tv
-                        if e is not None
-                    ]
-                    rows.append(
-                        (
-                            int(doc_id),
-                            i,
-                            False,
-                            len(ev),
-                            n_null,
-                            sum(x for x in x_r if x is not None),
-                            len(tags_flat),
-                            sum(tags_flat),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "row_idx", "is_null", "n_structs",
-                    "n_null_structs", "sum_x", "n_tags", "sum_tags",
-                ],
+                    [{"x": k, "tags": [k, None, 2 * k]}],
+                ][shape]
+            )
+        arr = pa.table({"ev": pa.array(data, type=typ)})
+        pbuf = io.BytesIO()
+        pq.write_table(
+            arr,
+            pbuf,
+            compression=("NONE", "ZSTD")[int(d[2], 16) % 2],
+            data_page_version="2.0"
+            if int(d[3], 16) % 2
+            else "1.0",
+            row_group_size=2,
+        )
+        obuf = io.BytesIO()
+        pa_orc.write_table(
+            arr,
+            obuf,
+            compression=("UNCOMPRESSED", "ZSTD")[
+                int(d[6], 16) % 2
+            ],
+        )
+        # one footer parse for both nested reads (guide §1.2)
+        praw = pbuf.getvalue()
+        ftr = parse_parquet_footer(praw)
+        xs = read_parquet_list_column(praw, "ev.x", footer=ftr)
+        ts = read_parquet_list_column(praw, "ev.tags", footer=ftr)
+        evs = read_orc_list_column(obuf.getvalue(), "ev")
+        assert len(xs) == len(ts) == len(evs) == nr
+        for i, (x_r, t_r, ev) in enumerate(zip(xs, ts, evs)):
+            if ev is None:
+                assert x_r is None and t_r is None
+                yield i, True, None, None, None, None, None
+                continue
+            # the two walkers must agree field-for-field
+            assert x_r == [None if s is None else s["x"] for s in ev]
+            assert t_r == [None if s is None else s["tags"] for s in ev]
+            n_null = sum(
+                1
+                for xv, tv in zip(x_r, t_r)
+                if xv is None and tv is None
+            )
+            tags_flat = [
+                e
+                for tv in t_r
+                if tv is not None
+                for e in tv
+                if e is not None
+            ]
+            yield (
+                i, False, len(ev), n_null,
+                sum(x for x in x_r if x is not None), len(tags_flat),
+                sum(tags_flat),
             )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, row_idx long, is_null boolean,"
-                " n_structs long, n_null_structs long, sum_x long,"
-                " n_tags long, sum_tags long"
-            ),
+            "doc_id long, row_idx long, is_null boolean,"
+            " n_structs long, n_null_structs long, sum_x long,"
+            " n_tags long, sum_tags long",
         )
         .sortWithinPartitions("doc_id", "row_idx")
     )
@@ -7174,78 +6450,56 @@ def q_bits_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: map-side Arrow kernel, zero shuffles before the
     presentation sort (the q_bits_* discipline)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyarrow import orc as pa_orc
+
     from core_spark.functions.orcfile import read_orc_column
     from core_spark.functions.parquetfile import read_parquet_column
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-        import io
-
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyarrow import orc as pa_orc
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                d = hashlib.md5(text.encode("utf-8")).hexdigest()
-                nr = 3 + int(d[0], 16) % 3
-                d1 = int(d[1], 16)
-                vals = []
-                for i in range(nr):
-                    if (i + d1) % 4 == 0:
-                        vals.append(None)
-                        continue
-                    di = hashlib.md5(
-                        f"{text}-{i}".encode("utf-8")
-                    ).hexdigest()
-                    sec = int(di[0:8], 16) % 4_000_000_000 - 2_000_000_000
-                    us = int(di[8:13], 16) % 1_000_000
-                    vals.append(sec * 1_000_000 + us)
-                arr = pa.array(vals, type=pa.timestamp("us"))
-                obuf = io.BytesIO()
-                pa_orc.write_table(
-                    pa.table({"ts": arr}),
-                    obuf,
-                    compression=("UNCOMPRESSED", "ZSTD")[int(d[2], 16) % 2],
-                )
-                pbuf = io.BytesIO()
-                pq.write_table(
-                    pa.table({"ts": arr}),
-                    pbuf,
-                    use_deprecated_int96_timestamps=True,
-                    compression=("NONE", "ZSTD")[int(d[3], 16) % 2],
-                )
-                ons = read_orc_column(obuf.getvalue(), "ts")
-                pns = read_parquet_column(pbuf.getvalue(), "ts")
-                assert ons == pns and len(ons) == nr  # decoder parity
-                for i, n in enumerate(ons):
-                    want = vals[i]
-                    assert n is None if want is None else n == want * 1000
-                    rows.append(
-                        (
-                            int(doc_id),
-                            i,
-                            n is None,
-                            None if n is None else n // 1000,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "row_idx", "is_null", "epoch_us"],
-            )
+    def walk(doc_id, text):
+        d = hashlib.md5(text.encode("utf-8")).hexdigest()
+        nr = 3 + int(d[0], 16) % 3
+        d1 = int(d[1], 16)
+        vals = []
+        for i in range(nr):
+            if (i + d1) % 4 == 0:
+                vals.append(None)
+                continue
+            di = hashlib.md5(f"{text}-{i}".encode("utf-8")).hexdigest()
+            sec = int(di[0:8], 16) % 4_000_000_000 - 2_000_000_000
+            us = int(di[8:13], 16) % 1_000_000
+            vals.append(sec * 1_000_000 + us)
+        arr = pa.array(vals, type=pa.timestamp("us"))
+        obuf = io.BytesIO()
+        pa_orc.write_table(
+            pa.table({"ts": arr}),
+            obuf,
+            compression=("UNCOMPRESSED", "ZSTD")[int(d[2], 16) % 2],
+        )
+        pbuf = io.BytesIO()
+        pq.write_table(
+            pa.table({"ts": arr}),
+            pbuf,
+            use_deprecated_int96_timestamps=True,
+            compression=("NONE", "ZSTD")[int(d[3], 16) % 2],
+        )
+        ons = read_orc_column(obuf.getvalue(), "ts")
+        pns = read_parquet_column(pbuf.getvalue(), "ts")
+        assert ons == pns and len(ons) == nr  # decoder parity
+        for i, n in enumerate(ons):
+            want = vals[i]
+            assert n is None if want is None else n == want * 1000
+            yield i, n is None, None if n is None else n // 1000
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, row_idx long, is_null boolean,"
-                " epoch_us long"
-            ),
+            "doc_id long, row_idx long, is_null boolean,"
+            " epoch_us long",
         )
         .sortWithinPartitions("doc_id", "row_idx")
     )
@@ -7559,36 +6813,20 @@ def q_audit_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     window in r10 per the r5/r7/r9 protocol."""
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def kernel(batches):
-        import unicodedata
+    vowels = "aeiou"
 
-        import pandas as pd
-
-        vowels = "aeiou"
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                v = vowels[int(doc_id) % 5]
-                wire = text.replace(v, v + "́")
-                norm = unicodedata.normalize("NFC", wire)
-                rows.append(
-                    (int(doc_id), norm, len(wire), len(norm),
-                     len(wire) - len(norm))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "norm_text", "n_wire", "n_norm",
-                         "n_composed"],
-            )
+    def kernel(doc_id, text):
+        v = vowels[int(doc_id) % 5]
+        wire = text.replace(v, v + "́")
+        norm = unicodedata.normalize("NFC", wire)
+        yield norm, len(wire), len(norm), len(wire) - len(norm)
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             kernel,
-            schema=(
-                "doc_id long, norm_text string, n_wire long,"
-                " n_norm long, n_composed long"
-            ),
+            "doc_id long, norm_text string, n_wire long,"
+            " n_norm long, n_composed long",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -7639,65 +6877,50 @@ def q_bits_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Late-r9 PYTEST_ONLY naming (after the window cutoff) — rotates
     into the driver window in r10 per the r5/r7/r9 protocol."""
-    from core_spark.functions.orcfile import read_orc_column
+    import pyarrow as pa
+    import pyarrow.orc as orc
+
+    from core_spark.functions.orcfile import parse_orc_tail, read_orc_column
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import io
+    schema = pa.schema(
+        [
+            pa.field("idx", pa.int64(), nullable=False),
+            pa.field("word", pa.string(), nullable=False),
+            pa.field("score", pa.int64(), nullable=True),
+        ]
+    )
 
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.orc as orc
-
-        schema = pa.schema(
-            [
-                pa.field("idx", pa.int64(), nullable=False),
-                pa.field("word", pa.string(), nullable=False),
-                pa.field("score", pa.int64(), nullable=True),
-            ]
+    def walk(doc_id, text):
+        ws = text.split(" ")[:32]
+        t = pa.table(
+            {
+                "idx": list(range(len(ws))),
+                "word": ws,
+                "score": [
+                    None if k % 5 == 0 else k * 7 + len(w)
+                    for k, w in enumerate(ws)
+                ],
+            },
+            schema=schema,
         )
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                ws = text.split(" ")[:32]
-                t = pa.table(
-                    {
-                        "idx": list(range(len(ws))),
-                        "word": ws,
-                        "score": [
-                            None if k % 5 == 0 else k * 7 + len(w)
-                            for k, w in enumerate(ws)
-                        ],
-                    },
-                    schema=schema,
-                )
-                buf = io.BytesIO()
-                orc.write_table(
-                    t, buf, compression="zstd", stripe_size=4096
-                )
-                raw = buf.getvalue()
-                # one tail parse for all three column reads (the
-                # q_bits_orc_stats tail= discipline, guide §1.2)
-                from core_spark.functions.orcfile import parse_orc_tail
-
-                t_orc = parse_orc_tail(raw)
-                idxs = read_orc_column(raw, "idx", tail=t_orc)
-                words = read_orc_column(raw, "word", tail=t_orc)
-                scores = read_orc_column(raw, "score", tail=t_orc)
-                rows.extend(
-                    (int(doc_id), i, w, s)
-                    for i, w, s in zip(idxs, words, scores)
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "idx", "word", "score"]
-            )
+        buf = io.BytesIO()
+        orc.write_table(t, buf, compression="zstd", stripe_size=4096)
+        raw = buf.getvalue()
+        # one tail parse for all three column reads (the
+        # q_bits_orc_stats tail= discipline, guide §1.2)
+        t_orc = parse_orc_tail(raw)
+        idxs = read_orc_column(raw, "idx", tail=t_orc)
+        words = read_orc_column(raw, "word", tail=t_orc)
+        scores = read_orc_column(raw, "score", tail=t_orc)
+        yield from zip(idxs, words, scores)
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema="doc_id long, idx long, word string, score long",
+            "doc_id long, idx long, word string, score long",
         )
         .sortWithinPartitions("doc_id", "idx")
     )
@@ -7765,127 +6988,100 @@ def q_bits_orc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     flush heuristic (600 rows / stripe_size=1024 / batch_size=64 →
     2 stripes today); a pyarrow behavior change fails loudly in the
     kernel, never silently."""
+    import pyarrow as pa
+    import pyarrow.orc as orc
+
     from core_spark.functions.orcfile import (
         OrcError,
         orc_verify_rowindex_stats,
         orc_verify_stripe_stats,
+        parse_orc_metadata,
+        parse_orc_tail,
+        read_orc_column,
     )
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-        import io
+    schema = pa.schema(
+        [
+            pa.field("score", pa.int64(), nullable=True),
+            pa.field("word", pa.string(), nullable=False),
+        ]
+    )
 
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.orc as orc
-
-        schema = pa.schema(
-            [
-                pa.field("score", pa.int64(), nullable=True),
-                pa.field("word", pa.string(), nullable=False),
-            ]
-        )
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                hs = [
-                    hashlib.md5(f"{text}:{k}".encode("utf-8")).hexdigest()
-                    for k in range(600)
-                ]
-                t = pa.table(
-                    {
-                        "score": [
-                            None if k % 5 == 0 else int(h[:12], 16)
-                            for k, h in enumerate(hs)
-                        ],
-                        "word": [h[:8] for h in hs],
-                    },
-                    schema=schema,
-                )
-                buf = io.BytesIO()
-                orc.write_table(
-                    t,
-                    buf,
-                    compression="uncompressed",
-                    stripe_size=1024,
-                    batch_size=64,
-                    row_index_stride=128,
-                )
-                raw = buf.getvalue()
-                # decode each column ONCE; both verify rungs reuse
-                # the same decoded values (the pure-Python decode is
-                # the dominant per-doc cost) — and parse the tail +
-                # stripe-stats protobufs ONCE per file (r14 opt,
-                # guide §1.2 / the pdf.py single-walk discipline:
-                # the five verify calls each re-parsed the footer)
-                from core_spark.functions.orcfile import (
-                    parse_orc_metadata,
-                    parse_orc_tail,
-                    read_orc_column,
-                )
-
-                t_orc = parse_orc_tail(raw)
-                m_orc = parse_orc_metadata(raw)
-                v_score = read_orc_column(raw, "score", tail=t_orc)
-                v_word = read_orc_column(raw, "word", tail=t_orc)
-                sc = orc_verify_stripe_stats(
-                    raw, "score", v_score, tail=t_orc, meta=m_orc
-                )
-                wd = orc_verify_stripe_stats(
-                    raw, "word", v_word, tail=t_orc, meta=m_orc
-                )
-                if len(sc) < 2:
-                    raise OrcError(
-                        "fixture produced a single stripe — the "
-                        "multi-stripe claim no longer holds"
-                    )
-                # the third rung: every 128-row RowIndexEntry's
-                # recorded stats recomputed and compared (late r13)
-                ri = orc_verify_rowindex_stats(
-                    raw, "score", v_score, tail=t_orc
-                )
-                if len(ri) < 4:
-                    raise OrcError(
-                        "fixture produced too few row groups — the "
-                        "row-index claim no longer holds"
-                    )
-                n_rows = sum(r["n_rows"] for r in sc)
-                nn = sum(r["n_values"] for r in sc)
-                rows.append(
-                    (
-                        int(doc_id),
-                        n_rows,
-                        nn,
-                        any(r["has_null"] for r in sc),
-                        min(r["min"] for r in sc if r["min"] is not None),
-                        max(r["max"] for r in sc if r["max"] is not None),
-                        sum(r["sum"] for r in sc if r["sum"] is not None),
-                        min(r["min"] for r in wd),
-                        max(r["max"] for r in wd),
-                        sum(r["sum"] for r in wd),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "n_rows", "n_values", "has_null",
-                    "min_score", "max_score", "sum_score",
-                    "min_word", "max_word", "word_bytes",
+    def walk(doc_id, text):
+        hs = [
+            hashlib.md5(f"{text}:{k}".encode("utf-8")).hexdigest()
+            for k in range(600)
+        ]
+        t = pa.table(
+            {
+                "score": [
+                    None if k % 5 == 0 else int(h[:12], 16)
+                    for k, h in enumerate(hs)
                 ],
+                "word": [h[:8] for h in hs],
+            },
+            schema=schema,
+        )
+        buf = io.BytesIO()
+        orc.write_table(
+            t,
+            buf,
+            compression="uncompressed",
+            stripe_size=1024,
+            batch_size=64,
+            row_index_stride=128,
+        )
+        raw = buf.getvalue()
+        # decode each column ONCE; both verify rungs reuse
+        # the same decoded values (the pure-Python decode is
+        # the dominant per-doc cost) — and parse the tail +
+        # stripe-stats protobufs ONCE per file (r14 opt,
+        # guide §1.2 / the pdf.py single-walk discipline:
+        # the five verify calls each re-parsed the footer)
+        t_orc = parse_orc_tail(raw)
+        m_orc = parse_orc_metadata(raw)
+        v_score = read_orc_column(raw, "score", tail=t_orc)
+        v_word = read_orc_column(raw, "word", tail=t_orc)
+        sc = orc_verify_stripe_stats(
+            raw, "score", v_score, tail=t_orc, meta=m_orc
+        )
+        wd = orc_verify_stripe_stats(
+            raw, "word", v_word, tail=t_orc, meta=m_orc
+        )
+        if len(sc) < 2:
+            raise OrcError(
+                "fixture produced a single stripe — the "
+                "multi-stripe claim no longer holds"
             )
+        # the third rung: every 128-row RowIndexEntry's
+        # recorded stats recomputed and compared (late r13)
+        ri = orc_verify_rowindex_stats(raw, "score", v_score, tail=t_orc)
+        if len(ri) < 4:
+            raise OrcError(
+                "fixture produced too few row groups — the "
+                "row-index claim no longer holds"
+            )
+        n_rows = sum(r["n_rows"] for r in sc)
+        nn = sum(r["n_values"] for r in sc)
+        yield (
+            n_rows, nn, any(r["has_null"] for r in sc),
+            min(r["min"] for r in sc if r["min"] is not None),
+            max(r["max"] for r in sc if r["max"] is not None),
+            sum(r["sum"] for r in sc if r["sum"] is not None),
+            min(r["min"] for r in wd), max(r["max"] for r in wd),
+            sum(r["sum"] for r in wd),
+        )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, n_rows long, n_values long,"
-                " has_null boolean, min_score long, max_score long,"
-                " sum_score long, min_word string, max_word string,"
-                " word_bytes long"
-            ),
+            "doc_id long, n_rows long, n_values long,"
+            " has_null boolean, min_score long, max_score long,"
+            " sum_score long, min_word string, max_word string,"
+            " word_bytes long",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -7944,65 +7140,43 @@ def q_blocks_xz(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-        import lzma
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                content = text.encode("utf-8")
-                digest = hashlib.md5(content).hexdigest()
-                k = 2 + int(digest[1], 16) % 3
-                base, rem = divmod(len(content), k)
-                blob = bytearray()
-                pos = 0
-                for i in range(k):
-                    ln = base + (1 if i < rem else 0)
-                    # preset=0: the fixture only needs VALID xz
-                    # streams for the tail walker; the encoder's
-                    # effort level changes neither the container
-                    # layout the walker verifies nor the decoded
-                    # chunk (r13 opt: preset 6 was ~30x the kernel
-                    # CPU for bytes the query throws away).
-                    blob += lzma.compress(content[pos : pos + ln], preset=0)
-                    pos += ln
-                blob = bytes(blob)
-                target = len(content) // 3
-                d_off = 0
-                for s in xz_streams(blob):
-                    d_size = sum(b["d_size"] for b in s["blocks"])
-                    if d_off <= target < d_off + d_size:
-                        span = blob[s["off"] : s["off"] + s["length"]]
-                        chunk = lzma.decompress(span)
-                        if len(chunk) != d_size:
-                            raise ValueError("index/stream disagreement")
-                        rows.append(
-                            (
-                                int(doc_id),
-                                s["stream_idx"],
-                                d_off,
-                                d_size,
-                                chunk.decode("utf-8"),
-                            )
-                        )
-                        break
-                    d_off += d_size
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "stream_idx", "d_off", "d_size", "chunk"],
-            )
+    def walk(doc_id, text):
+        content = text.encode("utf-8")
+        digest = hashlib.md5(content).hexdigest()
+        k = 2 + int(digest[1], 16) % 3
+        base, rem = divmod(len(content), k)
+        blob = bytearray()
+        pos = 0
+        for i in range(k):
+            ln = base + (1 if i < rem else 0)
+            # preset=0: the fixture only needs VALID xz
+            # streams for the tail walker; the encoder's
+            # effort level changes neither the container
+            # layout the walker verifies nor the decoded
+            # chunk (r13 opt: preset 6 was ~30x the kernel
+            # CPU for bytes the query throws away).
+            blob += lzma.compress(content[pos : pos + ln], preset=0)
+            pos += ln
+        blob = bytes(blob)
+        target = len(content) // 3
+        d_off = 0
+        for s in xz_streams(blob):
+            d_size = sum(b["d_size"] for b in s["blocks"])
+            if d_off <= target < d_off + d_size:
+                span = blob[s["off"] : s["off"] + s["length"]]
+                chunk = lzma.decompress(span)
+                if len(chunk) != d_size:
+                    raise ValueError("index/stream disagreement")
+                yield (s["stream_idx"], d_off, d_size, chunk.decode("utf-8"))
+                break
+            d_off += d_size
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, stream_idx long, d_off long, d_size long,"
-                " chunk string"
-            ),
+            "doc_id long, stream_idx long, d_off long, d_size long,"
+            " chunk string",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -8185,45 +7359,31 @@ def q_bitmap_jpegq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Late-r9 PYTEST_ONLY naming (after the window cutoff) — rotates
     into the driver window in r10 per the r5/r7/r9 protocol."""
+    import numpy as np
+
     from core_spark.multimodal.jpeg import jpeg_encode, jpeg_quant_tables
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def audit(batches):
-        import hashlib
+    base_img = (np.arange(256).reshape(16, 16) * 7 % 256).astype(
+        np.uint8
+    )
 
-        import numpy as np
-        import pandas as pd
-
-        base_img = (np.arange(256).reshape(16, 16) * 7 % 256).astype(
-            np.uint8
-        )
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                q = 30 + int(h[0:2], 16) % 60
-                img = (base_img + int(h[2:4], 16)) % 256
-                raw = jpeg_encode(img.astype(np.uint8), quality=q)
-                sum_t = sum(jpeg_quant_tables(raw)[0])
-                sm = (100000 * sum_t) // 3688
-                est = (
-                    (200000 - sm) // 2000
-                    if sm <= 100000
-                    else 5000000 // sm
-                )
-                rows.append((int(doc_id), q, sum_t, est))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "q_true", "sum_t", "est_q"]
-            )
+    def audit(doc_id, text):
+        h = hashlib.md5(text.encode("utf-8")).hexdigest()
+        q = 30 + int(h[0:2], 16) % 60
+        img = (base_img + int(h[2:4], 16)) % 256
+        raw = jpeg_encode(img.astype(np.uint8), quality=q)
+        sum_t = sum(jpeg_quant_tables(raw)[0])
+        sm = (100000 * sum_t) // 3688
+        est = ((200000 - sm) // 2000 if sm <= 100000 else 5000000 // sm)
+        yield q, sum_t, est
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             audit,
-            schema=(
-                "doc_id long, q_true long, sum_t long, est_q long"
-            ),
+            "doc_id long, q_true long, sum_t long, est_q long",
         )
         .sortWithinPartitions("doc_id")
     )
@@ -8294,6 +7454,9 @@ def q_bits_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Late-r9 PYTEST_ONLY naming (after the window cutoff) — rotates
     into the driver window in r10 per the r5/r7/r9 protocol."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from core_spark.functions.parquetfile import (
         parse_page_index,
         parse_parquet_footer,
@@ -8301,73 +7464,45 @@ def q_bits_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-        import io
-
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                n = 24 + int(h[0], 16) % 40
-                base = int(h[2:4], 16) - 128
-                vals = [base + 7 * r for r in range(n)]
-                buf = io.BytesIO()
-                pq.write_table(
-                    pa.table({"v": pa.array(vals, pa.int64())}),
-                    buf,
-                    write_page_index=True,
-                    use_dictionary=False,
-                    data_page_size=1,
-                    write_batch_size=8,
-                    row_group_size=20,
+    def walk(doc_id, text):
+        h = hashlib.md5(text.encode("utf-8")).hexdigest()
+        n = 24 + int(h[0], 16) % 40
+        base = int(h[2:4], 16) - 128
+        vals = [base + 7 * r for r in range(n)]
+        buf = io.BytesIO()
+        pq.write_table(
+            pa.table({"v": pa.array(vals, pa.int64())}),
+            buf,
+            write_page_index=True,
+            use_dictionary=False,
+            data_page_size=1,
+            write_batch_size=8,
+            row_group_size=20,
+        )
+        raw = buf.getvalue()
+        meta = parse_parquet_footer(raw)
+        ptype = meta["schema_types"]["v"]
+        for gi, rg in enumerate(meta["row_groups"]):
+            col = rg["columns"][0]
+            oi, ci = parse_page_index(raw, col, ptype)
+            assert oi is not None and ci is not None
+            assert len(oi) == len(ci)
+            offs = [pl["offset"] for pl in oi]
+            assert offs == sorted(offs)
+            assert all(0 < o < len(raw) for o in offs)
+            for j, (pl, st) in enumerate(zip(oi, ci)):
+                yield (
+                    gi, j, pl["first_row_index"], st["min"], st["max"],
+                    st["null_count"],
                 )
-                raw = buf.getvalue()
-                meta = parse_parquet_footer(raw)
-                ptype = meta["schema_types"]["v"]
-                for gi, rg in enumerate(meta["row_groups"]):
-                    col = rg["columns"][0]
-                    oi, ci = parse_page_index(raw, col, ptype)
-                    assert oi is not None and ci is not None
-                    assert len(oi) == len(ci)
-                    offs = [pl["offset"] for pl in oi]
-                    assert offs == sorted(offs)
-                    assert all(
-                        0 < o < len(raw) for o in offs
-                    )
-                    for j, (pl, st) in enumerate(zip(oi, ci)):
-                        rows.append(
-                            (
-                                int(doc_id),
-                                gi,
-                                j,
-                                pl["first_row_index"],
-                                st["min"],
-                                st["max"],
-                                st["null_count"],
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "rg_idx", "page_idx", "first_row",
-                    "vmin", "vmax", "null_count",
-                ],
-            )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, rg_idx long, page_idx long,"
-                " first_row long, vmin long, vmax long,"
-                " null_count long"
-            ),
+            "doc_id long, rg_idx long, page_idx long,"
+            " first_row long, vmin long, vmax long,"
+            " null_count long",
         )
         .sortWithinPartitions("doc_id", "rg_idx", "page_idx")
     )

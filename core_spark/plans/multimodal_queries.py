@@ -4,6 +4,8 @@ both engines can compute over the same bytes."""
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession
 
 from core_spark.io import load_table, spread, spread_ranged
@@ -19,6 +21,7 @@ from core_spark.multimodal import (
     plan_fragment_fetch,
     plan_video_fetch,
 )
+from core_spark.multimodal.columns import doc_kernel
 from core_spark.plans.registry import query
 
 
@@ -1257,42 +1260,19 @@ def q_cc_docx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                form = int(digest[3], 16) % 4
-                blob = build_docx_fixture(text, digest)
-                for b in docx_blocks(blob):
-                    rows.append(
-                        (
-                            int(doc_id),
-                            b["block_idx"],
-                            form,
-                            b["kind"],
-                            b["text"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "block_idx", "form", "kind", "block_text",
-                ],
-            )
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        form = int(digest[3], 16) % 4
+        blob = build_docx_fixture(text, digest)
+        for b in docx_blocks(blob):
+            yield b["block_idx"], form, b["kind"], b["text"]
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, block_idx long, form long,"
-                " kind string, block_text string"
-            ),
+            "doc_id long, block_idx long, form long,"
+            " kind string, block_text string",
         )
         .sortWithinPartitions("doc_id", "block_idx")
     )
@@ -1363,29 +1343,14 @@ def q_cc_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                _true_fmt, raw = build_mixed_payload(text, digest)
-                fmt = detect_format(raw)
-                rows.append(
-                    (int(doc_id), fmt, dispatch_extract(raw, fmt))
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "fmt", "n_units"]
-            )
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        _true_fmt, raw = build_mixed_payload(text, digest)
+        fmt = detect_format(raw)
+        yield fmt, dispatch_extract(raw, fmt)
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
-            walk, schema="doc_id long, fmt string, n_units long"
-        )
+        doc_kernel(docs, walk, "doc_id long, fmt string, n_units long")
         .sortWithinPartitions("doc_id")
     )
 
@@ -1445,43 +1410,18 @@ def q_cc_odt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                form = int(digest[12], 16) % 4
-                for b in odt_paragraphs(
-                    build_odt_fixture(text, digest)
-                ):
-                    rows.append(
-                        (
-                            int(doc_id),
-                            b["para_idx"],
-                            form,
-                            b["kind"],
-                            b["text"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "para_idx", "form", "kind", "para_text",
-                ],
-            )
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        form = int(digest[12], 16) % 4
+        for b in odt_paragraphs(build_odt_fixture(text, digest)):
+            yield b["para_idx"], form, b["kind"], b["text"]
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, para_idx long, form long,"
-                " kind string, para_text string"
-            ),
+            "doc_id long, para_idx long, form long,"
+            " kind string, para_text string",
         )
         .sortWithinPartitions("doc_id", "para_idx")
     )
@@ -1558,47 +1498,23 @@ def q_cc_xlsx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def walk(batches):
-        import hashlib
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                digest = hashlib.md5(text.encode("utf-8")).hexdigest()
-                form = int(digest[6], 16) % 4
-                blob = build_xlsx_fixture(text, digest)
-                for cell in xlsx_cells(blob):
-                    rows.append(
-                        (
-                            int(doc_id),
-                            cell["sheet_idx"],
-                            cell["sheet_name"],
-                            cell["row"],
-                            cell["col"],
-                            cell["kind"],
-                            cell["value"],
-                            form,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sheet_idx", "sheet_name", "row_idx",
-                    "col_idx", "kind", "cell_value", "form",
-                ],
+    def walk(doc_id, text):
+        digest = hashlib.md5(text.encode("utf-8")).hexdigest()
+        form = int(digest[6], 16) % 4
+        blob = build_xlsx_fixture(text, digest)
+        for cell in xlsx_cells(blob):
+            yield (
+                cell["sheet_idx"], cell["sheet_name"], cell["row"],
+                cell["col"], cell["kind"], cell["value"], form,
             )
 
     return (
-        docs.select("doc_id", "text")
-        .mapInPandas(
+        doc_kernel(
+            docs,
             walk,
-            schema=(
-                "doc_id long, sheet_idx long, sheet_name string,"
-                " row_idx long, col_idx long, kind string,"
-                " cell_value string, form long"
-            ),
+            "doc_id long, sheet_idx long, sheet_name string,"
+            " row_idx long, col_idx long, kind string,"
+            " cell_value string, form long",
         )
         .sortWithinPartitions("doc_id", "sheet_idx", "row_idx", "col_idx")
     )

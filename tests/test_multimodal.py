@@ -3553,3 +3553,50 @@ def test_kernel_chain_fusion_identical_and_single_stage(spark):
     a = sorted(map(tuple, fused.collect()))
     b = sorted(map(tuple, unfused.collect()))
     assert a == b
+
+
+def test_doc_kernel_contract(spark):
+    """doc_kernel(docs, per_doc, schema) is a hand-written mapInPandas
+    over (doc_id, text) with the batch loop factored out: (a) its rows
+    equal the hand-written loop's for the same per-document function,
+    (b) a per_doc that yields nothing gives zero rows with the declared
+    schema, and (c) the MapInPandas node is named after per_doc."""
+    import pandas as pd
+    from pyspark.sql.types import StructType
+
+    from core_spark.multimodal.columns import doc_kernel
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    schema = "doc_id long, word_idx long, word string"
+
+    def first_words(doc_id, text):
+        for i, w in enumerate(text.split(" ")[:3]):
+            yield i, w
+
+    def by_hand(batches):
+        for pdf in batches:
+            rows = []
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                for i, w in first_words(doc_id, text):
+                    rows.append((int(doc_id), i, w))
+            yield pd.DataFrame(rows, columns=["doc_id", "word_idx", "word"])
+
+    got = doc_kernel(docs, first_words, schema)
+    ref = docs.select("doc_id", "text").mapInPandas(by_hand, schema=schema)
+    rows = sorted(map(tuple, got.collect()))
+    assert rows and rows == sorted(map(tuple, ref.collect()))
+
+    def nothing(doc_id, text):
+        yield from ()
+
+    empty = doc_kernel(docs, nothing, schema)
+    assert empty.schema == StructType.fromDDL(schema)
+    assert empty.collect() == []
+
+    plan = got._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "simple"
+        )
+    )
+    assert plan.count("MapInPandas") == 1, plan
+    assert "MapInPandas first_words(doc_id#" in plan, plan

@@ -97,6 +97,27 @@ EXECUTING = {n for n in REGISTRY if "stream" in n or "serve" in n} | {
 
 SWEEP = sorted(n for n in REGISTRY if n not in EXECUTING)
 
+# Per-document kernels that keep their own `for pdf in batches` loop
+# over zip(pdf["doc_id"], ...) instead of columns.doc_kernel, keyed by
+# (plans module, top-level def). Every entry must state why.
+HAND_ROLLED = {
+    ("llmops", "q_dup_spans"): "numpy column kernel: builds int64 "
+                               "arrays per batch, not row tuples",
+    ("llmops", "q_chunk_cdc"): "numpy column kernel: builds int64 "
+                               "arrays per batch, not row tuples",
+    ("llmops", "_winnow_prints"): "numpy column kernel: builds int64 "
+                                  "arrays per batch, not row tuples",
+    ("multimodal_queries", "q_bitmap_exif"): "two-stage chain: its "
+        "second stage would have to move onto _kernel too, which fuses "
+        "both MapInPandas stages into one and changes the plan",
+    ("multimodal_queries", "_phash_hashes"): "two-stage chain already "
+        "fused by _kernel over spread(docs); doc_kernel's (doc_id, "
+        "text) projection would add a Project and change the plan",
+    ("multimodal_queries", "q_audio_vad"): "two-stage chain: its "
+        "second stage would have to move onto _kernel too, which fuses "
+        "both MapInPandas stages into one and changes the plan",
+}
+
 
 @pytest.mark.parametrize("name", SWEEP)
 def test_no_accidental_cartesian_or_nested_loop(spark, name):
@@ -174,3 +195,63 @@ def test_storage_backed_serves_page_never_bulk_collect():
     assert not bad, (
         f"the SQL store must keyset-paginate, never OFFSET: {bad}"
     )
+
+
+def test_per_document_kernels_use_doc_kernel():
+    """One way to write a per-document kernel: no plans module loops
+    over zip(pdf["doc_id"], ...) in a batch generator except the
+    HAND_ROLLED entries, every HAND_ROLLED entry still does, and no
+    per_doc handed to doc_kernel imports anything (imports belong in
+    the query function, once per plan, not once per document)."""
+    import ast
+    import pathlib
+
+    import core_spark.plans as plans
+
+    def is_doc_id_column(node):
+        return (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.slice, ast.Constant)
+            and node.slice.value == "doc_id"
+        )
+
+    found, importing = set(), []
+    for path in sorted(pathlib.Path(plans.__file__).parent.glob("*.py")):
+        mod, tree = path.stem, ast.parse(path.read_text())
+        for top in tree.body:
+            if not isinstance(top, ast.FunctionDef):
+                continue
+            for n in ast.walk(top):
+                if (
+                    isinstance(n, ast.For)
+                    and isinstance(n.iter, ast.Call)
+                    and isinstance(n.iter.func, ast.Name)
+                    and n.iter.func.id == "zip"
+                    and n.iter.args
+                    and is_doc_id_column(n.iter.args[0])
+                ):
+                    found.add((mod, top.name))
+            per_doc = {
+                c.args[1].id
+                for c in ast.walk(top)
+                if isinstance(c, ast.Call)
+                and isinstance(c.func, ast.Name)
+                and c.func.id == "doc_kernel"
+                and isinstance(c.args[1], ast.Name)
+            }
+            for f in ast.walk(top):
+                if isinstance(f, ast.FunctionDef) and f.name in per_doc:
+                    if any(
+                        isinstance(i, (ast.Import, ast.ImportFrom))
+                        for i in ast.walk(f)
+                    ):
+                        importing.append((mod, top.name, f.name))
+    new = sorted(found - HAND_ROLLED.keys())
+    stale = sorted(HAND_ROLLED.keys() - found)
+    assert not new, (
+        f"hand-rolled per-document loops {new}: write them as "
+        "per_doc(doc_id, text) generators through columns.doc_kernel, "
+        "or allowlist them in HAND_ROLLED with a reason"
+    )
+    assert not stale, f"{stale} no longer hand-roll a loop — drop them"
+    assert not importing, f"per_doc bodies import per document: {importing}"
