@@ -11,7 +11,9 @@ wire.
 Endpoints:
   PUT /jnl/<journal/name>            body: NDJSON rows → one atomic
                                      append (one fragment); response
-                                     {journal, begin, end, n_records}
+                                     {journal, begin, end, n_records};
+                                     a line that is not a JSON record
+                                     is a 400 naming its line number
   GET /jnl/<journal/name>?begin=&end= NDJSON rows of the offset range;
                                      X-Journal-Next-Offset carries the
                                      read-through offset (the
@@ -40,6 +42,7 @@ curl-class clients.
 from __future__ import annotations
 
 import json
+import math
 import os
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -48,6 +51,89 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import SparkSession
 
 from core_spark.sources.journal import Journal, RegisterMismatch, parse_where
+
+_INT64_MIN, _INT64_MAX = -(1 << 63), (1 << 63) - 1
+
+
+class _Pairs(list):
+    """A JSON object as its (key, value) pairs: tells objects from
+    arrays and keeps duplicate keys visible."""
+
+
+def _json_type(v) -> str | None:
+    """Spark's JSON inference type of one scalar value; None for null
+    (Spark infers `""` as null too); "" for values the rule leaves to
+    Spark."""
+    if v is None or v == "":
+        return None
+    if isinstance(v, bool):
+        return "boolean"
+    if isinstance(v, int):
+        return "long" if _INT64_MIN <= v <= _INT64_MAX else ""
+    if isinstance(v, float):
+        return "double" if math.isfinite(v) else ""
+    if isinstance(v, str):
+        return "string"
+    return ""  # nested object or array
+
+
+def _widen(a: str | None, b: str | None) -> str | None:
+    """Spark's JSON type merge on the scalar types: null widens to
+    anything, long with double is double, any other mix is string."""
+    if a is None or a == b:
+        return b
+    if b is None:
+        return a
+    return "double" if {a, b} == {"long", "double"} else "string"
+
+
+def flat_json_schema(lines: list[tuple[int, str]]):
+    """The StructType `spark.read.json` infers for NDJSON `lines`
+    ((line number, text) pairs), built on the driver. Raises
+    ValueError naming the first line that is not strict JSON, or that
+    is a JSON scalar rather than a record.
+
+    Returns None, leaving inference to Spark, for bodies outside the
+    rule: top-level arrays, nested values, integers outside int64
+    (Spark infers a decimal), non-finite floats (Spark's own number
+    rules), duplicate keys, keys that collide ignoring case, and the
+    empty key (Spark drops it).
+    Otherwise the rule is Spark's: every field nullable and sorted by
+    name in UTF-16 order, a column seen only as null or `""` is a
+    string."""
+    from pyspark.sql.types import StructType
+
+    rows = []
+    for no, ln in lines:
+        try:
+            row = json.loads(ln, object_pairs_hook=_Pairs)
+        except json.JSONDecodeError as e:
+            raise ValueError(
+                f"line {no}: malformed JSON: {e.msg} at column {e.colno}"
+            ) from None
+        if not isinstance(row, list):
+            raise ValueError(f"line {no}: a JSON scalar is not a record")
+        rows.append(row)
+    types: dict[str, str | None] = {}
+    for row in rows:
+        if not isinstance(row, _Pairs) or len({k for k, _ in row}) < len(row):
+            return None
+        for k, v in row:
+            t = _json_type(v)
+            if t == "":
+                return None
+            types[k] = _widen(types.get(k), t)
+    if "" in types or len({k.casefold() for k in types}) < len(types):
+        return None
+    names = sorted(types, key=lambda k: k.encode("utf-16-be"))
+    return StructType.fromJson({
+        "type": "struct",
+        "fields": [
+            {"name": k, "type": types[k] or "string", "nullable": True,
+             "metadata": {}}
+            for k in names
+        ],
+    })
 
 
 class JournalGateway:
@@ -271,11 +357,25 @@ class JournalGateway:
 
     # ------------------------------------------------------------- verbs
     def append_ndjson(self, name: str, raw: bytes):
-        lines = [ln for ln in raw.decode("utf-8").splitlines() if ln.strip()]
+        """Append an NDJSON body as one fragment. Every line is parsed
+        on the driver first: a line that is not strict JSON is a
+        ValueError naming its 1-based line number (a 400), never a
+        stored `_corrupt_record` row. A body of flat objects is read
+        under the schema `flat_json_schema` derives from that parse,
+        so the append launches only its write job."""
+        lines = [
+            (no, ln)
+            for no, ln in enumerate(raw.decode("utf-8").splitlines(), 1)
+            if ln.strip()
+        ]
         if not lines:
             raise ValueError("empty append body")
-        df = self.spark.read.json(
-            self.spark.sparkContext.parallelize(lines, 1)
+        schema = flat_json_schema(lines)
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        df = reader.json(
+            self.spark.sparkContext.parallelize([ln for _, ln in lines], 1)
         )
         return Journal(self.root, name).append(df)
 

@@ -138,7 +138,7 @@ def update(vecs: DataFrame, assigned: DataFrame) -> DataFrame:
     One (cluster, pos)-keyed shuffle of width k×dims; clusters that
     lost every member simply vanish (both engines' GROUP BY agree).
     When `assigned` already carries `qv` (the fused map-side
-    assignment in train_centroids), the vid re-join of the corpus is
+    assignment of the training loop), the vid re-join of the corpus is
     skipped entirely."""
     if "qv" in assigned.columns:
         src = assigned.select("cluster", "qv")
@@ -212,16 +212,6 @@ def train_centroids_row(vecs: DataFrame, k: int, rounds: int) -> DataFrame:
             F.collect_list(F.struct("cluster", "pos", "m")).alias("alls")
         ).select(F.expr(_FOLD).alias("cents"))
     return row
-
-
-def train_centroids(vecs: DataFrame, k: int, rounds: int) -> DataFrame:
-    """Frame-form trained centroids (cidx, cv) — unfolds the row-form
-    loop for callers that persist or broadcast the k-row frame."""
-    return (
-        train_centroids_row(vecs, k, rounds)
-        .select(F.explode("cents").alias("c"))
-        .select(F.col("c.cidx").alias("cidx"), F.col("c.cv").alias("cv"))
-    )
 
 
 def assign_topn(vecs: DataFrame, cents: DataFrame, n: int) -> DataFrame:

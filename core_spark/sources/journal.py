@@ -94,21 +94,25 @@ def _footer_info(path: str) -> tuple[int, dict[str, list]]:
                     if "." in name or name in dropped:
                         continue  # nested leaves: out of scope
                     st = col.statistics
+                    lo = hi = None
+                    if st is not None and st.has_min_max:
+                        try:
+                            lo, hi = st.min, st.max
+                        except NotImplementedError:
+                            pass  # pyarrow has no min/max for int decimals
                     if (
-                        st is None
-                        or not st.has_min_max
-                        or not isinstance(st.min, (int, float, bool))
-                        or isinstance(st.min, float)
-                        and (st.min != st.min or st.max != st.max)
+                        not isinstance(lo, (int, float, bool))
+                        or isinstance(lo, float)
+                        and (lo != lo or hi != hi)
                     ):
                         dropped.add(name)
                         merged.pop(name, None)
                         continue
                     if name in merged:
-                        merged[name][0] = min(merged[name][0], st.min)
-                        merged[name][1] = max(merged[name][1], st.max)
+                        merged[name][0] = min(merged[name][0], lo)
+                        merged[name][1] = max(merged[name][1], hi)
                     else:
-                        merged[name] = [st.min, st.max]
+                        merged[name] = [lo, hi]
                     if rg == 0:
                         seen_files[name] = seen_files.get(name, 0) + 1
     # a column absent from some file (postfix trees with varying
@@ -127,11 +131,15 @@ def _content_hash(path: str) -> str:
     computes the sum while spooling). Each data file is hashed, then
     the SORTED (partition-dir, file-sha) pairs are hashed together, so
     the name is independent of Spark's random part-file basenames:
-    the same rows written twice produce the same name. That makes a
-    retried upload idempotent (the CAS loser's file IS the winner's
-    file, not an orphan) and gives free integrity checking. Cost: one
-    sequential read of the just-written local batch — bounded by the
-    micro-batch, not the journal."""
+    within one JVM, the same rows written twice produce the same name.
+    That makes a retried upload idempotent (the CAS loser's file IS
+    the winner's file, not an orphan) and gives free integrity
+    checking. Across JVMs the name is not stable: parquet-mr writes
+    each column chunk's `encodings` list in hash-set order, so equal
+    rows written by another JVM can get another name (a retry from a
+    restarted writer leaves an orphan for vacuum, never a wrong read).
+    Cost: one sequential read of the just-written local batch —
+    bounded by the micro-batch, not the journal."""
     import hashlib
 
     if os.path.isfile(path):
@@ -158,6 +166,22 @@ def _content_hash(path: str) -> str:
                 ("" if rel == "." else rel) + ":" + h.hexdigest()
             )
     return hashlib.sha1("\n".join(sorted(entries)).encode()).hexdigest()[:16]
+
+
+def _columnar_reader(spark: SparkSession, f: "Fragment"):
+    """Spark's reader for parquet/orc fragment `f`, under the schema
+    the manifest recorded for it: the schema Spark's inference would
+    read back from the fragment's footer, so planning a read launches
+    no inference job."""
+    reader = spark.read.format(f.fmt)
+    sj = f.meta.get("schema_json")
+    if sj is None:
+        # inferred: a manifest from before fragments recorded their
+        # schema, or a path-postfix tree (see append)
+        return reader
+    from pyspark.sql.types import StructType
+
+    return reader.schema(StructType.fromJson(json.loads(sj)))
 
 
 def _dir_has_postfix(p: str) -> bool:
@@ -322,9 +346,13 @@ def _build_blooms(path: str, fmt: str, cols) -> dict:
     out = {}
     for c, is_int in picked:
         m = bytearray(_BLOOM_BITS // 8)
-        for v in pc.unique(tbl[c].drop_null().combine_chunks()).to_pylist():
-            for p in _bloom_positions(str(v) if is_int else v):
-                m[p // 8] |= 1 << (p % 8)
+        # fold chunk by chunk: setting a bit is idempotent, so the map
+        # equals one pass over the whole column without first copying
+        # it into one contiguous array
+        for chunk in tbl[c].chunks:
+            for v in pc.unique(chunk.drop_null()).to_pylist():
+                for p in _bloom_positions(str(v) if is_int else v):
+                    m[p // 8] |= 1 << (p % 8)
         out[c] = ("int:" if is_int else "") + bytes(m).hex()
     return out
 
@@ -388,12 +416,16 @@ class Fragment:
     # bloom_columns (string equality skipping). Default keeps
     # pre-bloom manifests parsing; a missing filter never prunes.
     blooms: dict = field(default_factory=dict)
-    # Reader-side metadata for byte-opaque codec fragments
-    # (jsonl.zst/.xz/.gz): {"schema_json": <StructType json>}.
-    # Gazette journals carry "only raw serializations" with framing
-    # and schema belonging to the reader (message/interfaces.go:
-    # 121-124) — here the manifest IS the reader's schema carrier.
-    # Default keeps pre-codec manifests parsing.
+    # Reader-side metadata: {"schema_json": <StructType json>}, the
+    # fragment's schema as written. Gazette journals carry "only raw
+    # serializations" with framing and schema belonging to the reader
+    # (message/interfaces.go:121-124) — here the manifest IS the
+    # reader's schema carrier. Byte-opaque codec fragments
+    # (jsonl.zst/.xz/.gz) cannot be read without it; flat parquet/orc
+    # fragments are read under it instead of a schema-inference job.
+    # Path-postfix trees carry none, and neither do fragments from
+    # older manifests; both are read under Spark's inference. Default
+    # keeps those manifests parsing.
     meta: dict = field(default_factory=dict)
 
 
@@ -699,6 +731,10 @@ class Journal:
                 writer = writer.partitionBy(*path_postfix)
             getattr(writer, fmt)(tmp)
             n, stats = _footer_info(tmp)
+            if not path_postfix:
+                # a path-postfix tree records none: partition discovery
+                # types its key columns from the paths, not as written
+                meta = {"schema_json": stamped.schema.json()}
 
             # Bloom index over spec-listed string columns (opt-in; one
             # column-pruned driver read of the just-written fragment, so
@@ -711,8 +747,11 @@ class Journal:
 
         # Content-addressed name, the reference's begin-end-sha1sum
         # (protocol.proto:383-411): identical retried content maps to
-        # the identical name, so a re-upload after a lost CAS race or
-        # a crash is a no-op reuse, never an orphan.
+        # the identical name, so a re-upload after a lost CAS race is
+        # a no-op reuse, never an orphan. That holds within one JVM
+        # only: a writer restarted after a crash may encode the same
+        # rows to other bytes (see _content_hash), and its retry
+        # leaves the first file as a vacuum-reclaimable orphan.
         frag_name = (
             f"frag-{begin:020d}-{begin + n:020d}-{_content_hash(tmp)}"
         )
@@ -800,7 +839,8 @@ class Journal:
 
     def _load_fragment(self, spark: SparkSession, f: Fragment) -> DataFrame:
         """One fragment -> DataFrame under ITS format: columnar
-        fragments through Spark's native reader, byte-stream codec
+        fragments through Spark's native reader (under their recorded
+        schema when the manifest has one), byte-stream codec
         fragments through the tail-planned chunk reader with the
         manifest-carried schema. Shared by read() and compact() so
         the two paths can never diverge on codec handling."""
@@ -814,7 +854,7 @@ class Journal:
             return read_codec_fragment(
                 spark, p, f.fmt, f.meta.get("schema_json")
             )
-        return getattr(spark.read, f.fmt)(p)
+        return _columnar_reader(spark, f).load(p)
 
     # --------------------------------------------------------------- read
     def _scan_audit(
@@ -939,9 +979,9 @@ class Journal:
         # Zone maps proving every covering fragment predicate-free is
         # a legitimately EMPTY result, not a coverage error (a reader
         # polling above a high-water mark must get zero rows, exactly
-        # as it would if the fragments lacked stats). Read one
-        # fragment's schema (footer only — limit 0 scans no data) so
-        # the empty frame matches a normal read's shape.
+        # as it would if the fragments lacked stats). Plan one
+        # fragment's read (limit 0 scans no data) so the empty frame
+        # matches a normal read's shape.
         pruned_empty = not frags
         if pruned_empty:
             frags = covering[:1]
@@ -980,7 +1020,9 @@ class Journal:
             if len(frags) == 1:
                 df = self._load_fragment(spark, frags[0])
             else:
-                df = getattr(spark.read, frags[0].fmt)(*paths)
+                # Spark infers a multi-path schema from the first
+                # file in path order: frags[0]'s, whose begin is least
+                df = _columnar_reader(spark, frags[0]).load(paths)
         if pruned_empty:
             df = df.limit(0)
         if begin is not None:
@@ -1149,6 +1191,7 @@ class Journal:
                     if spec is not None and spec.bloom_columns
                     else {}
                 ),
+                meta={"schema_json": out.schema.json()},
             )
             dropped.update(f.seq for f in run)
 

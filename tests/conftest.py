@@ -17,3 +17,21 @@ SF_CORRECT = "/root/testdata/sf0.01"
 def spark():
     s = get_spark(app_name="core_spark-tests", master="local[8]", shuffle_partitions=8)
     yield s
+
+
+def spark_jobs(spark, fn):
+    """(fn(), the number of Spark jobs fn launched), counted in a job
+    group of its own after the listener bus has drained, so a job
+    that has just finished is counted too."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -93,17 +93,18 @@ def test_lloyd_matches_imperative_reference(spark, vecs):
 @given(_vector_sets())
 @pytest.mark.slow
 def test_topn_and_row_form_match_reference(spark, vecs):
-    """r13 optimization internals: (a) the frame-form train_centroids
-    equals the row-form loop it now unfolds; (b) the map-side
+    """r13 optimization internals: (a) the frame-form centroids equal
+    the row-form loop they unfold; (b) the map-side
     assign_topn (slice of array_sort) equals a per-vector ranking of
     the reference distances, including (dist, cidx) ties."""
     import numpy as np
+
+    from pyspark.sql import functions as F
 
     from core_spark.operators.clustering import (
         assign_topn,
         persisted_quantized,
         quantize_vectors,
-        train_centroids,
         train_centroids_row,
     )
 
@@ -112,9 +113,13 @@ def test_topn_and_row_form_match_reference(spark, vecs):
         "vec_id long, embedding array<float>",
     )
     vq = persisted_quantized(quantize_vectors(df))
-    frame = {
-        r["cidx"]: r["cv"] for r in train_centroids(vq, 4, 2).collect()
-    }
+    # the frame form (cidx, cv): the row form unfolded by a plan
+    frame_df = (
+        train_centroids_row(vq, 4, 2)
+        .select(F.explode("cents").alias("c"))
+        .select(F.col("c.cidx").alias("cidx"), F.col("c.cv").alias("cv"))
+    )
+    frame = {r["cidx"]: r["cv"] for r in frame_df.collect()}
     row = train_centroids_row(vq, 4, 2).collect()
     unrolled = {s["cidx"]: list(s["cv"]) for s in row[0]["cents"]}
     assert {c: list(v) for c, v in frame.items()} == unrolled

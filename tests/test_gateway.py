@@ -9,6 +9,7 @@ import pytest
 
 from core_spark.gateway import JournalGateway
 from core_spark.sources.journal import Journal
+from tests.conftest import spark_jobs
 
 
 @pytest.fixture()
@@ -230,3 +231,104 @@ def test_blocking_read_with_snapshot_pin_is_400(gw):
     with pytest.raises(urllib.error.HTTPError) as ei:
         _get(base, "/jnl/api/tail3?begin=1&block=true&at=0")
     assert ei.value.code == 400
+
+
+def test_flat_put_launches_only_its_write_job(gw, spark):
+    """A body of flat objects is read under the schema the driver
+    derives from its parse: the PUT launches its write job only. A
+    body outside the rule (here a nested value) keeps Spark's
+    inference job, one job more, which is every PUT's count before
+    the rule."""
+    g, _ = gw
+    flat = "\n".join(json.dumps({"k": f"k{i}", "v": i, "x": i / 3}) for i in range(20))
+    frag, jobs = spark_jobs(spark, lambda: g.append_ndjson("api/jobs", flat.encode()))
+    assert jobs == 1 and frag.n_records == 20
+    nested = json.dumps({"k": "a", "v": {"n": 1}})
+    _, jobs = spark_jobs(spark, lambda: g.append_ndjson("api/jobs2", nested.encode()))
+    assert jobs == 2
+    rows = Journal(g.root, "api/jobs").read(spark).orderBy("_offset").collect()
+    assert [(r.k, r.v, r.x) for r in rows] == [(f"k{i}", i, i / 3) for i in range(20)]
+
+
+def _corpus(seed: int, n: int) -> list[list[str]]:
+    """Seeded NDJSON bodies of flat objects: nulls, "", bools, int64
+    extremes, floats, timestamp-like strings, and ASCII, non-ASCII and
+    non-BMP keys (UTF-16 and code-point order differ on those)."""
+    import random
+
+    r = random.Random(seed)
+    keys = ["a", "b", "k", "v", "x_1", "Zeta", "é", "ключ", "日本", "\U0001F600", "～", "_x"]
+    vals = [None, "", True, False, 0, -(1 << 63), (1 << 63) - 1, -1.5e300,
+            "2024-01-01 00:00:00", "2024-01-01T00:00:00Z", "1.5", "héllo"]
+    bodies = []
+    for _ in range(n):
+        lines = []
+        for _ in range(r.randrange(1, 6)):
+            obj = {r.choice(keys): r.choice(vals + [r.randrange(-999, 999), r.random()])
+                   for _ in range(r.randrange(0, 5))}
+            lines.append(json.dumps(obj, ensure_ascii=r.random() < 0.5))
+        bodies.append(lines)
+    return bodies
+
+
+def test_driver_schema_rule_equals_spark_inference(spark):
+    """flat_json_schema returns exactly the schema spark.read.json
+    infers for flat bodies, and None (Spark infers) for each shape the
+    rule leaves out."""
+    from core_spark.gateway import flat_json_schema
+
+    def spark_schema(lines):
+        return spark.read.json(spark.sparkContext.parallelize(lines, 1)).schema
+
+    def rule(lines):
+        return flat_json_schema(list(enumerate(lines, 1)))
+
+    covered = [
+        ['{"a": null, "b": ""}'],  # null-only and ""-only columns are strings
+        ['{"a": ""}', '{"a": 5}'],  # "" is a null, so the column is a long
+        ['{"a": true}', '{"a": 1}'],  # bool and long widen to string
+        ['{"a": 1}', '{"a": 1.5}', '{"a": null}'],  # long and double: double
+        ['{"a": 1e5, "b": -0}'],
+        ['{}', '{}'],
+        ['{"\\ud83d\\ude00": 1, "\\uff5e": 2, "Z": 3, "a": 4}'],
+    ]
+    bodies = covered + _corpus(11, 24) + _corpus(12, 24)
+    for lines in bodies:
+        assert rule(lines) == spark_schema(lines), lines
+
+    excluded = [
+        ['{"a": {"b": 1}}'],  # nested object
+        ['{"a": [1, 2]}'],  # nested array
+        ['[{"a": 1}, {"a": 2}]'],  # top-level array
+        ['{"a": 9223372036854775808}'],  # above int64: a decimal
+        ['{"a": -9223372036854775809}'],
+        ['{"a": NaN}'],
+        ['{"a": Infinity}'],
+        ['{"a": 1, "a": "x"}'],  # duplicate key
+        ['{"a": 1}', '{"A": 2}'],  # keys that collide ignoring case
+        ['{"": 1, "a": 2}'],  # Spark drops the empty key
+    ]
+    for lines in excluded:
+        assert rule(lines) is None, lines
+        spark_schema(lines)  # Spark still reads them
+
+
+def test_malformed_line_is_400_naming_its_line(gw, spark):
+    """A line that is not strict JSON, or that is a JSON scalar rather
+    than a record, fails the whole PUT with a 400 naming its 1-based
+    line number (blank lines count); nothing is committed. Top-level
+    arrays still go to Spark, which reads each element as a row."""
+    g, base = gw
+    for body, line in (
+        ('{"k":"a","v":1}\nnot json', 2),
+        ('{"k":"a","v":1}\n\n{"k": }', 3),
+        ('{"k":"a"}\n7', 2),
+    ):
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _put(base, "api/bad", body)
+        assert ei.value.code == 400
+        assert f"line {line}:" in json.loads(ei.value.read())["error"]
+    assert Journal(g.root, "api/bad").manifest().next_offset == 0
+
+    r = _put(base, "api/arrays", '[{"k": 1}, {"k": 2}]')
+    assert r["n_records"] == 2

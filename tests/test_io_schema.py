@@ -4,7 +4,6 @@ launches no Spark job, and it mutates no parquet reader conf."""
 
 import datetime
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -12,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from core_spark.io import TABLES, ParquetSchemaError, footer_schema, load_table, register_views
-from tests.conftest import SF_CORRECT, SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE, spark_jobs
 
 NANOS = "spark.sql.legacy.parquet.nanosAsLong"
 NTZ = "spark.sql.parquet.inferTimestampNTZ.enabled"
@@ -86,23 +85,14 @@ def test_unmapped_type_raises_named_error(spark, tmp_path):
 
 
 def test_load_table_launches_no_spark_job(spark):
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def jobs_in_group(fn):
-        group = f"io-schema-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "load_table job count")
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return tracker.getJobIdsForGroup(group)
+    def jobs(fn):
+        return spark_jobs(spark, fn)[1]
 
     sf = SF_CORRECT
     # the group does catch an inference job, so zero below is a real zero
-    assert jobs_in_group(lambda: spark.read.parquet(f"{sf}/orders.parquet"))
-    assert jobs_in_group(lambda: [load_table(spark, sf, n) for n in TABLES]) == []
-    assert jobs_in_group(lambda: register_views(spark, sf)) == []
+    assert jobs(lambda: spark.read.parquet(f"{sf}/orders.parquet"))
+    assert jobs(lambda: [load_table(spark, sf, n) for n in TABLES]) == 0
+    assert jobs(lambda: register_views(spark, sf)) == 0
 
 
 def test_nanos_events_load_as_micros_without_conf_change(spark, tmp_path):

@@ -11,6 +11,7 @@ from core_spark.sources.journal import (
     Manifest,
     RegisterMismatch,
 )
+from tests.conftest import spark_jobs
 
 
 @pytest.fixture
@@ -1267,3 +1268,167 @@ def test_compaction_keeps_file_level_blooms(spark, tmp_path):
         if all(v is False for v in parquet_bloom_may_contain(raw, "k", x))
     )
     assert n_false >= 45
+
+
+# ------------------------------------------- reads under the manifest schema
+def _strip_schemas(j):
+    """Rewrite the journal's latest manifest as one written before
+    fragments recorded their schema."""
+    m = j.manifest()
+    for f in m.fragments:
+        f.meta = {}
+    m.version += 1
+    j._commit_manifest(m)
+
+
+def _typed_df(spark, lo, hi):
+    return spark.range(lo, hi).selectExpr(
+        "id AS k",
+        "CAST(id AS INT) AS i",
+        "CAST(id % 7 AS SHORT) AS s",
+        "id * 0.5 AS d",
+        "CAST(id AS STRING) AS str",
+        "id % 2 = 0 AS b",
+        "CAST(id AS DECIMAL(12, 2)) AS dec",
+        "DATE'2024-01-01' + CAST(id AS INT) AS dt",
+        "TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts",
+        "array(id, id + 1) AS arr",
+        "named_struct('x', id, 'y', CAST(id AS STRING)) AS st",
+        "map('m', id) AS mp",
+        "CAST(CAST(id AS STRING) AS BINARY) AS bin",
+    )
+
+
+def test_read_planning_launches_no_job(spark, tmp_path):
+    """Planning Journal.read reads each fragment under the schema its
+    manifest entry records, so it launches no Spark job: one fragment,
+    several fragments, a read pruned to empty, orc, and a compacted
+    journal. A manifest without recorded schemas is planned through
+    Spark's inference, one job, which shows the group counts jobs."""
+
+    def plan_jobs(j, **kw):
+        return spark_jobs(spark, lambda: j.read(spark, **kw))
+
+    one = Journal(str(tmp_path), "plan/one")
+    one.append(_typed_df(spark, 0, 10))
+    df, jobs = plan_jobs(one)
+    assert jobs == 0 and df.count() == 10
+
+    several = Journal(str(tmp_path), "plan/several")
+    for lo in (0, 10, 20):
+        several.append(_df(spark, lo, lo + 10))
+    df, jobs = plan_jobs(several, begin=5)
+    assert jobs == 0 and df.count() == 25
+    df, jobs = plan_jobs(several, where=[("v", ">", 1000)])  # pruned empty
+    assert jobs == 0 and df.count() == 0
+
+    orc = Journal(str(tmp_path), "plan/orc")
+    orc.append(_typed_df(spark, 0, 10), fmt="orc")
+    orc.append(_typed_df(spark, 10, 20), fmt="orc")
+    df, jobs = plan_jobs(orc)
+    assert jobs == 0 and df.count() == 20
+
+    assert several.compact(spark) == 2
+    assert "schema_json" in several.manifest().fragments[0].meta
+    df, jobs = plan_jobs(several)
+    assert jobs == 0 and sorted(r.v for r in df.collect()) == list(range(30))
+
+    _strip_schemas(one)
+    df, jobs = plan_jobs(one)
+    assert jobs == 1 and df.count() == 10
+
+
+def test_read_schema_equals_spark_inference(spark, tmp_path):
+    """The recorded schema is the one Spark's inference reads back:
+    for every column type, in parquet and orc, for single- and
+    multi-fragment reads, and for an evolved journal whose first read
+    fragment is narrower or wider than the rest (a multi-path read
+    takes the first fragment's schema, as inference does)."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    def inferred(j, fmt, frags):
+        paths = [os.path.join(j.root, f.path) for f in frags]
+        return spark.read.format(fmt).load(paths).schema
+
+    for fmt in ("parquet", "orc"):
+        j = Journal(str(tmp_path), f"schema/{fmt}")
+        j.append(_typed_df(spark, 0, 5), fmt=fmt)
+        frags = j.manifest().fragments
+        assert j.read(spark).drop("_journal").schema == inferred(j, fmt, frags)
+        j.append(_typed_df(spark, 5, 9), fmt=fmt)
+        frags = j.manifest().fragments
+        got = j.read(spark).drop("_journal").schema
+        assert got == inferred(j, fmt, frags)
+        assert got == inferred(j, fmt, frags[1:])  # the files agree
+
+    narrow, wide = _df(spark, 0, 5), _df(spark, 5, 10).withColumn("w", F.lit("x"))
+    for name, first, second in (("narrow", narrow, wide), ("wide", wide, narrow)):
+        j = Journal(str(tmp_path), f"schema/evolved-{name}")
+        j.append(first)
+        j.append(second)
+        j.append(first)
+        frags = j.manifest().fragments
+        for begin in (None, 5):
+            read = [f for f in frags if begin is None or f.end > begin]
+            got = j.read(spark, begin=begin).drop("_journal")
+            assert got.schema == inferred(j, "parquet", read), (name, begin)
+        assert j.read(spark, begin=5).columns != j.read(spark).columns
+
+
+def test_old_manifest_reads_through_inference(spark, journal):
+    """Fragments without a recorded schema (manifests written before
+    fragments carried one) read exactly as the recorded ones do."""
+    journal.append(_typed_df(spark, 0, 6))
+    journal.append(_typed_df(spark, 6, 9))
+    want = journal.read(spark, begin=2)
+    _strip_schemas(journal)
+    got = journal.read(spark, begin=2)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_postfix_journal_reads_through_discovery(spark, journal):
+    """A path-postfix tree records no schema: partition discovery
+    types its key columns from the paths (`day` reads as int, though
+    it was written as bigint), so its reads keep Spark's inference."""
+    df = spark.range(0, 20).selectExpr("id AS k", "id % 3 AS day")
+    journal.append(df.filter("k < 10"), path_postfix=("day",))
+    journal.append(df.filter("k >= 10"), path_postfix=("day",))
+    assert all(not f.meta for f in journal.manifest().fragments)
+    for begin in (None, 10):
+        got, jobs = spark_jobs(spark, lambda: journal.read(spark, begin=begin))
+        assert jobs >= 1
+        assert dict(got.dtypes)["day"] == "int"
+    rows = journal.read(spark).collect()
+    assert sorted((r.k, r.day) for r in rows) == [(k, k % 3) for k in range(20)]
+
+
+def test_bloom_fold_over_chunks_equals_whole_column(tmp_path):
+    """_build_blooms folds each column's chunks one by one; the hex
+    maps equal those of one pass over all of the column's values."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from core_spark.sources.journal import _BLOOM_BITS, _bloom_positions, _build_blooms
+
+    frag = tmp_path / "frag"
+    frag.mkdir()
+    ks = [f"k{i % 37}" for i in range(500)] + [None]
+    ns = [i % 53 for i in range(501)]
+    pq.write_table(pa.table({"k": ks, "n": ns}), frag / "part-0.parquet", row_group_size=64)
+    assert ds.dataset(str(frag)).to_table()["k"].num_chunks > 1
+
+    def whole(values, prefix):
+        m = bytearray(_BLOOM_BITS // 8)
+        for v in {v for v in values if v is not None}:
+            for p in _bloom_positions(str(v)):
+                m[p // 8] |= 1 << (p % 8)
+        return prefix + bytes(m).hex()
+
+    assert _build_blooms(str(frag), "parquet", ["k", "n"]) == {
+        "k": whole(ks, ""),
+        "n": whole(ns, "int:"),
+    }
