@@ -39,13 +39,11 @@ records the disposition.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from core_spark.catalog import CatalogStore, JournalSpec
+from core_spark.multimodal.columns import doc_kernel
 from core_spark.sources.journal import Journal
 
 MEDIA_JOURNAL = "media/clean"
@@ -64,146 +62,111 @@ def media_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     pure-stdlib decoder and emit a unified metadata row (image
     fields NULL for audio and vice versa)."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        def one(doc_id: int, raw: bytes):
-            img = None
-            if raw[:8] == b"\x89PNG\r\n\x1a\n":
-                from core_spark.multimodal.png import png_meta
+    from core_spark.multimodal.bmp import bmp_meta
+    from core_spark.multimodal.flac import flac_decode
+    from core_spark.multimodal.gif import gif_meta
+    from core_spark.multimodal.jpeg import jpeg_meta
+    from core_spark.multimodal.mp4 import fmp4_duration_ms, mp4_meta
+    from core_spark.multimodal.pdf import pdf_meta, pdf_pages_text
+    from core_spark.multimodal.png import png_meta
+    from core_spark.multimodal.wav import aiff_decode, mp3_meta, wav_decode
 
-                w, h, _d, _c = png_meta(raw)
-                img = ("image/png", w, h)
-            elif raw[:6] in (b"GIF87a", b"GIF89a"):
-                from core_spark.multimodal.gif import gif_meta
+    def meta(raw: bytes):
+        img = None
+        if raw[:8] == b"\x89PNG\r\n\x1a\n":
+            w, h, _d, _c = png_meta(raw)
+            img = ("image/png", w, h)
+        elif raw[:6] in (b"GIF87a", b"GIF89a"):
+            w, h, _f = gif_meta(raw)
+            img = ("image/gif", w, h)
+        elif raw[:2] == b"BM":
+            w, h, _b = bmp_meta(raw)
+            img = ("image/bmp", w, h)
+        elif raw[:2] == b"\xff\xd8":
+            w, h, _n = jpeg_meta(raw)
+            img = ("image/jpeg", w, h)
+        if img is not None:
+            mime, w, h = img
+            return mime, w, h, None, None, None, None, None, len(raw)
 
-                w, h, _f = gif_meta(raw)
-                img = ("image/gif", w, h)
-            elif raw[:2] == b"BM":
-                from core_spark.multimodal.bmp import bmp_meta
-
-                w, h, _b = bmp_meta(raw)
-                img = ("image/bmp", w, h)
-            elif raw[:2] == b"\xff\xd8":
-                from core_spark.multimodal.jpeg import jpeg_meta
-
-                w, h, _n = jpeg_meta(raw)
-                img = ("image/jpeg", w, h)
-            if img is not None:
-                mime, w, h = img
-                return (
-                    doc_id, mime, w, h, None, None, None, None, None,
-                    len(raw),
-                )
-
-            if raw[:5] == b"%PDF-":
-                from core_spark.multimodal.pdf import (
-                    pdf_meta, pdf_pages_text,
-                )
-
-                pm = pdf_meta(raw)
-                chars = sum(len(p) for p in pdf_pages_text(raw))
-                return (
-                    doc_id, "application/pdf", None, None, None,
-                    None, None, pm["page_count"], chars, len(raw),
-                )
-
-            if len(raw) >= 12 and raw[4:8] == b"ftyp":
-                from core_spark.multimodal.mp4 import (
-                    fmp4_duration_ms, mp4_meta,
-                )
-
-                m = mp4_meta(raw)
-                # full gate metadata from the box walk alone — the
-                # video twin of the MP3 header scan below; frame
-                # decode (energy/luma) stays behind the pyav stub.
-                # mime follows the handler tracks, not the container:
-                # an audio-only M4A is audio/mp4, never a NULL-dims
-                # "video" that slips the dimension gate.
-                if m["has_video"]:
-                    mime = "video/mp4"
-                elif m["has_audio"]:
-                    mime = "audio/mp4"
-                else:
-                    mime = "application/mp4"
-                dur = m["duration_ms"]
-                if dur is None and m["has_video"]:
-                    # fragmented (CMAF/DASH) movie: mvhd declares
-                    # unknown, but summing trun sample durations
-                    # across the moofs gives the exact figure — the
-                    # duration gate judges streaming-packaged video
-                    # instead of passing NULL
-                    dur = fmp4_duration_ms(raw)
-                return (
-                    doc_id, mime, m["width"], m["height"],
-                    None, dur, None, None, None, len(raw),
-                )
-
-            if raw[:3] == b"ID3" or (
-                len(raw) >= 2
-                and raw[0] == 0xFF
-                and raw[1] & 0xE0 == 0xE0
-                and raw[:4] != b"RIFF"
-            ):
-                from core_spark.multimodal.wav import mp3_meta
-
-                m = mp3_meta(raw)
-                # duration from the header walk; energy needs an MDCT
-                # decoder the container lacks — NULL, never a fake
-                return (
-                    doc_id, "audio/mpeg", None, None, m["rate"],
-                    m["duration_ms"], None, None, None, len(raw),
-                )
-
-            if raw[:4] == b"fLaC":
-                from core_spark.multimodal.flac import flac_decode
-
-                pcm, rate = flac_decode(raw)
-                mime = "audio/flac"
-            elif raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
-                from core_spark.multimodal.wav import wav_decode
-
-                pcm, rate, bits = wav_decode(raw)
-                if bits > 16:
-                    pcm = pcm >> (bits - 16)
-                mime = "audio/wav"
-            elif raw[:4] == b"FORM" and raw[8:12] in (b"AIFF", b"AIFC"):
-                from core_spark.multimodal.wav import aiff_decode
-
-                pcm, rate, bits = aiff_decode(raw)
-                if bits > 16:
-                    pcm = pcm >> (bits - 16)
-                mime = "audio/aiff"
-            else:
-                raise NotImplementedError(
-                    f"STUB: media magic {raw[:4]!r} requires PIL/"
-                    "libsndfile/pyav; see multimodal/ for the real set"
-                )
-            nf = pcm.shape[0]
-            dur = nf * 1000 // max(1, rate)
-            energy = int((pcm.astype(np.int64) ** 2).sum() // max(1, nf * pcm.shape[1]))
+        if raw[:5] == b"%PDF-":
+            pm = pdf_meta(raw)
+            chars = sum(len(p) for p in pdf_pages_text(raw))
             return (
-                doc_id, mime, None, None, rate, dur, energy, None,
+                "application/pdf", None, None, None, None, None,
+                pm["page_count"], chars, len(raw),
+            )
+
+        if len(raw) >= 12 and raw[4:8] == b"ftyp":
+            m = mp4_meta(raw)
+            # full gate metadata from the box walk alone — the
+            # video twin of the MP3 header scan below; frame
+            # decode (energy/luma) stays behind the pyav stub.
+            # mime follows the handler tracks, not the container:
+            # an audio-only M4A is audio/mp4, never a NULL-dims
+            # "video" that slips the dimension gate.
+            if m["has_video"]:
+                mime = "video/mp4"
+            elif m["has_audio"]:
+                mime = "audio/mp4"
+            else:
+                mime = "application/mp4"
+            dur = m["duration_ms"]
+            if dur is None and m["has_video"]:
+                # fragmented (CMAF/DASH) movie: mvhd declares
+                # unknown, but summing trun sample durations
+                # across the moofs gives the exact figure — the
+                # duration gate judges streaming-packaged video
+                # instead of passing NULL
+                dur = fmp4_duration_ms(raw)
+            return (
+                mime, m["width"], m["height"], None, dur, None, None,
                 None, len(raw),
             )
 
-        for pdf in batches:
-            rows = [
-                one(int(d), bytes(b))
-                for d, b in zip(pdf["doc_id"], pdf[payload_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "mime", "width", "height", "rate",
-                    "duration_ms", "mean_energy", "n_pages",
-                    "text_chars", "n_bytes",
-                ],
+        if raw[:3] == b"ID3" or (
+            len(raw) >= 2
+            and raw[0] == 0xFF
+            and raw[1] & 0xE0 == 0xE0
+            and raw[:4] != b"RIFF"
+        ):
+            m = mp3_meta(raw)
+            # duration from the header walk; energy needs an MDCT
+            # decoder the engine lacks — NULL, never a fake
+            return (
+                "audio/mpeg", None, None, m["rate"], m["duration_ms"],
+                None, None, None, len(raw),
             )
 
-    return df.select("doc_id", payload_col).mapInPandas(
-        decode, schema=MEDIA_META_SCHEMA
-    )
+        if raw[:4] == b"fLaC":
+            pcm, rate = flac_decode(raw)
+            mime = "audio/flac"
+        elif raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
+            pcm, rate, bits = wav_decode(raw)
+            if bits > 16:
+                pcm = pcm >> (bits - 16)
+            mime = "audio/wav"
+        elif raw[:4] == b"FORM" and raw[8:12] in (b"AIFF", b"AIFC"):
+            pcm, rate, bits = aiff_decode(raw)
+            if bits > 16:
+                pcm = pcm >> (bits - 16)
+            mime = "audio/aiff"
+        else:
+            raise NotImplementedError(
+                f"STUB: media magic {raw[:4]!r} requires PIL/"
+                "libsndfile/pyav; see multimodal/ for the real set"
+            )
+        nf = pcm.shape[0]
+        dur = nf * 1000 // max(1, rate)
+        energy = int((pcm.astype(np.int64) ** 2).sum() // max(1, nf * pcm.shape[1]))
+        return mime, None, None, rate, dur, energy, None, None, len(raw)
+
+    def decode(doc_id, b):
+        yield meta(bytes(b))
+
+    return doc_kernel(df, decode, MEDIA_META_SCHEMA, col=payload_col)
 
 
 def curate_media(meta: DataFrame) -> DataFrame:

@@ -41,23 +41,33 @@ Two modes:
   naming the library a cluster image would add (PIL / libsndfile /
   pyav); the Spark-side contract is identical either way.
 
-A per-document kernel is written once, as `doc_kernel(docs, per_doc,
-schema)`: `per_doc(doc_id, text)` yields each output row without its
-leading `doc_id`, and `doc_kernel` supplies the batch loop, the frame
-columns and the `MapInPandas` stage (through `_kernel`, so it fuses
-like every other stage here). Hand-rolled `for pdf in batches` loops
-over `(doc_id, text)` are reserved for the kernels listed in
-tests/test_plan_sweep.py, which build numpy columns or chain two
-stages.
+A per-document kernel is written once, through one of two helpers:
 
-Worker closures are self-contained up to this package (stdlib +
-pandas + numpy + the pure-python codec modules, imported lazily
-inside each closure) — a cluster deployment ships `core_spark` as a
+- `doc_kernel(docs, per_doc, schema, col="text")` for decoders:
+  `per_doc(doc_id, value)` gets each document's `col` value (text or
+  binary payload) and yields each output row without its leading
+  `doc_id`;
+- `payload_kernel(docs, build, col, out_type)` for payload builders:
+  `build(value)` returns one document's payload, and the helper
+  yields `(doc_id, payload)` frames under the byte cap
+  (`_payload_frames`).
+
+Both supply the batch loop, the frame columns and the `MapInPandas`
+stage (through `_kernel`, so a builder and its decoder fuse into one
+stage). Hand-rolled `for pdf in batches` loops over `doc_id` are
+reserved for the kernels listed in tests/test_plan_sweep.py, which
+build numpy columns, and for `resize_images`, which returns its
+input's schema rather than `(doc_id, ...)` rows.
+
+Codec imports happen once, in the operator function on the driver;
+worker closures reference the pure-python codec modules of this
+package by name, so a cluster deployment ships `core_spark` as a
 zip/wheel exactly once.
 """
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -77,12 +87,15 @@ AUDIO_FRAME_SCHEMA = "doc_id long, frame_idx long, offset_ms long, n_bytes long"
 # batch of ~50 KB media blobs therefore became one ~500 MB output
 # batch, and 32 concurrent tasks exhausted the JVM's direct-memory
 # pool at the 100x scale probe. Builders yield through
-# _payload_frames so output batches stay under the same cap.
+# _payload_frames (via payload_kernel) so output batches stay under
+# the same cap.
 _PAYLOAD_FRAME_BYTES = 32 << 20
 
 
 def _payload_frames(doc_ids, payloads) -> Iterator[pd.DataFrame]:
-    """Yield (doc_id, payload) frames in byte-bounded slices.
+    """Yield (doc_id, payload) frames in byte-bounded slices: a frame
+    holds at most `_PAYLOAD_FRAME_BYTES` of payload, unless a single
+    payload is larger, which then rides alone.
 
     `payloads` may be a generator: builds stream through a ≤cap
     buffer instead of materializing the whole input batch's blobs
@@ -91,12 +104,13 @@ def _payload_frames(doc_ids, payloads) -> Iterator[pd.DataFrame]:
     pl_buf: list = []
     cur = 0
     for d, p in zip(doc_ids, payloads):
-        ids_buf.append(d)
-        pl_buf.append(p)
-        cur += len(p) if p is not None else 0
-        if cur >= _PAYLOAD_FRAME_BYTES:
+        n = len(p) if p is not None else 0
+        if ids_buf and cur + n > _PAYLOAD_FRAME_BYTES:
             yield pd.DataFrame({"doc_id": ids_buf, "payload": pl_buf})
             ids_buf, pl_buf, cur = [], [], 0
+        ids_buf.append(d)
+        pl_buf.append(p)
+        cur += n
     if ids_buf:
         yield pd.DataFrame({"doc_id": ids_buf, "payload": pl_buf})
 
@@ -149,8 +163,11 @@ def _kernel(
     return out
 
 
-def doc_kernel(docs: DataFrame, per_doc, schema: str) -> DataFrame:
-    """Run `per_doc(doc_id, text)` over every document of `docs`.
+def doc_kernel(
+    docs: DataFrame, per_doc, schema: str, col: str = "text"
+) -> DataFrame:
+    """Run `per_doc(doc_id, value)` over column `col` of every
+    document of `docs`.
 
     `per_doc` yields each output row as a tuple WITHOUT its leading
     `doc_id`; the kernel prepends the document's id. `schema` is a DDL
@@ -164,13 +181,33 @@ def doc_kernel(docs: DataFrame, per_doc, schema: str) -> DataFrame:
         for pdf in batches:
             rows = [
                 (int(doc_id), *row)
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
-                for row in per_doc(doc_id, text)
+                for doc_id, value in zip(pdf["doc_id"], pdf[col])
+                for row in per_doc(doc_id, value)
             ]
             yield pd.DataFrame(rows, columns=names)
 
     gen.__name__ = per_doc.__name__
-    return _kernel(docs, gen, schema, cols=("doc_id", "text"))
+    return _kernel(docs, gen, schema, cols=("doc_id", col))
+
+
+def payload_kernel(
+    docs: DataFrame, build, col: str = "text", out_type: str = "binary"
+) -> DataFrame:
+    """Build one `payload` per document: `build(value)` maps column
+    `col` to the payload, and the output is `(doc_id, payload
+    <out_type>)` in frames under `_PAYLOAD_FRAME_BYTES`. The stage is
+    named after `build`, like `doc_kernel`'s."""
+
+    def gen(batches):
+        for pdf in batches:
+            yield from _payload_frames(
+                pdf["doc_id"], (build(v) for v in pdf[col])
+            )
+
+    gen.__name__ = build.__name__
+    return _kernel(
+        docs, gen, f"doc_id long, payload {out_type}", cols=("doc_id", col)
+    )
 
 
 def attach_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -190,95 +227,75 @@ def decode_image_meta(
     dimensions.
     """
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-        import struct
+    from core_spark.multimodal.bmp import bmp_meta
+    from core_spark.multimodal.gif import gif_meta
+    from core_spark.multimodal.jpeg import jpeg_meta
+    from core_spark.multimodal.png import png_meta
 
-        def ppm_header(raw):
-            toks, i = [], 2
-            while len(toks) < 3 and i < len(raw):
-                while i < len(raw) and raw[i : i + 1].isspace():
+    def ppm_header(raw):
+        toks, i = [], 2
+        while len(toks) < 3 and i < len(raw):
+            while i < len(raw) and raw[i : i + 1].isspace():
+                i += 1
+            if raw[i : i + 1] == b"#":
+                while i < len(raw) and raw[i : i + 1] != b"\n":
                     i += 1
-                if raw[i : i + 1] == b"#":
-                    while i < len(raw) and raw[i : i + 1] != b"\n":
-                        i += 1
-                    continue
-                j = i
-                while j < len(raw) and not raw[j : j + 1].isspace():
-                    j += 1
-                if i == j or not raw[i:j].isdigit():
-                    break
-                toks.append(int(raw[i:j]))
-                i = j
-            # A 'P6'/'P5' magic with fewer than width/height/maxval
-            # tokens must be a clear per-payload parse error, not an
-            # executor-opaque IndexError.
-            if len(toks) < 2:
-                raise ValueError(
-                    "malformed PPM/PGM payload: header has "
-                    f"{len(toks)} of 3 expected integer tokens"
-                )
-            return toks[0], toks[1]
-
-        def real_meta(raw: bytes):
-            if raw[:8] == b"\x89PNG\r\n\x1a\n":
-                from core_spark.multimodal.png import png_meta
-
-                w, h, _depth, _ctype = png_meta(raw)
-                return "image/png", w, h
-            if raw[:2] == b"\xff\xd8":
-                from core_spark.multimodal.jpeg import jpeg_meta
-
-                w, h, _nc = jpeg_meta(raw)
-                return "image/jpeg", w, h
-            if raw[:6] in (b"GIF87a", b"GIF89a"):
-                from core_spark.multimodal.gif import gif_meta
-
-                w, h, _frames = gif_meta(raw)
-                return "image/gif", w, h
-            if raw[:2] == b"P6":
-                w, h = ppm_header(raw)
-                return "image/x-portable-pixmap", w, h
-            if raw[:2] == b"P5":
-                w, h = ppm_header(raw)
-                return "image/x-portable-graymap", w, h
-            if raw[:2] == b"BM" and len(raw) >= 26:
-                from core_spark.multimodal.bmp import bmp_meta
-
-                w, h, _bits = bmp_meta(raw)
-                return "image/bmp", w, h
-            raise NotImplementedError(
-                f"STUB: image codec with magic {raw[:4]!r} requires PIL "
-                "(pillow); pure-python real mode covers PPM/PGM/BMP"
-            )
-
-        for pdf in batches:
-            if fake:
-                hexes = [
-                    hashlib.md5(bytes(b)).hexdigest() for b in pdf[payload_col]
-                ]
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"],
-                        "mime": "image/png",
-                        "width": [64 + int(h[0:4], 16) % 512 for h in hexes],
-                        "height": [64 + int(h[8:12], 16) % 512 for h in hexes],
-                        "n_bytes": [len(bytes(b)) for b in pdf[payload_col]],
-                    }
-                )
                 continue
-            metas = [real_meta(bytes(b)) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": [m[0] for m in metas],
-                    "width": [m[1] for m in metas],
-                    "height": [m[2] for m in metas],
-                    "n_bytes": [len(bytes(b)) for b in pdf[payload_col]],
-                }
+            j = i
+            while j < len(raw) and not raw[j : j + 1].isspace():
+                j += 1
+            if i == j or not raw[i:j].isdigit():
+                break
+            toks.append(int(raw[i:j]))
+            i = j
+        # A 'P6'/'P5' magic with fewer than width/height/maxval
+        # tokens must be a clear per-payload parse error, not an
+        # executor-opaque IndexError.
+        if len(toks) < 2:
+            raise ValueError(
+                "malformed PPM/PGM payload: header has "
+                f"{len(toks)} of 3 expected integer tokens"
             )
+        return toks[0], toks[1]
 
-    return _kernel(df, decode, IMAGE_META_SCHEMA, cols=("doc_id", payload_col))
+    def real_meta(raw: bytes):
+        if raw[:8] == b"\x89PNG\r\n\x1a\n":
+            w, h, _depth, _ctype = png_meta(raw)
+            return "image/png", w, h
+        if raw[:2] == b"\xff\xd8":
+            w, h, _nc = jpeg_meta(raw)
+            return "image/jpeg", w, h
+        if raw[:6] in (b"GIF87a", b"GIF89a"):
+            w, h, _frames = gif_meta(raw)
+            return "image/gif", w, h
+        if raw[:2] == b"P6":
+            w, h = ppm_header(raw)
+            return "image/x-portable-pixmap", w, h
+        if raw[:2] == b"P5":
+            w, h = ppm_header(raw)
+            return "image/x-portable-graymap", w, h
+        if raw[:2] == b"BM" and len(raw) >= 26:
+            w, h, _bits = bmp_meta(raw)
+            return "image/bmp", w, h
+        raise NotImplementedError(
+            f"STUB: image codec with magic {raw[:4]!r} requires PIL "
+            "(pillow); pure-python real mode covers PPM/PGM/BMP"
+        )
+
+    def decode(doc_id, b):
+        raw = bytes(b)
+        if fake:
+            h = hashlib.md5(raw).hexdigest()
+            yield (
+                "image/png",
+                64 + int(h[0:4], 16) % 512,
+                64 + int(h[8:12], 16) % 512,
+                len(raw),
+            )
+        else:
+            yield (*real_meta(raw), len(raw))
+
+    return doc_kernel(df, decode, IMAGE_META_SCHEMA, col=payload_col)
 
 
 def resize_images(
@@ -447,78 +464,54 @@ def sample_audio_frames(
     naming pyav. Fake mode treats every 100 bytes as one
     frame_ms."""
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def slices(doc_id: int, nch: int, sw: int, fr: int, nf: int):
-            per_slice = max(1, (fr * frame_ms) // 1000)
-            n_slices = max(1, -(-nf // per_slice))  # ceil
-            for i in range(n_slices):
-                got = min(per_slice, nf - i * per_slice)
-                yield (doc_id, i, i * frame_ms, got * nch * sw)
+    from core_spark.multimodal.flac import flac_meta
+    from core_spark.multimodal.wav import aiff_meta, mp3_meta, wav_meta
 
-        def wav_frames(doc_id: int, raw: bytes):
-            if raw[:4] == b"fLaC":
-                from core_spark.multimodal.flac import flac_meta
+    def slices(nch: int, sw: int, fr: int, nf: int):
+        per_slice = max(1, (fr * frame_ms) // 1000)
+        n_slices = max(1, -(-nf // per_slice))  # ceil
+        for i in range(n_slices):
+            got = min(per_slice, nf - i * per_slice)
+            yield (i, i * frame_ms, got * nch * sw)
 
-                rate, nch, bps, total = flac_meta(raw)
-                yield from slices(doc_id, nch, (bps + 7) // 8, rate, total)
-                return
-            if raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
-                from core_spark.multimodal.wav import wav_meta
+    def wav_frames(raw: bytes):
+        if raw[:4] == b"fLaC":
+            rate, nch, bps, total = flac_meta(raw)
+            return slices(nch, (bps + 7) // 8, rate, total)
+        if raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
+            rate, nch, bits, total, _codec = wav_meta(raw)
+            # framing reports decoded-PCM bytes: compressed
+            # codecs (G.711/ADPCM/float) land at 16-bit scale
+            sw = (bits + 7) // 8 if _codec == "pcm" else 2
+            return slices(nch, sw, rate, total)
+        if raw[:4] == b"FORM" and raw[8:12] in (b"AIFF", b"AIFC"):
+            rate, nch, bits, total, comp = aiff_meta(raw)
+            sw = (bits + 7) // 8 if comp in ("NONE", "twos") else 2
+            return slices(nch, sw, rate, total)
+        if raw[:3] == b"ID3" or (
+            len(raw) >= 2 and raw[0] == 0xFF and raw[1] & 0xE0 == 0xE0
+        ):
+            # MP3: the header walk yields exact frame counts and
+            # rate without decoding audio (multimodal/wav.py)
+            m = mp3_meta(raw)
+            total = m["n_frames"] * m["samples_per_frame"]
+            return slices(m["channels"], 2, m["rate"], total)
+        raise NotImplementedError(
+            f"STUB: audio container with magic {raw[:4]!r} "
+            "requires libsndfile/pyav; pure-python real mode "
+            "covers RIFF/WAV (PCM/float/G.711/ADPCM), AIFF/AIFF-C, "
+            "FLAC, and MP3 stream metadata"
+        )
 
-                rate, nch, bits, total, _codec = wav_meta(raw)
-                # framing reports decoded-PCM bytes: compressed
-                # codecs (G.711/ADPCM/float) land at 16-bit scale
-                sw = (bits + 7) // 8 if _codec == "pcm" else 2
-                yield from slices(doc_id, nch, sw, rate, total)
-                return
-            if raw[:4] == b"FORM" and raw[8:12] in (b"AIFF", b"AIFC"):
-                from core_spark.multimodal.wav import aiff_meta
+    def sample(doc_id, b):
+        raw = bytes(b)
+        if not fake:
+            yield from wav_frames(raw)
+            return
+        for i in range(max(1, len(raw) // 100)):
+            yield i, i * frame_ms, min(100, len(raw) - i * 100)
 
-                rate, nch, bits, total, comp = aiff_meta(raw)
-                sw = (bits + 7) // 8 if comp in ("NONE", "twos") else 2
-                yield from slices(doc_id, nch, sw, rate, total)
-                return
-            if raw[:3] == b"ID3" or (
-                len(raw) >= 2 and raw[0] == 0xFF and raw[1] & 0xE0 == 0xE0
-            ):
-                # MP3: the header walk yields exact frame counts and
-                # rate without decoding audio (multimodal/wav.py)
-                from core_spark.multimodal.wav import mp3_meta
-
-                m = mp3_meta(raw)
-                total = m["n_frames"] * m["samples_per_frame"]
-                yield from slices(
-                    doc_id, m["channels"], 2, m["rate"], total
-                )
-                return
-            raise NotImplementedError(
-                f"STUB: audio container with magic {raw[:4]!r} "
-                "requires libsndfile/pyav; pure-python real mode "
-                "covers RIFF/WAV (PCM/float/G.711/ADPCM), AIFF/AIFF-C, "
-                "FLAC, and MP3 stream metadata"
-            )
-
-        for pdf in batches:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf[payload_col]):
-                raw = bytes(b)
-                if fake:
-                    for i in range(max(1, len(raw) // 100)):
-                        rows.append(
-                            (
-                                int(doc_id),
-                                i,
-                                i * frame_ms,
-                                min(100, len(raw) - i * 100),
-                            )
-                        )
-                else:
-                    rows.extend(wav_frames(int(doc_id), raw))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "offset_ms", "n_bytes"]
-            )
-
-    return _kernel(df, sample, AUDIO_FRAME_SCHEMA, cols=("doc_id", payload_col))
+    return doc_kernel(df, sample, AUDIO_FRAME_SCHEMA, col=payload_col)
 
 
 AUDIO_FEATURE_SCHEMA = (
@@ -543,63 +536,43 @@ def audio_frame_features(
     AIFF/AIFF-C and FLAC (multimodal/wav.py, multimodal/flac.py);
     other containers raise, naming the library."""
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    import numpy as np
 
-        def pcm_of(raw: bytes):
-            if raw[:4] == b"fLaC":
-                from core_spark.multimodal.flac import flac_decode, flac_meta
+    from core_spark.multimodal.flac import flac_decode, flac_meta
+    from core_spark.multimodal.wav import aiff_decode, wav_decode
 
-                _rate, _nch, bits, _total = flac_meta(raw)
-                pcm, fr = flac_decode(raw)
-                pcm = pcm.astype(np.int64)
-            elif raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
-                from core_spark.multimodal.wav import wav_decode
-
-                pcm, fr, bits = wav_decode(raw)
-            elif raw[:4] == b"FORM" and raw[8:12] in (b"AIFF", b"AIFC"):
-                from core_spark.multimodal.wav import aiff_decode
-
-                pcm, fr, bits = aiff_decode(raw)
-            else:
-                raise NotImplementedError(
-                    f"STUB: audio container with magic {raw[:4]!r} "
-                    "requires libsndfile/pyav (MP3 gets metadata only "
-                    "— PCM needs an MDCT decoder); pure-python real "
-                    "mode covers RIFF/WAV (PCM/float/G.711/ADPCM), "
-                    "AIFF/AIFF-C, and FLAC"
-                )
-            if bits > 16:
-                # shift to 16-bit scale so a 1 s 48 kHz stereo slice's
-                # energy stays exactly inside int64 (docstring bound)
-                pcm = pcm >> (bits - 16)
-            return pcm, fr
-
-        for pdf in batches:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf[payload_col]):
-                pcm, fr = pcm_of(bytes(b))
-                nf = pcm.shape[0]
-                per = max(1, (fr * frame_ms) // 1000)
-                for i in range(max(1, -(-nf // per))):
-                    sl = pcm[i * per : (i + 1) * per]
-                    rows.append(
-                        (
-                            int(doc_id),
-                            i,
-                            i * frame_ms,
-                            int(sl.shape[0]),
-                            int((sl * sl).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "offset_ms", "n_samples", "energy",
-                ],
+    def pcm_of(raw: bytes):
+        if raw[:4] == b"fLaC":
+            _rate, _nch, bits, _total = flac_meta(raw)
+            pcm, fr = flac_decode(raw)
+            pcm = pcm.astype(np.int64)
+        elif raw[:4] == b"RIFF" and raw[8:12] == b"WAVE":
+            pcm, fr, bits = wav_decode(raw)
+        elif raw[:4] == b"FORM" and raw[8:12] in (b"AIFF", b"AIFC"):
+            pcm, fr, bits = aiff_decode(raw)
+        else:
+            raise NotImplementedError(
+                f"STUB: audio container with magic {raw[:4]!r} "
+                "requires libsndfile/pyav (MP3 gets metadata only "
+                "— PCM needs an MDCT decoder); pure-python real "
+                "mode covers RIFF/WAV (PCM/float/G.711/ADPCM), "
+                "AIFF/AIFF-C, and FLAC"
             )
+        if bits > 16:
+            # shift to 16-bit scale so a 1 s 48 kHz stereo slice's
+            # energy stays exactly inside int64 (docstring bound)
+            pcm = pcm >> (bits - 16)
+        return pcm, fr
 
-    return _kernel(df, feats, AUDIO_FEATURE_SCHEMA, cols=("doc_id", payload_col))
+    def feats(doc_id, b):
+        pcm, fr = pcm_of(bytes(b))
+        nf = pcm.shape[0]
+        per = max(1, (fr * frame_ms) // 1000)
+        for i in range(max(1, -(-nf // per))):
+            sl = pcm[i * per : (i + 1) * per]
+            yield i, i * frame_ms, int(sl.shape[0]), int((sl * sl).sum())
+
+    return doc_kernel(df, feats, AUDIO_FEATURE_SCHEMA, col=payload_col)
 
 
 VIDEO_FRAME_SCHEMA = (
@@ -622,27 +595,19 @@ def attach_mp4_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ftyp+moov+mdat container built by multimodal/mp4.py — the decode
     stage downstream walks actual boxes, not a fake."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from core_spark.multimodal.mp4 import build_mp4
 
-        from core_spark.multimodal.mp4 import build_mp4
+    def build(text: str) -> bytes:
+        h = hashlib.md5(text.encode("utf-8")).hexdigest()
+        dur = 500 + int(h[0:8], 16) % 600000
+        w = 16 * (4 + int(h[8:12], 16) % 117)
+        ht = 16 * (3 + int(h[12:16], 16) % 65)
+        return build_mp4(
+            dur, video=(w, ht, "avc1"), audio="mp4a",
+            mdat=text.encode("utf-8")[:64],
+        )
 
-        def one(text: str) -> bytes:
-            h = hashlib.md5(text.encode("utf-8")).hexdigest()
-            dur = 500 + int(h[0:8], 16) % 600000
-            w = 16 * (4 + int(h[8:12], 16) % 117)
-            ht = 16 * (3 + int(h[12:16], 16) % 65)
-            return build_mp4(
-                dur, video=(w, ht, "avc1"), audio="mp4a",
-                mdat=text.encode("utf-8")[:64],
-            )
-
-        for pdf in batches:
-            yield from _payload_frames(
-                pdf["doc_id"], (one(t) for t in pdf[text_col])
-            )
-
-    return _kernel(docs, build, "doc_id long, payload binary", cols=("doc_id", text_col))
+    return payload_kernel(docs, build, text_col)
 
 
 AUDIO_SEGMENT_SCHEMA = (
@@ -661,29 +626,21 @@ def attach_mp3_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
     segment plan must track real frame sizes, not extrapolate from
     the first header."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from core_spark.multimodal.wav import build_mp3_frame
 
-        from core_spark.multimodal.wav import build_mp3_frame
-
-        def one(text: str) -> bytes:
-            h = hashlib.md5(text.encode("utf-8")).hexdigest()
-            n = 60 + int(h[0:4], 16) % 120
-            s0 = int(h[4:8], 16)
-            return b"".join(
-                build_mp3_frame(
-                    kbps=_MP3_FIXTURE_KBPS[(s0 + 7 * i) % 5],
-                    fill=i % 256,
-                )
-                for i in range(n)
+    def build(text: str) -> bytes:
+        h = hashlib.md5(text.encode("utf-8")).hexdigest()
+        n = 60 + int(h[0:4], 16) % 120
+        s0 = int(h[4:8], 16)
+        return b"".join(
+            build_mp3_frame(
+                kbps=_MP3_FIXTURE_KBPS[(s0 + 7 * i) % 5],
+                fill=i % 256,
             )
+            for i in range(n)
+        )
 
-        for pdf in batches:
-            yield from _payload_frames(
-                pdf["doc_id"], (one(t) for t in pdf[text_col])
-            )
-
-    return _kernel(docs, build, "doc_id long, payload binary", cols=("doc_id", text_col))
+    return payload_kernel(docs, build, text_col)
 
 
 def plan_audio_fetch(
@@ -695,28 +652,16 @@ def plan_audio_fetch(
     the audio twin of the keyframe ranged-GET plan. Executor-side
     mapInPandas fan-out; payload bytes never reach the JVM plan."""
 
-    def plan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from core_spark.multimodal.wav import mp3_segments
+    from core_spark.multimodal.wav import mp3_segments
 
-        for pdf in batches:
-            rows = []
-            for d, raw in zip(pdf["doc_id"], pdf[payload_col]):
-                for s in mp3_segments(bytes(raw), every_ms):
-                    rows.append(
-                        (
-                            int(d), s["seg_idx"], s["t_ms"], s["off"],
-                            s["n_bytes"], s["n_frames"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "seg_idx", "t_ms", "off", "n_bytes",
-                    "n_frames",
-                ],
+    def plan(doc_id, raw):
+        for s in mp3_segments(bytes(raw), every_ms):
+            yield (
+                s["seg_idx"], s["t_ms"], s["off"], s["n_bytes"],
+                s["n_frames"],
             )
 
-    return _kernel(df, plan, AUDIO_SEGMENT_SCHEMA, cols=("doc_id", payload_col))
+    return doc_kernel(df, plan, AUDIO_SEGMENT_SCHEMA, col=payload_col)
 
 
 AV_KEYFRAME_SCHEMA = (
@@ -736,29 +681,21 @@ def attach_mp4_stream_payload(
     parses (and whose mdat really holds the samples at the planned
     offsets — pinned by slicing in tests)."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from core_spark.multimodal.mp4 import build_mp4
 
-        from core_spark.multimodal.mp4 import build_mp4
+    def build(text: str) -> bytes:
+        h = hashlib.md5(text.encode("utf-8")).hexdigest()
+        n = 8 + int(h[0:4], 16) % 25
+        ks = 1 + int(h[4:6], 16) % 5
+        delta = 20 + int(h[6:8], 16) % 60
+        s0 = int(h[8:12], 16)
+        sizes = [64 + (s0 + 37 * i) % 191 for i in range(n)]
+        return build_mp4(
+            n * delta, video=(640, 360, "avc1"),
+            samples=(sizes, delta, ks),
+        )
 
-        def one(text: str) -> bytes:
-            h = hashlib.md5(text.encode("utf-8")).hexdigest()
-            n = 8 + int(h[0:4], 16) % 25
-            ks = 1 + int(h[4:6], 16) % 5
-            delta = 20 + int(h[6:8], 16) % 60
-            s0 = int(h[8:12], 16)
-            sizes = [64 + (s0 + 37 * i) % 191 for i in range(n)]
-            return build_mp4(
-                n * delta, video=(640, 360, "avc1"),
-                samples=(sizes, delta, ks),
-            )
-
-        for pdf in batches:
-            yield from _payload_frames(
-                pdf["doc_id"], (one(t) for t in pdf[text_col])
-            )
-
-    return _kernel(docs, build, "doc_id long, payload binary", cols=("doc_id", text_col))
+    return payload_kernel(docs, build, text_col)
 
 
 CAPTION_SCHEMA = (
@@ -774,23 +711,14 @@ def attach_vtt_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
     inline <b> tags, a NOTE block) — built by multimodal/vtt.py so
     a SQL oracle recomputes cue boundaries and timestamps."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from core_spark.multimodal.vtt import build_vtt_fixture
 
-        from core_spark.multimodal.vtt import build_vtt_fixture
+    def build(text: str) -> str:
+        return build_vtt_fixture(
+            text, hashlib.md5(text.encode("utf-8")).hexdigest()
+        )
 
-        for pdf in batches:
-            yield from _payload_frames(
-                pdf["doc_id"],
-                (
-                    build_vtt_fixture(
-                        t, hashlib.md5(t.encode("utf-8")).hexdigest()
-                    )
-                    for t in pdf[text_col]
-                ),
-            )
-
-    return _kernel(docs, build, "doc_id long, payload string", cols=("doc_id", text_col))
+    return payload_kernel(docs, build, text_col, "string")
 
 
 def extract_captions(
@@ -802,27 +730,13 @@ def extract_captions(
     mapInPandas; invalid blocks are skipped per the WebVTT spec,
     non-VTT payloads raise the named VttError."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from core_spark.multimodal.vtt import vtt_cues
+    from core_spark.multimodal.vtt import vtt_cues
 
-        for pdf in batches:
-            rows = []
-            for d, raw in zip(pdf["doc_id"], pdf[payload_col]):
-                for c in vtt_cues(raw):
-                    rows.append(
-                        (
-                            int(d), c["cue_idx"], c["t0_ms"],
-                            c["t1_ms"], c["text"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "cue_idx", "t0_ms", "t1_ms", "cue_text",
-                ],
-            )
+    def parse(doc_id, raw):
+        for c in vtt_cues(raw):
+            yield c["cue_idx"], c["t0_ms"], c["t1_ms"], c["text"]
 
-    return _kernel(df, parse, CAPTION_SCHEMA, cols=("doc_id", payload_col))
+    return doc_kernel(df, parse, CAPTION_SCHEMA, col=payload_col)
 
 
 AV_FRAGMENT_SCHEMA = (
@@ -841,33 +755,23 @@ def attach_fmp4_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
     and whose mdat really holds the samples at the planned offsets
     (pinned by slicing in tests)."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from core_spark.multimodal.mp4 import build_fmp4
 
-        from core_spark.multimodal.mp4 import build_fmp4
+    def build(text: str) -> bytes:
+        h = hashlib.md5(text.encode("utf-8")).hexdigest()
+        nf = 2 + int(h[0:2], 16) % 4
+        delta = 20 + int(h[2:4], 16) % 60
+        s0 = int(h[4:8], 16)
+        s1 = int(h[8:10], 16)
+        frags = []
+        g = 0
+        for j in range(nf):
+            k = 4 + (s1 + 11 * j) % 13
+            frags.append([64 + (s0 + 37 * (g + i)) % 191 for i in range(k)])
+            g += k
+        return build_fmp4(frags, delta=delta)
 
-        def one(text: str) -> bytes:
-            h = hashlib.md5(text.encode("utf-8")).hexdigest()
-            nf = 2 + int(h[0:2], 16) % 4
-            delta = 20 + int(h[2:4], 16) % 60
-            s0 = int(h[4:8], 16)
-            s1 = int(h[8:10], 16)
-            frags = []
-            g = 0
-            for j in range(nf):
-                k = 4 + (s1 + 11 * j) % 13
-                frags.append(
-                    [64 + (s0 + 37 * (g + i)) % 191 for i in range(k)]
-                )
-                g += k
-            return build_fmp4(frags, delta=delta)
-
-        for pdf in batches:
-            yield from _payload_frames(
-                pdf["doc_id"], (one(t) for t in pdf[text_col])
-            )
-
-    return _kernel(docs, build, "doc_id long, payload binary", cols=("doc_id", text_col))
+    return payload_kernel(docs, build, text_col)
 
 
 def plan_fragment_fetch(
@@ -881,28 +785,16 @@ def plan_fragment_fetch(
     through. Executor-side mapInPandas; payload bytes never reach
     the JVM plan."""
 
-    def plan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from core_spark.multimodal.mp4 import mp4_fragment_keyframes
+    from core_spark.multimodal.mp4 import mp4_fragment_keyframes
 
-        for pdf in batches:
-            rows = []
-            for d, raw in zip(pdf["doc_id"], pdf[payload_col]):
-                for kf in mp4_fragment_keyframes(bytes(raw)):
-                    rows.append(
-                        (
-                            int(d), kf["frag_seq"], kf["sample_idx"],
-                            kf["t_ms"], kf["off"], kf["size"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frag_seq", "sample_idx", "t_ms", "off",
-                    "size",
-                ],
+    def plan(doc_id, raw):
+        for kf in mp4_fragment_keyframes(bytes(raw)):
+            yield (
+                kf["frag_seq"], kf["sample_idx"], kf["t_ms"], kf["off"],
+                kf["size"],
             )
 
-    return _kernel(df, plan, AV_FRAGMENT_SCHEMA, cols=("doc_id", payload_col))
+    return doc_kernel(df, plan, AV_FRAGMENT_SCHEMA, col=payload_col)
 
 
 def plan_video_fetch(
@@ -916,28 +808,13 @@ def plan_video_fetch(
     the fan-out happens executor-side, exactly like frame
     sampling."""
 
-    def plan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from core_spark.multimodal.mp4 import mp4_keyframes
+    from core_spark.multimodal.mp4 import mp4_keyframes
 
-        for pdf in batches:
-            rows = []
-            for d, raw in zip(pdf["doc_id"], pdf[payload_col]):
-                for j, kf in enumerate(mp4_keyframes(bytes(raw))):
-                    rows.append(
-                        (
-                            int(d), j, kf["sample_idx"], kf["t_ms"],
-                            kf["off"], kf["size"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "kf_idx", "sample_idx", "t_ms", "off",
-                    "size",
-                ],
-            )
+    def plan(doc_id, raw):
+        for j, kf in enumerate(mp4_keyframes(bytes(raw))):
+            yield j, kf["sample_idx"], kf["t_ms"], kf["off"], kf["size"]
 
-    return _kernel(df, plan, AV_KEYFRAME_SCHEMA, cols=("doc_id", payload_col))
+    return doc_kernel(df, plan, AV_KEYFRAME_SCHEMA, col=payload_col)
 
 
 def decode_av_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -946,29 +823,16 @@ def decode_av_meta(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     dimensions, per-modality codec fourcc. The video twin of the MP3
     header scan: every gate field without decoding a frame."""
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from core_spark.multimodal.mp4 import mp4_meta
+    from core_spark.multimodal.mp4 import mp4_meta
 
-        for pdf in batches:
-            rows = []
-            for d, raw in zip(pdf["doc_id"], pdf[payload_col]):
-                m = mp4_meta(bytes(raw))
-                rows.append(
-                    (
-                        int(d), m["brand"], m["duration_ms"], m["width"],
-                        m["height"], m["n_tracks"], m["video_codec"],
-                        m["audio_codec"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "brand", "duration_ms", "width", "height",
-                    "n_tracks", "video_codec", "audio_codec",
-                ],
-            )
+    def decode(doc_id, raw):
+        m = mp4_meta(bytes(raw))
+        yield (
+            m["brand"], m["duration_ms"], m["width"], m["height"],
+            m["n_tracks"], m["video_codec"], m["audio_codec"],
+        )
 
-    return _kernel(df, decode, AV_META_SCHEMA, cols=("doc_id", payload_col))
+    return doc_kernel(df, decode, AV_META_SCHEMA, col=payload_col)
 
 
 def sample_video_frames(
@@ -991,76 +855,52 @@ def sample_video_frames(
     arithmetic a SQL oracle reproduces.
     """
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from core_spark.multimodal.gif import gif_frames
 
-        import numpy as np
+    def frame_stats(arr):
+        luma = 0.299 * arr[..., 0] + 0.587 * arr[..., 1] + 0.114 * arr[..., 2]
+        return (arr.shape[1], arr.shape[0], float(luma.mean()))
 
-        def gif_samples(doc_id: int, raw: bytes):
-            from core_spark.multimodal.gif import gif_frames
+    def gif_samples(raw: bytes):
+        t = 0
+        next_t = 0
+        fi = 0
+        first = None
+        got = False
+        for delay, arr in gif_frames(raw):
+            if first is None:
+                first = arr
+            while next_t < t + delay:
+                got = True
+                yield (fi, next_t) + frame_stats(arr)
+                next_t += every_ms
+            t += delay
+            fi += 1
+        if not got:  # zero-duration animation: sample frame 0
+            yield (0, 0) + frame_stats(first)
 
-            t = 0
-            next_t = 0
-            fi = 0
-            first = None
-            got = False
-            for delay, arr in gif_frames(raw):
-                if first is None:
-                    first = arr
-                while next_t < t + delay:
-                    got = True
-                    yield (doc_id, fi, next_t) + frame_stats(arr)
-                    next_t += every_ms
-                t += delay
-                fi += 1
-            if not got:  # zero-duration animation: sample frame 0
-                yield (doc_id, 0, 0) + frame_stats(first)
-
-        def frame_stats(arr):
-            luma = (
-                0.299 * arr[..., 0] + 0.587 * arr[..., 1] + 0.114 * arr[..., 2]
-            )
-            return (arr.shape[1], arr.shape[0], float(luma.mean()))
-
-        for pdf in batches:
-            rows = []
-            for doc_id, b in zip(pdf["doc_id"], pdf[payload_col]):
-                raw = bytes(b)
-                if fake:
-                    hex0 = hashlib.md5(raw).hexdigest()
-                    w = 64 + int(hex0[0:4], 16) % 512
-                    h = 64 + int(hex0[8:12], 16) % 512
-                    for fi in range(max(1, len(raw) // 200)):
-                        hx = hashlib.md5(
-                            raw + b":" + str(fi).encode()
-                        ).hexdigest()
-                        rows.append(
-                            (
-                                int(doc_id),
-                                fi,
-                                fi * every_ms,
-                                w,
-                                h,
-                                (int(hx[0:8], 16) % 256000) / 1000.0,
-                            )
-                        )
-                elif raw[:6] in (b"GIF87a", b"GIF89a"):
-                    rows.extend(gif_samples(int(doc_id), raw))
-                else:
-                    raise NotImplementedError(
-                        f"STUB: video container with magic {raw[:4]!r} "
-                        "requires pyav; pure-python real mode plays "
-                        "animated GIF"
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_idx", "t_ms", "width", "height",
-                    "mean_luma",
-                ],
+    def sample(doc_id, b):
+        raw = bytes(b)
+        if fake:
+            hex0 = hashlib.md5(raw).hexdigest()
+            w = 64 + int(hex0[0:4], 16) % 512
+            h = 64 + int(hex0[8:12], 16) % 512
+            for fi in range(max(1, len(raw) // 200)):
+                hx = hashlib.md5(raw + b":" + str(fi).encode()).hexdigest()
+                yield (
+                    fi, fi * every_ms, w, h,
+                    (int(hx[0:8], 16) % 256000) / 1000.0,
+                )
+        elif raw[:6] in (b"GIF87a", b"GIF89a"):
+            yield from gif_samples(raw)
+        else:
+            raise NotImplementedError(
+                f"STUB: video container with magic {raw[:4]!r} "
+                "requires pyav; pure-python real mode plays "
+                "animated GIF"
             )
 
-    return _kernel(df, sample, VIDEO_FRAME_SCHEMA, cols=("doc_id", payload_col))
+    return doc_kernel(df, sample, VIDEO_FRAME_SCHEMA, col=payload_col)
 
 
 PDF_PAGE_SCHEMA = (
@@ -1094,42 +934,34 @@ def attach_pdf_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
     Extraction output is form-, font- and encryption-independent by
     construction (the cross-form test pins)."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    from core_spark.multimodal.pdf import build_pdf_fixture
 
-        from core_spark.multimodal.pdf import build_pdf_fixture
+    def build(t: str) -> bytes:
+        digest = hashlib.md5(t.encode("utf-8")).hexdigest()
+        kind = "stream" if int(digest[5], 16) % 2 else "classic"
+        if int(digest[6], 16) % 2:
+            fnt = "cid"
+        elif int(digest[7], 16) % 2:
+            fnt = "diffs"
+        else:
+            fnt = "simple"
+        enc = {1: "aes-128", 2: "rc4-40", 3: "rc4-128"}.get(
+            int(digest[8], 16) % 4
+        )
+        if enc is None and int(digest[9], 16) % 2:
+            enc = "aes-256"  # half the remaining quarter: PDF 2.0
+        cf = {
+            8: "a85-flate", 9: "a85-flate",
+            10: "lzw", 11: "lzw",
+            12: "rle", 13: "rle",
+            14: "hex", 15: "hex",
+        }.get(int(digest[10], 16), "flate")
+        return build_pdf_fixture(
+            t, digest, xref_kind=kind, font=fnt, encrypt=enc,
+            content_filter=cf,
+        )
 
-        def one(t: str) -> bytes:
-            digest = hashlib.md5(t.encode("utf-8")).hexdigest()
-            kind = "stream" if int(digest[5], 16) % 2 else "classic"
-            if int(digest[6], 16) % 2:
-                fnt = "cid"
-            elif int(digest[7], 16) % 2:
-                fnt = "diffs"
-            else:
-                fnt = "simple"
-            enc = {1: "aes-128", 2: "rc4-40", 3: "rc4-128"}.get(
-                int(digest[8], 16) % 4
-            )
-            if enc is None and int(digest[9], 16) % 2:
-                enc = "aes-256"  # half the remaining quarter: PDF 2.0
-            cf = {
-                8: "a85-flate", 9: "a85-flate",
-                10: "lzw", 11: "lzw",
-                12: "rle", 13: "rle",
-                14: "hex", 15: "hex",
-            }.get(int(digest[10], 16), "flate")
-            return build_pdf_fixture(
-                t, digest, xref_kind=kind, font=fnt, encrypt=enc,
-                content_filter=cf,
-            )
-
-        for pdf in batches:
-            yield from _payload_frames(
-                pdf["doc_id"], (one(t) for t in pdf[text_col])
-            )
-
-    return _kernel(docs, build, "doc_id long, payload binary", cols=("doc_id", text_col))
+    return payload_kernel(docs, build, text_col)
 
 
 def extract_pdf_pages(
@@ -1141,28 +973,13 @@ def extract_pdf_pages(
     CreationDate so a curation gate can filter on both. Executor-side
     mapInPandas; non-PDF payloads raise the named PdfError."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from core_spark.multimodal.pdf import pdf_extract
+    from core_spark.multimodal.pdf import pdf_extract
 
-        for pdf in batches:
-            rows = []
-            for d, b in zip(pdf["doc_id"], pdf[payload_col]):
-                raw = bytes(b)
-                # one reader walk serves meta + pages (r13 opt:
-                # xref/encryption setup ran twice before)
-                meta, pages = pdf_extract(raw)
-                for i, pg in enumerate(pages):
-                    rows.append(
-                        (
-                            int(d), i, len(pages), pg, meta["created"],
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "page_idx", "page_count", "page_text",
-                    "created",
-                ],
-            )
+    def parse(doc_id, b):
+        # one reader walk serves meta + pages (r13 opt: xref/encryption
+        # setup ran twice before)
+        meta, pages = pdf_extract(bytes(b))
+        for i, pg in enumerate(pages):
+            yield i, len(pages), pg, meta["created"]
 
-    return _kernel(df, parse, PDF_PAGE_SCHEMA, cols=("doc_id", payload_col))
+    return doc_kernel(df, parse, PDF_PAGE_SCHEMA, col=payload_col)

@@ -40,38 +40,31 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 20,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Resolve undirected pair edges into components.
 
     Output: (doc_id, cluster_id) for every node that appears in a
     pair; cluster_id = min node id of the component.
 
-    `shuffle_partitions` CAPS the LABEL LOOP's shuffle width (restored
-    afterwards): every round materializes eagerly, so a caller
-    session's default (200) costs 200 tasks x rounds x 3 jobs even on
-    a small pair graph. The actual width is derived from the MEASURED
-    edge count (~64k edges per partition, floor 1) riding the count()
-    that materializes the pair pipeline anyway — scale-adaptive by
-    construction: a 480-edge sf0.1 dup graph loops on 1 task per
-    stage (r13 opt: 16 fixed-width tasks per stage were pure
-    scheduling overhead there), a billion-edge graph at 100 TB gets
-    the caller's full cap. Edge generation (the upstream pair
-    pipeline) runs BEFORE the pin at the caller's full width — it
-    scans the corpus and wants the parallelism the label rounds
-    don't.
+    The LABEL LOOP's shuffle width is derived from the MEASURED edge
+    count (~64k edges per partition, floor 1) riding the count() that
+    materializes the pair pipeline anyway, capped at the session's
+    `spark.sql.shuffle.partitions`: every round materializes eagerly,
+    so a fixed wide loop costs width x rounds x 3 tasks even on a
+    small pair graph. Scale-adaptive by construction: a 480-edge
+    sf0.1 dup graph loops on 1 task per stage (r13 opt: 16
+    fixed-width tasks per stage were pure scheduling overhead
+    there), a billion-edge graph at 100 TB gets the session's full
+    width. Edge generation (the upstream pair pipeline) runs at the
+    session's full width — it scans the corpus and wants the
+    parallelism the label rounds don't.
     """
     fwd = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     edges = fwd.unionByName(
         fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).distinct()
 
-    spark = pairs.sparkSession
-    cap = (
-        shuffle_partitions
-        if shuffle_partitions is not None
-        else int(spark.conf.get("spark.sql.shuffle.partitions"))
-    )
+    cap = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # Materialize the upstream pair pipeline at the caller's full
     # width and measure it; the loop width follows the data.
     edges0 = edges.persist()

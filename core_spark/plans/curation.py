@@ -339,7 +339,7 @@ def q_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = verify_jaccard(cand, d1, shingles=sh1).filter(
         F.col("inter") * 10 >= F.col("uni") * 7
     )
-    cc = connected_components(pairs, shuffle_partitions=16)
+    cc = connected_components(pairs)
     drop = cc.filter(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
     d2 = d1.join(drop, "doc_id", "left_anti")
     t = d2.select("doc_id", F.split("text", " ").alias("toks"))

@@ -221,7 +221,7 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = _minhash_dup_pairs(docs)
-    return connected_components(pairs, shuffle_partitions=16).orderBy("doc_id")
+    return connected_components(pairs).orderBy("doc_id")
 
 
 # ------------------------------------------------------- dup canonicals
@@ -283,7 +283,7 @@ def q_dup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = _minhash_dup_pairs(docs)
-    members = connected_components(pairs, shuffle_partitions=16)
+    members = connected_components(pairs)
     scored = members.join(
         docs.select("doc_id", "n_chars"), "doc_id"
     ).withColumn(

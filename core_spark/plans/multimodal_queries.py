@@ -21,7 +21,7 @@ from core_spark.multimodal import (
     plan_fragment_fetch,
     plan_video_fetch,
 )
-from core_spark.multimodal.columns import doc_kernel
+from core_spark.multimodal.columns import doc_kernel, payload_kernel
 from core_spark.plans.registry import query
 
 
@@ -106,9 +106,10 @@ def q_bitmap_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-derived) with an APP1 ``Exif\\0\\0`` TIFF stream spliced
     where cameras write it; byte order alternates II/MM by hash so
     BOTH endiannesses run corpus-wide; all offsets are
-    TIFF-relative, exactly the trap naive parsers fall into. The
-    payload crosses Arrow as opaque binary and a second kernel walks
-    JPEG segments → APP1 → IFD0 → SubIFD back to typed fields. The
+    TIFF-relative, exactly the trap naive parsers fall into. A
+    second kernel, fused with the builder into one MapInPandas stage
+    so the JPEG bytes stay in the Python worker, walks JPEG segments
+    → APP1 → IFD0 → SubIFD back to typed fields. The
     oracle recomputes every field by integer/string arithmetic from
     the same md5, never seeing the bytes.
 
@@ -116,95 +117,59 @@ def q_bitmap_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
     presentation sort; payload bytes never move. At 100 TB this is
     the metadata extraction that runs at fetch time and writes the
     typed-metadata journal the gates then filter JVM-side."""
-    import pandas as pd
+    import numpy as np
+
+    from core_spark.multimodal.exif import (
+        attach_exif_app1,
+        build_tiff_exif,
+        exif_from_jpeg,
+    )
+    from core_spark.multimodal.jpeg import jpeg_encode
 
     docs = spread_ranged(load_table(spark, sf_dir, "documents"), "doc_id")
 
-    def attach(batches):
-        import hashlib
-
-        import numpy as np
-
-        from core_spark.multimodal.exif import (
-            attach_exif_app1,
-            build_tiff_exif,
+    def attach(text):
+        h = hashlib.md5(text.encode("utf-8")).hexdigest()
+        px0 = int(h[21:23], 16)
+        img = ((np.arange(64).reshape(8, 8) * 5 + px0) % 256)
+        jp = jpeg_encode(img.astype(np.uint8))
+        dt = (
+            f"{2018 + int(h[10], 16) % 8:04d}:"
+            f"{1 + int(h[11], 16) % 12:02d}:"
+            f"{1 + int(h[12], 16) % 28:02d} "
+            f"{int(h[13], 16) % 24:02d}:"
+            f"{int(h[14:16], 16) % 60:02d}:"
+            f"{int(h[16:18], 16) % 60:02d}"
         )
-        from core_spark.multimodal.jpeg import jpeg_encode
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                px0 = int(h[21:23], 16)
-                img = ((np.arange(64).reshape(8, 8) * 5 + px0) % 256)
-                jp = jpeg_encode(img.astype(np.uint8))
-                dt = (
-                    f"{2018 + int(h[10], 16) % 8:04d}:"
-                    f"{1 + int(h[11], 16) % 12:02d}:"
-                    f"{1 + int(h[12], 16) % 28:02d} "
-                    f"{int(h[13], 16) % 24:02d}:"
-                    f"{int(h[14:16], 16) % 60:02d}:"
-                    f"{int(h[16:18], 16) % 60:02d}"
-                )
-                tiff = build_tiff_exif(
-                    "II" if int(h[0], 16) % 2 == 0 else "MM",
-                    640 + int(h[1:3], 16),
-                    480 + int(h[3:5], 16),
-                    1 + int(h[5], 16) % 8,
-                    "Cam" + h[6:8],
-                    "M-" + h[8:10],
-                    dt,
-                    (1, 30 + int(h[18:20], 16)),
-                    100 * (1 + int(h[20], 16) % 16),
-                )
-                rows.append((int(doc_id), attach_exif_app1(jp, tiff)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    def walk(batches):
-        from core_spark.multimodal.exif import exif_from_jpeg
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                m = exif_from_jpeg(bytes(payload))
-                rows.append(
-                    (
-                        int(doc_id),
-                        m["byte_order"],
-                        m["width"],
-                        m["height"],
-                        m["orientation"],
-                        m["make"],
-                        m["model"],
-                        m["datetime"],
-                        m["exposure"][1],
-                        m["iso"],
-                        m["orientation"] >= 5,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "byte_order", "width", "height",
-                    "orientation", "make", "model", "dt", "exp_den",
-                    "iso", "needs_transpose",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .mapInPandas(attach, schema="doc_id long, payload binary")
-        .mapInPandas(
-            walk,
-            schema=(
-                "doc_id long, byte_order string, width long,"
-                " height long, orientation long, make string,"
-                " model string, dt string, exp_den long, iso long,"
-                " needs_transpose boolean"
-            ),
+        tiff = build_tiff_exif(
+            "II" if int(h[0], 16) % 2 == 0 else "MM",
+            640 + int(h[1:3], 16),
+            480 + int(h[3:5], 16),
+            1 + int(h[5], 16) % 8,
+            "Cam" + h[6:8],
+            "M-" + h[8:10],
+            dt,
+            (1, 30 + int(h[18:20], 16)),
+            100 * (1 + int(h[20], 16) % 16),
         )
-        .sortWithinPartitions("doc_id")
-    )
+        return attach_exif_app1(jp, tiff)
+
+    def walk(doc_id, payload):
+        m = exif_from_jpeg(bytes(payload))
+        yield (
+            m["byte_order"], m["width"], m["height"], m["orientation"],
+            m["make"], m["model"], m["datetime"], m["exposure"][1],
+            m["iso"], m["orientation"] >= 5,
+        )
+
+    return doc_kernel(
+        payload_kernel(docs, attach),
+        walk,
+        "doc_id long, byte_order string, width long, height long,"
+        " orientation long, make string, model string, dt string,"
+        " exp_den long, iso long, needs_transpose boolean",
+        col="payload",
+    ).sortWithinPartitions("doc_id")
 
 
 @query(
@@ -463,80 +428,51 @@ def _phash_hashes(spark, sf_dir: str, heavy: bool):
     2, touching EVERY pooled row — up to 16 flipped bits across all
     four bands, so banding AND the hamming<=6 verify can genuinely
     miss (the audit's subject)."""
-    import pandas as pd
+    import numpy as np
+
+    from core_spark.multimodal.png import png_decode, png_encode
 
     docs = load_table(spark, sf_dir, "documents")
     n_corpus = docs.count()  # one narrow agg, house auto-knob norm
     G = max(64, n_corpus // 8)
 
-    def attach(batches):
-        import hashlib
+    def attach(text):
+        h = hashlib.md5(text.encode("utf-8")).hexdigest()
+        g = int(h[0:6], 16) % G
+        r = np.arange(16, dtype=np.int64)[:, None]
+        c = np.arange(18, dtype=np.int64)[None, :]
+        a = ((g + 1) * (r * 18 + c + 1)) % 65521
+        img = (a * a) % 251
+        cls = int(h[6], 16) % 4
+        r0 = int(h[7], 16) % 16
+        c0 = int(h[8:10], 16) % 18
+        if cls == 0:
+            img[r0, c0] = (img[r0, c0] + 40) % 256
+        elif cls == 1 and heavy:
+            for p in range(8):
+                rp, cp = (r0 + 2 * p) % 16, (c0 + 5 * p) % 18
+                img[rp, cp] = (img[rp, cp] + 100) % 256
+        return png_encode(img.astype(np.uint8))
 
-        import numpy as np
+    k = np.arange(64) % 16
 
-        from core_spark.multimodal.png import png_encode
+    def dhash(doc_id, payload):
+        img = png_decode(bytes(payload))[:, :, 0].astype(np.int64)
+        pool = (
+            img[0::2, 0::2] + img[0::2, 1::2]
+            + img[1::2, 0::2] + img[1::2, 1::2]
+        ) // 4  # (8, 9)
+        bits = (pool[:, 1:] > pool[:, :-1]).astype(np.int64).reshape(64)
+        yield tuple(
+            int(np.sum(bits[16 * b : 16 * b + 16] << k[16 * b : 16 * b + 16]))
+            for b in range(4)
+        )
 
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                g = int(h[0:6], 16) % G
-                r = np.arange(16, dtype=np.int64)[:, None]
-                c = np.arange(18, dtype=np.int64)[None, :]
-                a = ((g + 1) * (r * 18 + c + 1)) % 65521
-                img = (a * a) % 251
-                cls = int(h[6], 16) % 4
-                r0 = int(h[7], 16) % 16
-                c0 = int(h[8:10], 16) % 18
-                if cls == 0:
-                    img[r0, c0] = (img[r0, c0] + 40) % 256
-                elif cls == 1 and heavy:
-                    for p in range(8):
-                        rp, cp = (r0 + 2 * p) % 16, (c0 + 5 * p) % 18
-                        img[rp, cp] = (img[rp, cp] + 100) % 256
-                rows.append(
-                    (int(doc_id), png_encode(img.astype(np.uint8)))
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    def dhash(batches):
-        import numpy as np
-
-        from core_spark.multimodal.png import png_decode
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                img = png_decode(bytes(payload))[:, :, 0].astype(
-                    np.int64
-                )
-                pool = (
-                    img[0::2, 0::2] + img[0::2, 1::2]
-                    + img[1::2, 0::2] + img[1::2, 1::2]
-                ) // 4  # (8, 9)
-                bits = (pool[:, 1:] > pool[:, :-1]).astype(np.int64)
-                k = np.arange(64).reshape(8, 8)
-                bands = [
-                    int(np.sum(bits.reshape(64)[16 * b : 16 * b + 16]
-                               << (k.reshape(64)[16 * b : 16 * b + 16]
-                                   % 16)))
-                    for b in range(4)
-                ]
-                rows.append((int(doc_id), *bands))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "b0", "b1", "b2", "b3"]
-            )
-
-    from core_spark.multimodal.columns import _kernel
-
-    hashes = _kernel(
-        _kernel(
-            spread(docs.select("doc_id", "text")),
-            attach,
-            "doc_id long, payload binary",
-        ),
+    hashes = doc_kernel(
+        payload_kernel(spread(docs.select("doc_id", "text")), attach),
         dhash,
         "doc_id long, b0 long, b1 long, b2 long, b3 long",
+        col="payload",
     )
     return hashes, G
 
@@ -647,8 +583,8 @@ def q_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     (only speech segments are worth ASR compute). Each document
     builds a REAL RIFF/WAVE payload (PCM16 mono 8 kHz; an md5-picked
     alternation of sawtooth "speech" bursts and near-silence noise
-    floor), crosses Arrow as opaque binary, and the decode kernel
-    plays it back through wav_decode into per-20 ms-frame integer
+    floor), and the decode kernel, fused with the builder into one
+    MapInPandas stage, plays it back through wav_decode into per-20 ms-frame integer
     energies. Everything after the codec is JVM-side: threshold,
     one-frame hangover (speech extends one frame past the last hot
     frame — the standard VAD release), gaps-and-islands
@@ -665,65 +601,42 @@ def q_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning), over frame rows that are tiny next to the payload
     bytes, which never move. At 100 TB the segments table IS the ASR
     work queue: byte ranges of speech, fetched directly."""
-    import pandas as pd
+    import numpy as np
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from core_spark.multimodal.wav import WAVE_PCM, build_wav, wav_decode
+
     docs = spread(load_table(spark, sf_dir, "documents"))
 
-    def attach(batches):
-        import hashlib
+    def attach(text):
+        h = hashlib.md5(text.encode("utf-8")).hexdigest()
+        runlen = 2 + int(h[0], 16) % 3
+        nframes = 20 + int(h[1], 16) % 10
+        amp = 2000 + int(h[2], 16) * 100
+        k = 3 + int(h[3], 16) % 5
+        i = np.arange(nframes * 160, dtype=np.int64)
+        fr = i // 160
+        voiced = (fr // runlen) % 2 == 0
+        x = np.where(
+            voiced,
+            (i * k) % (2 * amp) - amp,
+            (i * 7) % 21 - 10,
+        )
+        return build_wav(WAVE_PCM, 8000, 1, 16, x.astype("<i2").tobytes())
 
-        import numpy as np
+    def energies(doc_id, payload):
+        pcm, rate, bits = wav_decode(bytes(payload))
+        assert rate == 8000 and bits == 16
+        frames = pcm[:, 0].reshape(-1, 160)
+        for fr, en in enumerate((frames * frames).sum(axis=1)):
+            yield fr, int(en)
 
-        from core_spark.multimodal.wav import WAVE_PCM, build_wav
-
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                h = hashlib.md5(text.encode("utf-8")).hexdigest()
-                runlen = 2 + int(h[0], 16) % 3
-                nframes = 20 + int(h[1], 16) % 10
-                amp = 2000 + int(h[2], 16) * 100
-                k = 3 + int(h[3], 16) % 5
-                i = np.arange(nframes * 160, dtype=np.int64)
-                fr = i // 160
-                voiced = (fr // runlen) % 2 == 0
-                x = np.where(
-                    voiced,
-                    (i * k) % (2 * amp) - amp,
-                    (i * 7) % 21 - 10,
-                )
-                raw = build_wav(
-                    WAVE_PCM, 8000, 1, 16,
-                    x.astype("<i2").tobytes(),
-                )
-                rows.append((int(doc_id), raw))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    def energies(batches):
-        from core_spark.multimodal.wav import wav_decode
-
-        for pdf in batches:
-            out_doc, out_fr, out_en = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                pcm, rate, bits = wav_decode(bytes(payload))
-                assert rate == 8000 and bits == 16
-                frames = pcm[:, 0].reshape(-1, 160)
-                en = (frames * frames).sum(axis=1)
-                n = len(en)
-                out_doc.extend([int(doc_id)] * n)
-                out_fr.extend(range(n))
-                out_en.extend(int(v) for v in en)
-            yield pd.DataFrame(
-                {"doc_id": out_doc, "fr": out_fr, "energy": out_en}
-            )
-
-    wav = docs.select("doc_id", "text").mapInPandas(
-        attach, schema="doc_id long, payload binary"
-    )
-    per_frame = wav.mapInPandas(
-        energies, schema="doc_id long, fr long, energy long"
+    per_frame = doc_kernel(
+        payload_kernel(docs, attach),
+        energies,
+        "doc_id long, fr long, energy long",
+        col="payload",
     )
 
     w = Window.partitionBy("doc_id").orderBy("fr")

@@ -44,6 +44,7 @@ every split decodes and parses independently.
 
 from __future__ import annotations
 
+import gzip
 import lzma
 import os
 import struct
@@ -299,6 +300,37 @@ def gz_split_plan(path: str) -> list[dict]:
     return out
 
 
+def split_plan(path: str, fmt: str) -> list[tuple]:
+    """A codec fragment's split plan as (c_off, c_size, d_size)
+    triples, by container format."""
+    planners = {
+        "jsonl.zst": zst_split_plan,
+        "jsonl.xz": xz_split_plan,
+        "jsonl.gz": gz_split_plan,
+    }
+    if fmt not in planners:
+        raise ValueError(f"unknown codec fragment format {fmt!r}")
+    return [(p["c_off"], p["c_size"], p["d_size"]) for p in planners[fmt](path)]
+
+
+def decode_chunk(raw: bytes, fmt: str, d_size: int) -> bytes:
+    """Decode one planned chunk with the native codec; a decoded size
+    other than the plan's raises (a mis-planned split must never
+    serve wrong rows)."""
+    if fmt == "jsonl.zst":
+        data = pa.Codec("zstd").decompress(
+            raw, decompressed_size=d_size, asbytes=True
+        )
+    elif fmt == "jsonl.gz":
+        # one whole member: stdlib verifies CRC32 + ISIZE
+        data = gzip.decompress(raw)
+    else:
+        data = lzma.decompress(raw, format=lzma.FORMAT_XZ)
+    if len(data) != d_size:
+        raise ValueError("chunk decoded size disagrees with the plan")
+    return data
+
+
 def read_codec_fragment(spark, path: str, fmt: str, schema_json: str):
     """One codec fragment → DataFrame: tail-planned splits fan out to
     executors; each split ranged-reads its chunk, decodes it with the
@@ -306,23 +338,7 @@ def read_codec_fragment(spark, path: str, fmt: str, schema_json: str):
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    if fmt == "jsonl.zst":
-        plan = [
-            (p["c_off"], p["c_size"], p["d_size"])
-            for p in zst_split_plan(path)
-        ]
-    elif fmt == "jsonl.xz":
-        plan = [
-            (p["c_off"], p["c_size"], p["d_size"])
-            for p in xz_split_plan(path)
-        ]
-    elif fmt == "jsonl.gz":
-        plan = [
-            (p["c_off"], p["c_size"], p["d_size"])
-            for p in gz_split_plan(path)
-        ]
-    else:
-        raise ValueError(f"unknown codec fragment format {fmt!r}")
+    plan = split_plan(path, fmt)
     if not schema_json:
         raise ValueError(
             "codec fragment lacks its manifest schema (byte-opaque "
@@ -343,31 +359,14 @@ def read_codec_fragment(spark, path: str, fmt: str, schema_json: str):
     )
 
     def decode(batches):
-        import gzip as _gzip
-        import lzma as _lzma
-
         import pandas as pd
-        import pyarrow as _pa
 
-        codec = _pa.Codec("zstd") if fmt == "jsonl.zst" else None
         for b in batches:
             for c_off, c_size, d_size in zip(
                 b["c_off"], b["c_size"], b["d_size"]
             ):
                 raw = _ranged(path, int(c_off), int(c_size))
-                if fmt == "jsonl.zst":
-                    data = codec.decompress(
-                        raw, decompressed_size=int(d_size), asbytes=True
-                    )
-                elif fmt == "jsonl.gz":
-                    # one whole member: stdlib verifies CRC32 + ISIZE
-                    data = _gzip.decompress(raw)
-                else:
-                    data = _lzma.decompress(raw, format=_lzma.FORMAT_XZ)
-                if len(data) != int(d_size):
-                    raise ValueError(
-                        "chunk decoded size disagrees with the plan"
-                    )
+                data = decode_chunk(raw, fmt, int(d_size))
                 lines = data.decode("utf-8").splitlines()
                 yield pd.DataFrame({"value": lines})
 

@@ -20,20 +20,23 @@ Built on the Spark 4 Python Data Source API:
 - byte-stream codec fragments (jsonl.zst/.xz/.gz — gazette's
   codec-suffixed files, .gz the default codec) serve through BOTH
   paths (r11): the DRIVER plans each fragment's chunk splits from
-  tail/member metadata (core_spark importable there), executors
-  ranged-read + decode chunks with stdlib gzip/lzma or pyarrow's
-  zstd and type columns by the reader's fixed arrow schema — older
+  tail/member metadata, executors ranged-read + decode chunks, and
+  columns are typed by the reader's fixed arrow schema — older
   fragments serve typed NULLS for columns the journal gained later
-  (e.g. a shard's `_batch`). The schema rides the manifest
+  (e.g. a shard's `_batch`). The split planner and the chunk decoder
+  are `codec_fragments.split_plan` / `decode_chunk`, the same ones
+  the batch `Journal.read` path uses. The schema rides the manifest
   (byte-opaque journal), served all-nullable for exactly that
   reason. This closes the gazette default-codec loop both ways: a
   shard COMMITS gz fragments (ShardConfig.out_fmt) and a second
   consumer TAILS them read-committed.
 
 Everything is defined inside the `journal_datasource()` factory so
-cloudpickle ships the classes BY VALUE — executors never import
-core_spark (the factory is self-contained: stdlib + pyarrow +
-pyspark). Register per session:
+cloudpickle ships the classes BY VALUE. The codec path references
+`core_spark.sources.codec_fragments` by name, so executors must be
+able to import `core_spark` — as the batch codec read already
+requires; `__spark_entry__.py` exports PYTHONPATH for this. Register
+per session:
 
     spark.dataSource.register(journal_datasource())
     df = (spark.read.format("journal")
@@ -68,6 +71,12 @@ def journal_datasource():
         InputPartition,
     )
 
+    from core_spark.sources.codec_fragments import (
+        CODEC_FMTS,
+        decode_chunk,
+        split_plan,
+    )
+
     def _latest_manifest(journal_root: str) -> dict:
         mdir = os.path.join(journal_root, "_manifest")
         versions = [
@@ -82,7 +91,6 @@ def journal_datasource():
 
     _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
-    _CODEC_FMTS = ("jsonl.zst", "jsonl.xz", "jsonl.gz")
 
     def _fragment_files(journal_root: str, frag: dict) -> list[tuple]:
         """List a fragment's parquet files as (path, partition-values):
@@ -93,7 +101,7 @@ def journal_datasource():
         from urllib.parse import unquote
 
         base = os.path.join(journal_root, frag["path"])
-        if frag.get("fmt", "parquet") in _CODEC_FMTS:
+        if frag.get("fmt", "parquet") in CODEC_FMTS:
             return [(base, {})]
         out = []
         for dirpath, _dirs, files in os.walk(base):
@@ -200,31 +208,16 @@ def journal_datasource():
 
     def _frag_partition(journal_root, frag, begin, end, ptypes):
         """Build one FragPartition; codec fragments get their split
-        plan here, on the DRIVER (core_spark importable), so the
-        executor-side read stays self-contained."""
+        plan here, on the DRIVER, so executors only ranged-read and
+        decode."""
         files = _fragment_files(journal_root, frag)
         fmt = frag.get("fmt", "parquet")
-        if fmt not in _CODEC_FMTS:
+        if fmt not in CODEC_FMTS:
             return FragPartition(files, begin, end, ptypes)
         (path, _pv), = files
         chunks = _plan_cache.get(path)
         if chunks is None:
-            from core_spark.sources.codec_fragments import (
-                gz_split_plan,
-                xz_split_plan,
-                zst_split_plan,
-            )
-
-            plan_fn = {
-                "jsonl.zst": zst_split_plan,
-                "jsonl.xz": xz_split_plan,
-                "jsonl.gz": gz_split_plan,
-            }[fmt]
-            chunks = [
-                (p["c_off"], p["c_size"], p["d_size"])
-                for p in plan_fn(path)
-            ]
-            _plan_cache[path] = chunks
+            chunks = _plan_cache[path] = split_plan(path, fmt)
         return FragPartition(
             files, begin, end, ptypes, fmt=fmt,
             schema_json=(frag.get("meta") or {}).get("schema_json"),
@@ -249,9 +242,7 @@ def journal_datasource():
         columns mid-history — e.g. a shard's _batch — and an older
         fragment must serve typed NULLS for them, not strings); the
         fragment's manifest schema gates the scalar-only contract."""
-        import gzip as _gzip
         import json as _json
-        import lzma as _lzma
 
         import pyarrow as pa
 
@@ -274,20 +265,11 @@ def journal_datasource():
             for n in field_names
             if arrow_schema.get_field_index(n) >= 0
         }
-        codec = pa.Codec("zstd") if part.fmt == "jsonl.zst" else None
         (path, _pv), = part.files
         with open(path, "rb") as fh:
             for c_off, c_size, d_size in part.chunks:
                 fh.seek(c_off)
-                raw = fh.read(c_size)
-                if part.fmt == "jsonl.zst":
-                    data = codec.decompress(
-                        raw, decompressed_size=d_size, asbytes=True
-                    )
-                elif part.fmt == "jsonl.gz":
-                    data = _gzip.decompress(raw)
-                else:
-                    data = _lzma.decompress(raw, format=_lzma.FORMAT_XZ)
+                data = decode_chunk(fh.read(c_size), part.fmt, d_size)
                 rows = [
                     _json.loads(line)
                     for line in data.decode("utf-8").splitlines()
@@ -328,7 +310,7 @@ def journal_datasource():
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        if getattr(part, "fmt", "parquet") in _CODEC_FMTS:
+        if getattr(part, "fmt", "parquet") in CODEC_FMTS:
             yield from _codec_partition_batches(
                 part, field_names, arrow_schema
             )
@@ -453,7 +435,7 @@ def journal_datasource():
             if not m["fragments"]:
                 raise ValueError(f"journal {jroot} has no fragments")
             f0 = m["fragments"][0]
-            if f0.get("fmt", "parquet") in _CODEC_FMTS:
+            if f0.get("fmt", "parquet") in CODEC_FMTS:
                 # byte-opaque fragment: the schema rides the manifest.
                 # Every field serves NULLABLE — a journal gains
                 # columns mid-history (a shard's _batch), and older

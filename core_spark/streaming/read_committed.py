@@ -13,37 +13,25 @@ core_spark/operators/sequencer.py — including QueueAckRollback's
 DOWNWARD horizon reset (sequencer.go:236-257), so re-sends after an
 upstream checkpoint recovery are accepted (at-least-once fallback)
 instead of silently dropped. Batch and streaming agree bit-for-bit
-(asserted in tests/test_streaming.py). The transition function itself
-is ONE closure (`_make_fold`) shared by both physical backends, so
-the two cannot drift.
+(asserted in tests/test_streaming.py).
 
-Pruning: a producer idle longer than `idle_prune_ms` has its state
-evicted — the direct analog of the reference's 24h
+The operator is `applyInPandasWithState`: the per-producer state is
+one tuple row (horizon clocks plus the pending run as parallel
+arrays), and the idle prune is GroupStateTimeout.ProcessingTimeTimeout
++ state.remove(). A producer idle longer than `idle_prune_ms` has its
+state evicted — the direct analog of the reference's 24h
 messageSequencerPruneHorizon (consumer/shard.go:35-38). A producer
 reappearing after prune re-initializes from its next message, exactly
 as a reference partialSeq would be recreated.
 
-Two physical backends, selected automatically:
-
-- `transformWithStateInPandas` (Spark 4.x stateful v2): ValueState +
-  ListState, idle prune via a registered processing-time timer
-  re-armed on every batch. Its driver-side state server speaks
-  protobuf, so it requires `google.protobuf` in the Python runtime —
-  present on a normal cluster image, absent in this container.
-- `applyInPandasWithState` fallback: same transition closure, state
-  in a single tuple row, idle prune via
-  GroupStateTimeout.ProcessingTimeTimeout + state.remove() — the
-  older API's equivalent of the timer.
-
-Both shuffle on producer — identical partitioning to the batch
+The state shuffles on producer — identical partitioning to the batch
 formulation. Within-batch and cross-batch delivery must be
 offset-ordered per producer (journal reads are; the file-stream
 source preserves fragment order).
 
-All closures are self-contained (pandas + stdlib + pyspark base
-classes only) so cloudpickle ships them by value — Python workers
-never need core_spark importable (the driver harness runs from
-outside the repo).
+The state function is self-contained (pandas + stdlib only) so
+cloudpickle ships it by value — Python workers never need core_spark
+importable (the driver harness runs from outside the repo).
 """
 
 from __future__ import annotations
@@ -60,25 +48,49 @@ DEFAULT_IDLE_PRUNE_MS = 24 * 3600 * 1000  # messageSequencerPruneHorizon
 
 _COLS = ["event_id", "user_id", "value", "off", "producer", "clock", "flags"]
 
-
-def _tws_available() -> bool:
-    """transformWithStateInPandas needs google.protobuf for its state
-    server; probe on the driver before choosing the backend."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
+_STATE_SCHEMA = (
+    "min_clock long, max_clock long, "
+    "pend_off array<long>, pend_clock array<long>, "
+    "pend_event array<long>, pend_user array<long>, pend_value array<double>"
+)
 
 
-def _make_fold():
-    """The per-producer transition function, shared verbatim by both
-    stateful backends: fold offset-ordered pandas batches through
-    (min_clock, max_clock, pending), returning emitted rows and the
-    end state. Self-contained for by-value pickling."""
+def stream_read_committed(
+    messages: DataFrame, idle_prune_ms: int | None = None
+) -> DataFrame:
+    """Read-committed view of a streaming DataFrame in the
+    message_view shape. Keyed state per producer; append output.
 
-    def fold(producer, pdfs, min_clock, max_clock, pending, inited):
+    `idle_prune_ms` enables the idle-state prune horizon (pass
+    DEFAULT_IDLE_PRUNE_MS for the reference's 24h). It is OPT-IN
+    because processing-time timers make the streaming engine run
+    continuous micro-batches to evaluate them — correct behavior for
+    a long-lived consumer with a trigger interval, surprising for
+    ad-hoc bounded streams (and it stalls processAllAvailable-style
+    test harnesses).
+    """
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    prune_ms = None if idle_prune_ms is None else int(idle_prune_ms)
+
+    def fn(key, pdfs, state):
+        """Fold offset-ordered pandas batches of one producer through
+        its (min_clock, max_clock, pending) state."""
+        import pandas as _pd
+
+        if state.hasTimedOut:
+            # idle horizon passed: evict this producer's partial state
+            state.remove()
+            return
+        if state.exists:
+            min_clock, max_clock, po, pc, pe, pu, pv = state.get
+            pending = [list(t) for t in zip(po, pc, pe, pu, pv)]
+            inited = True
+        else:
+            min_clock = max_clock = 0
+            pending, inited = [], False
+
+        producer = key[0]
         out_rows = []
 
         def emit(off, clock, flags, ev, us, val):
@@ -120,125 +132,6 @@ def _make_fold():
                     pending = []  # commit clobbers the pending run
                     min_clock = max_clock = clock
 
-        return out_rows, min_clock, max_clock, pending, inited
-
-    return fold
-
-
-def make_tws_sequencer(prune_ms: int | None):
-    """Build the transformWithStateInPandas StatefulProcessor class.
-
-    Module-level factory (rather than a closure inside `_tws_variant`)
-    so the TWS code path is directly drivable: the StatefulProcessor
-    base imports without google.protobuf — only Spark's state *server*
-    needs it — so tests/test_tws_processor.py executes init /
-    handleInputRows / timer re-arm / handleExpiredTimer against a
-    faithful handle double and asserts bit-for-bit agreement with the
-    batch sequencer, leaving only the protobuf wire plumbing untested
-    in this container."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    fold = _make_fold()
-    cols = list(_COLS)
-
-    class _Sequencer(StatefulProcessor):
-        def init(self, handle):
-            self._h = handle
-            self._clocks = handle.getValueState(
-                "clocks", "min_clock long, max_clock long"
-            )
-            self._pend = handle.getListState(
-                "pend",
-                "off long, clock long, event_id long, user_id long, value double",
-            )
-
-        def handleInputRows(self, key, pdfs, timer_values):
-            import pandas as _pd
-
-            if self._clocks.exists():
-                got = self._clocks.get()
-                min_clock, max_clock = int(got[0]), int(got[1])
-                pending = [list(t) for t in self._pend.get()]
-                inited = True
-            else:
-                min_clock = max_clock = 0
-                pending, inited = [], False
-
-            out_rows, min_clock, max_clock, pending, inited = fold(
-                key[0], pdfs, min_clock, max_clock, pending, inited
-            )
-
-            if inited:
-                self._clocks.update((min_clock, max_clock))
-                self._pend.clear()
-                if pending:
-                    self._pend.put([tuple(p) for p in pending])
-                if prune_ms is not None:
-                    # re-arm the idle-prune timer (the 24h horizon
-                    # analog)
-                    for t in self._h.listTimers():
-                        self._h.deleteTimer(t)
-                    self._h.registerTimer(
-                        timer_values.getCurrentProcessingTimeInMs() + prune_ms
-                    )
-
-            if out_rows:
-                yield _pd.DataFrame(out_rows, columns=cols)
-
-        def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-            # idle horizon passed: evict this producer's partial state
-            self._clocks.clear()
-            self._pend.clear()
-            return iter([])
-
-    return _Sequencer
-
-
-def _tws_variant(messages: DataFrame, prune_ms: int | None) -> DataFrame:
-    """transformWithStateInPandas backend with timer-based prune."""
-    _Sequencer = make_tws_sequencer(prune_ms)
-    return messages.groupBy("producer").transformWithStateInPandas(
-        statefulProcessor=_Sequencer(),
-        outputStructType=MESSAGE_SCHEMA,
-        outputMode="append",
-        timeMode="ProcessingTime",
-    )
-
-
-_STATE_SCHEMA = (
-    "min_clock long, max_clock long, "
-    "pend_off array<long>, pend_clock array<long>, "
-    "pend_event array<long>, pend_user array<long>, pend_value array<double>"
-)
-
-
-def _apply_variant(messages: DataFrame, prune_ms: int | None) -> DataFrame:
-    """applyInPandasWithState backend; ProcessingTimeTimeout is the
-    prune timer."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    fold = _make_fold()
-    cols = list(_COLS)
-
-    def fn(key, pdfs, state):
-        import pandas as _pd
-
-        if state.hasTimedOut:
-            # idle horizon passed: evict this producer's partial state
-            state.remove()
-            return
-        if state.exists:
-            min_clock, max_clock, po, pc, pe, pu, pv = state.get
-            pending = [list(t) for t in zip(po, pc, pe, pu, pv)]
-            inited = True
-        else:
-            min_clock = max_clock = 0
-            pending, inited = [], False
-
-        out_rows, min_clock, max_clock, pending, inited = fold(
-            key[0], pdfs, min_clock, max_clock, pending, inited
-        )
-
         if inited:
             state.update(
                 (
@@ -254,7 +147,7 @@ def _apply_variant(messages: DataFrame, prune_ms: int | None) -> DataFrame:
             if prune_ms is not None:
                 state.setTimeoutDuration(prune_ms)
         if out_rows:
-            yield _pd.DataFrame(out_rows, columns=cols)
+            yield _pd.DataFrame(out_rows, columns=_COLS)
 
     return messages.groupBy("producer").applyInPandasWithState(
         fn,
@@ -267,30 +160,3 @@ def _apply_variant(messages: DataFrame, prune_ms: int | None) -> DataFrame:
             else GroupStateTimeout.ProcessingTimeTimeout
         ),
     )
-
-
-def stream_read_committed(
-    messages: DataFrame,
-    idle_prune_ms: int | None = None,
-    use_tws: bool | None = None,
-) -> DataFrame:
-    """Read-committed view of a streaming DataFrame in the
-    message_view shape. Keyed state per producer; append output.
-
-    `idle_prune_ms` enables the idle-state prune horizon (pass
-    DEFAULT_IDLE_PRUNE_MS for the reference's 24h). It is OPT-IN
-    because processing-time timers make the streaming engine run
-    continuous micro-batches to evaluate them — correct behavior for
-    a long-lived consumer with a trigger interval, surprising for
-    ad-hoc bounded streams (and it stalls processAllAvailable-style
-    test harnesses).
-
-    `use_tws` forces the backend; None probes the runtime (the
-    transformWithStateInPandas state server requires google.protobuf,
-    absent from this container but present on standard cluster
-    images).
-    """
-    if use_tws is None:
-        use_tws = _tws_available()
-    variant = _tws_variant if use_tws else _apply_variant
-    return variant(messages, None if idle_prune_ms is None else int(idle_prune_ms))

@@ -85,38 +85,25 @@ class FencedJournalSink:
                 {"shard": self.shard, "batch": batch_id, "flags": "ACK_TXN"}, fh
             )
 
-    def read_through(self, journal: str) -> int:
-        """Committed read-through offset for a source journal — the
-        Stat RPC's ReadThrough field (consumer/shard_api.go:24-51):
-        every source offset below this is reflected in committed
-        state. 0 until the first commit carrying progress."""
-        m = self.journal.manifest()
-        return int(m.registers.get(f"rt:{self.shard}:{journal}", "0"))
-
     def __call__(
         self,
         df: DataFrame,
         batch_id: int,
-        read_through: dict[str, int] | None = None,
         read_through_fn=None,
     ) -> None:
-        """`read_through` maps source journal name -> exclusive end
-        offset consumed by this batch; committed ATOMICALLY with the
-        batch via the same manifest CAS, giving offset-granular
-        progress (not just the batch watermark) for await_offset.
-        `read_through_fn` is the zero-extra-job variant: a zero-arg
-        callable (typically closing over an `Observation` riding the
-        batch plan) resolved after the data write and committed in the
-        same CAS — use it when computing the offsets eagerly would
-        re-scan the source."""
+        """`read_through_fn` is a zero-arg callable returning the map
+        source journal name -> exclusive end offset consumed by this
+        batch (typically closing over an `Observation` riding the
+        batch plan, so no extra job re-scans the source). It is
+        resolved after the data write and its `rt:<shard>:<journal>`
+        registers are committed ATOMICALLY with the batch via the same
+        manifest CAS, giving offset-granular progress (not just the
+        batch watermark) for await_offset."""
         self._check_fence()  # zombies neither write data nor ACK
         if batch_id <= self.committed_batch():
             self._ensure_ack(batch_id)  # ACK re-send after crash-between
             return  # idempotent re-delivery
 
-        regs = {f"batch:{self.shard}": str(batch_id)}
-        for j, off in (read_through or {}).items():
-            regs[f"rt:{self.shard}:{j}"] = str(int(off))
         post = None
         if read_through_fn is not None:
             def post():
@@ -132,7 +119,7 @@ class FencedJournalSink:
             # manifest it commits over — the CAS closes the
             # check-then-act window _check_fence alone would leave
             check_registers={f"fence:{self.shard}": str(self.fence)},
-            set_registers=regs,
+            set_registers={f"batch:{self.shard}": str(batch_id)},
             post_write_registers=post,
         )
         # Post-commit ACK intent (idempotent: keyed by batch id).

@@ -79,6 +79,38 @@ def test_split_plan_is_per_chunk_and_covers_file(
         assert off == os.path.getsize(p)
 
 
+@pytest.mark.parametrize("fmt", ["jsonl.zst", "jsonl.xz", "jsonl.gz"])
+def test_split_plan_and_decode_chunk_roundtrip(tmp_path, fmt):
+    """split_plan + decode_chunk are the one codec owner both read
+    paths call: the decoded chunks concatenate back to the source
+    lines, and a chunk whose decoded size disagrees with its plan
+    raises instead of serving rows (pyarrow's zstd decoder already
+    refuses a wrong decompressed size; gz and xz reach the size
+    check)."""
+    src = tmp_path / "src.jsonl"
+    src.write_text("".join(f'{{"v": {i}}}\n' for i in range(500)))
+    out = str(tmp_path / f"frag.{fmt}")
+    writer = {
+        "jsonl.zst": cf.write_jsonl_zst,
+        "jsonl.xz": cf.write_jsonl_xz,
+        "jsonl.gz": cf.write_jsonl_gz,
+    }[fmt]
+    assert writer(str(src), out, chunk_bytes=1024) == 500
+    plan = cf.split_plan(out, fmt)
+    assert len(plan) > 1
+    chunks = [
+        cf.decode_chunk(cf._ranged(out, c_off, c_size), fmt, d_size)
+        for c_off, c_size, d_size in plan
+    ]
+    assert b"".join(chunks) == src.read_bytes()
+    c_off, c_size, d_size = plan[0]
+    err = OSError if fmt == "jsonl.zst" else ValueError
+    with pytest.raises(err):
+        cf.decode_chunk(cf._ranged(out, c_off, c_size), fmt, d_size + 1)
+    with pytest.raises(ValueError, match="unknown codec fragment format"):
+        cf.split_plan(out, "jsonl.bz2")
+
+
 def test_mixed_parquet_and_codec_history_reads(spark, journal, small_chunks):
     journal.append(_df(spark, 0, 50), fmt="parquet")
     journal.append(_df(spark, 50, 90), fmt="jsonl.zst")

@@ -3555,12 +3555,17 @@ def test_kernel_chain_fusion_identical_and_single_stage(spark):
     assert a == b
 
 
-def test_doc_kernel_contract(spark):
-    """doc_kernel(docs, per_doc, schema) is a hand-written mapInPandas
-    over (doc_id, text) with the batch loop factored out: (a) its rows
-    equal the hand-written loop's for the same per-document function,
-    (b) a per_doc that yields nothing gives zero rows with the declared
-    schema, and (c) the MapInPandas node is named after per_doc."""
+def test_doc_kernel_contract(spark, monkeypatch):
+    """doc_kernel(docs, per_doc, schema, col) is a hand-written
+    mapInPandas over (doc_id, col) with the batch loop factored out:
+    (a) its rows equal the hand-written loop's for the same
+    per-document function, (b) a per_doc that yields nothing gives
+    zero rows with the declared schema, (c) the MapInPandas node is
+    named after per_doc, and (d) a binary `col` reaches per_doc as
+    bytes. payload_kernel(docs, build, col, out_type) (e) builds one
+    payload per document, named after `build`, fusing with a
+    downstream doc_kernel into one stage, and (f) yields frames of at
+    most _PAYLOAD_FRAME_BYTES payload bytes."""
     import pandas as pd
     from pyspark.sql.types import StructType
 
@@ -3600,3 +3605,65 @@ def test_doc_kernel_contract(spark):
     )
     assert plan.count("MapInPandas") == 1, plan
     assert "MapInPandas first_words(doc_id#" in plan, plan
+
+    from core_spark.multimodal import columns
+    from core_spark.multimodal.columns import payload_kernel
+
+    # (d) binary column input
+    def heads(doc_id, payload):
+        yield len(payload), bytes(payload[:8])
+
+    binary = doc_kernel(
+        attach_payload(docs), heads, "doc_id long, n long, head binary",
+        col="payload",
+    )
+    want = sorted(
+        (r.doc_id, len(r.text.encode()), r.text.encode()[:8])
+        for r in docs.select("doc_id", "text").collect()
+    )
+    assert sorted(map(tuple, binary.collect())) == want
+
+    # (e) payload_kernel output, naming and fusion
+    def build(text):
+        return text.encode("utf-8") * 2
+
+    built = payload_kernel(docs, build)
+    assert built.schema == StructType.fromDDL("doc_id long, payload binary")
+    assert sorted(map(tuple, built.collect())) == sorted(
+        (r.doc_id, r.text.encode() * 2)
+        for r in docs.select("doc_id", "text").collect()
+    )
+    bplan = built._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "simple"
+        )
+    )
+    assert "MapInPandas build(doc_id#" in bplan, bplan
+    fused = doc_kernel(
+        built, heads, "doc_id long, n long, head binary", col="payload"
+    )
+    fplan = fused._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "simple"
+        )
+    )
+    assert fplan.count("MapInPandas") == 1, fplan
+    assert sorted(map(tuple, fused.collect())) == sorted(
+        (d, 2 * n, (h * 2)[:8]) for d, n, h in want
+    )
+
+    # (f) the byte cap: 50 payloads of 300 bytes under a 1000-byte cap
+    monkeypatch.setattr(columns, "_PAYLOAD_FRAME_BYTES", 1000)
+
+    def big(text):
+        return text.encode("utf-8") * 300
+
+    (gen,) = payload_kernel(docs, big)._kernel_chain[1]
+    batch = pd.DataFrame({"doc_id": range(50), "text": ["x"] * 50})
+    frames = list(gen(iter([batch])))
+    assert len(frames) == 17
+    assert all(
+        sum(map(len, f["payload"])) <= 1000 for f in frames
+    ), [sum(map(len, f["payload"])) for f in frames]
+    assert [d for f in frames for d in f["doc_id"]] == list(range(50))
+    assert all(p == b"x" * 300 for f in frames for p in f["payload"])

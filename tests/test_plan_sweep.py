@@ -97,9 +97,10 @@ EXECUTING = {n for n in REGISTRY if "stream" in n or "serve" in n} | {
 
 SWEEP = sorted(n for n in REGISTRY if n not in EXECUTING)
 
-# Per-document kernels that keep their own `for pdf in batches` loop
-# over zip(pdf["doc_id"], ...) instead of columns.doc_kernel, keyed by
-# (plans module, top-level def). Every entry must state why.
+# Per-document kernels that keep their own batch loop over
+# zip(pdf["doc_id"], ...) instead of columns.doc_kernel, keyed by
+# (module, top-level def) across plans/, multimodal/ and examples/.
+# Every entry must state why.
 HAND_ROLLED = {
     ("llmops", "q_dup_spans"): "numpy column kernel: builds int64 "
                                "arrays per batch, not row tuples",
@@ -107,15 +108,6 @@ HAND_ROLLED = {
                                "arrays per batch, not row tuples",
     ("llmops", "_winnow_prints"): "numpy column kernel: builds int64 "
                                   "arrays per batch, not row tuples",
-    ("multimodal_queries", "q_bitmap_exif"): "two-stage chain: its "
-        "second stage would have to move onto _kernel too, which fuses "
-        "both MapInPandas stages into one and changes the plan",
-    ("multimodal_queries", "_phash_hashes"): "two-stage chain already "
-        "fused by _kernel over spread(docs); doc_kernel's (doc_id, "
-        "text) projection would add a Project and change the plan",
-    ("multimodal_queries", "q_audio_vad"): "two-stage chain: its "
-        "second stage would have to move onto _kernel too, which fuses "
-        "both MapInPandas stages into one and changes the plan",
 }
 
 
@@ -198,45 +190,62 @@ def test_storage_backed_serves_page_never_bulk_collect():
 
 
 def test_per_document_kernels_use_doc_kernel():
-    """One way to write a per-document kernel: no plans module loops
-    over zip(pdf["doc_id"], ...) in a batch generator except the
-    HAND_ROLLED entries, every HAND_ROLLED entry still does, and no
-    per_doc handed to doc_kernel imports anything (imports belong in
-    the query function, once per plan, not once per document)."""
+    """One way to write a per-document kernel: no module under plans/,
+    multimodal/ or examples/ loops over zip(pdf["doc_id"], ...) — in a
+    for statement or a comprehension — except doc_kernel itself and the
+    HAND_ROLLED entries, every HAND_ROLLED entry still does, only
+    payload_kernel slices frames with _payload_frames, and no per_doc
+    handed to doc_kernel (nor build handed to payload_kernel) imports
+    anything (imports belong in the operator function, once per plan,
+    not once per document)."""
     import ast
     import pathlib
 
-    import core_spark.plans as plans
+    import core_spark
 
-    def is_doc_id_column(node):
+    def is_doc_id_zip(node):
         return (
-            isinstance(node, ast.Subscript)
-            and isinstance(node.slice, ast.Constant)
-            and node.slice.value == "doc_id"
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "zip"
+            and node.args
+            and isinstance(node.args[0], ast.Subscript)
+            and isinstance(node.args[0].slice, ast.Constant)
+            and node.args[0].slice.value == "doc_id"
         )
 
-    found, importing = set(), []
-    for path in sorted(pathlib.Path(plans.__file__).parent.glob("*.py")):
+    pkg = pathlib.Path(core_spark.__file__).parent
+    paths = [
+        p
+        for sub in ("plans", "multimodal", "examples")
+        for p in sorted((pkg / sub).glob("*.py"))
+    ]
+    helpers = {("columns", "doc_kernel")}
+    found, framing, importing = set(), [], []
+    for path in paths:
         mod, tree = path.stem, ast.parse(path.read_text())
         for top in tree.body:
             if not isinstance(top, ast.FunctionDef):
                 continue
             for n in ast.walk(top):
-                if (
-                    isinstance(n, ast.For)
-                    and isinstance(n.iter, ast.Call)
-                    and isinstance(n.iter.func, ast.Name)
-                    and n.iter.func.id == "zip"
-                    and n.iter.args
-                    and is_doc_id_column(n.iter.args[0])
+                if isinstance(n, (ast.For, ast.comprehension)) and (
+                    is_doc_id_zip(n.iter)
                 ):
                     found.add((mod, top.name))
+                if (
+                    isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Name)
+                    and n.func.id == "_payload_frames"
+                    and top.name != "payload_kernel"
+                ):
+                    framing.append((mod, top.name))
             per_doc = {
                 c.args[1].id
                 for c in ast.walk(top)
                 if isinstance(c, ast.Call)
                 and isinstance(c.func, ast.Name)
-                and c.func.id == "doc_kernel"
+                and c.func.id in ("doc_kernel", "payload_kernel")
+                and len(c.args) > 1
                 and isinstance(c.args[1], ast.Name)
             }
             for f in ast.walk(top):
@@ -246,12 +255,18 @@ def test_per_document_kernels_use_doc_kernel():
                         for i in ast.walk(f)
                     ):
                         importing.append((mod, top.name, f.name))
+    found -= helpers
     new = sorted(found - HAND_ROLLED.keys())
     stale = sorted(HAND_ROLLED.keys() - found)
     assert not new, (
         f"hand-rolled per-document loops {new}: write them as "
-        "per_doc(doc_id, text) generators through columns.doc_kernel, "
-        "or allowlist them in HAND_ROLLED with a reason"
+        "per_doc(doc_id, value) generators through columns.doc_kernel "
+        "(payload builders through columns.payload_kernel), or "
+        "allowlist them in HAND_ROLLED with a reason"
     )
     assert not stale, f"{stale} no longer hand-roll a loop — drop them"
+    assert not framing, (
+        f"{framing} slice payload frames by hand: build payloads "
+        "through columns.payload_kernel"
+    )
     assert not importing, f"per_doc bodies import per document: {importing}"
