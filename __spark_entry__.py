@@ -7,7 +7,6 @@ the LLM-pipeline superset, registered in `core_spark.plans.REGISTRY`.
 
 from __future__ import annotations
 
-import os
 import sys
 from collections.abc import Callable
 from pathlib import Path
@@ -17,17 +16,15 @@ from pyspark.sql import DataFrame, SparkSession
 _REPO = str(Path(__file__).resolve().parent)
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
+
+from core_spark.session import export_package_root  # noqa: E402
+
 # Executor Python workers resolve kernel-side imports (`from
 # core_spark.multimodal... import ...` inside mapInPandas fns) on THEIR
 # sys.path, which only sees the repo when the driver's cwd happens to
 # be the repo root. Exporting PYTHONPATH before the SparkSession is
 # built makes the contract hold from any working directory.
-if _REPO not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
-    os.environ["PYTHONPATH"] = (
-        _REPO + os.pathsep + os.environ["PYTHONPATH"]
-        if os.environ.get("PYTHONPATH")
-        else _REPO
-    )
+export_package_root()
 
 from core_spark.io import register_views  # noqa: E402
 from core_spark.plans import REGISTRY  # noqa: E402

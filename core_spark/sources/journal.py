@@ -716,8 +716,14 @@ class Journal:
                 # SBBF / ORC BLOOM_FILTER_UTF8 — so the scan engine
                 # skips row groups INSIDE the fragments a point
                 # lookup still has to read. Absent columns are
-                # ignored by the writers; cost is per-batch.
+                # ignored by the writers; cost is per-batch. Adaptive
+                # sizing fits each SBBF to the chunk's distinct values;
+                # without it parquet-mr writes every filter at its
+                # 1 MiB maximum, however few rows the fragment holds.
                 if fmt == "parquet":
+                    writer = writer.option(
+                        "parquet.bloom.filter.adaptive.enabled", "true"
+                    )
                     for c in spec.bloom_columns:
                         writer = writer.option(
                             f"parquet.bloom.filter.enabled#{c}", "true"
@@ -1154,7 +1160,11 @@ class Journal:
             if spec is not None and spec.bloom_columns:
                 # compaction keeps the file-level bloom contract the
                 # append path established (r11): merged fragments
-                # carry fresh per-row-group SBBF filters too
+                # carry fresh per-row-group SBBF filters too, sized to
+                # their distinct values as on append
+                writer = writer.option(
+                    "parquet.bloom.filter.adaptive.enabled", "true"
+                )
                 for c in spec.bloom_columns:
                     writer = writer.option(
                         f"parquet.bloom.filter.enabled#{c}", "true"

@@ -1193,6 +1193,7 @@ def test_spec_bloom_columns_plant_file_level_blooms(spark, tmp_path):
     CatalogStore(str(tmp_path)).apply(
         upserts=(
             JournalSpec(name="blm/files", bloom_columns=("k", "lang")),
+            JournalSpec(name="blm/small", bloom_columns=("k",)),
         )
     )
     j = Journal(str(tmp_path), "blm/files")
@@ -1229,6 +1230,25 @@ def test_spec_bloom_columns_plant_file_level_blooms(spark, tmp_path):
         1
         for v in range(900000, 900050)
         if not any(x for s in orc_bloom_may_contain(raw, "k", v) for x in s)
+    )
+    assert absent >= 45
+
+    # The SBBF is sized to the fragment's distinct values: a 200-row
+    # fragment with one bloom column stays small (at parquet-mr's fixed
+    # 1 MiB per filter it was 1 MB) and still answers for present and
+    # absent keys.
+    j = Journal(str(tmp_path), "blm/small")
+    j.append(df.where("k < 200"))
+    (small,) = glob.glob(
+        os.path.join(str(j.root), j.manifest().fragments[0].path, "*.parquet")
+    )
+    assert os.path.getsize(small) < 128 * 1024
+    raw = open(small, "rb").read()
+    assert all(parquet_bloom_may_contain(raw, "k", v) == [True] for v in (0, 7, 199))
+    absent = sum(
+        1
+        for v in range(900000, 900050)
+        if parquet_bloom_may_contain(raw, "k", v) == [False]
     )
     assert absent >= 45
 

@@ -8,12 +8,20 @@ $SPARK_GRAFT_SF_DIR (default sf0.1) and writes
 summary (Exchange count, python-eval nodes, join strategies) to stdout
 so plan-shape regressions are greppable. Used by the r13 optimization
 round to produce plans/r13/<query>_before.txt / _after.txt.
+
+Expression ids (`#<n>`), `plan_id=<n>` and RDD ids (`RDD[<n>]`) are
+session counters: a query whose build runs Spark jobs (connected
+components' checkpoint rounds) draws a different number of them from
+run to run. Each dump renumbers all three in order of first appearance
+(`canonical_ids`), so two dumps of the same code in fresh processes are
+byte-identical and a diff shows only structural change.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 from pathlib import Path
 
@@ -21,6 +29,19 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from core_spark.plans.registry import REGISTRY  # noqa: E402
 from core_spark.session import get_spark  # noqa: E402
+
+
+def canonical_ids(plan: str) -> str:
+    """`plan` with expression, plan and RDD ids renumbered from 0 in
+    order of first appearance, each kind on its own counter."""
+    for pattern in (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(RDD\[)(\d+)"):
+        seen: dict[str, int] = {}
+        plan = re.sub(
+            pattern,
+            lambda m: m[1] + str(seen.setdefault(m[2], len(seen))),
+            plan,
+        )
+    return plan
 
 
 def main() -> int:
@@ -50,6 +71,7 @@ def main() -> int:
         except Exception as exc:  # a query that cannot even plan is a red flag
             print(f"{name}: PLAN ERROR {type(exc).__name__}: {exc}", flush=True)
             continue
+        plan = canonical_ids(plan)
         (out / f"{name}.txt").write_text(plan)
         nx = plan.count("Exchange")
         py = (
