@@ -36,7 +36,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
+    """One entry per implemented operator from SURVEY.md §2. A returned
+    frame is valid until the next query runs (plans/registry.py)."""
 
     def wrap(name: str) -> Callable[[SparkSession, str], DataFrame]:
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -45,6 +45,7 @@ from __future__ import annotations
 import struct
 from functools import lru_cache
 
+from core_spark.functions.xxhash import xxh64
 from core_spark.functions.zstdfile import ZstdError, _frame_header
 
 MAGIC = 0xFD2FB528
@@ -99,67 +100,6 @@ _LL_MAX_SYM, _OF_MAX_SYM, _ML_MAX_SYM = 35, 31, 52
 
 class ZstdDecodeError(ValueError):
     """Named decode failure: corrupt, truncated, or unsupported input."""
-
-
-# ---------------------------------------------------------------- XXH64
-
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
-_M64 = (1 << 64) - 1
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _xxh_round(acc: int, lane: int) -> int:
-    return (_rotl((acc + lane * _P2) & _M64, 31) * _P1) & _M64
-
-
-def xxh64(data: bytes, seed: int = 0) -> int:
-    """XXH64 (the public xxHash spec) — zstd's Content_Checksum is
-    its low 32 bits with seed 0. Pinned in tests against Spark's own
-    JVM xxhash64 (seed 42) on binary columns."""
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + _P1 + _P2) & _M64
-        v2 = (seed + _P2) & _M64
-        v3 = seed & _M64
-        v4 = (seed - _P1) & _M64
-        while i + 32 <= n:
-            l1, l2, l3, l4 = struct.unpack_from("<QQQQ", data, i)
-            v1, v2, v3, v4 = (
-                _xxh_round(v1, l1), _xxh_round(v2, l2),
-                _xxh_round(v3, l3), _xxh_round(v4, l4),
-            )
-            i += 32
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M64
-        for v in (v1, v2, v3, v4):
-            h = ((h ^ _xxh_round(0, v)) * _P1 + _P4) & _M64
-    else:
-        h = (seed + _P5) & _M64
-    h = (h + n) & _M64
-    while i + 8 <= n:
-        (k,) = struct.unpack_from("<Q", data, i)
-        h = (_rotl(h ^ _xxh_round(0, k), 27) * _P1 + _P4) & _M64
-        i += 8
-    if i + 4 <= n:
-        (k,) = struct.unpack_from("<I", data, i)
-        h = (_rotl(h ^ (k * _P1) & _M64, 23) * _P2 + _P3) & _M64
-        i += 4
-    while i < n:
-        h = (_rotl(h ^ (data[i] * _P5) & _M64, 11) * _P1) & _M64
-        i += 1
-    h ^= h >> 33
-    h = (h * _P2) & _M64
-    h ^= h >> 29
-    h = (h * _P3) & _M64
-    h ^= h >> 32
-    return h
 
 
 # ----------------------------------------------------------- bitstreams

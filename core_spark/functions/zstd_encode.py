@@ -52,8 +52,8 @@ from core_spark.functions.zstd_decode import (
     ZstdDecodeError,
     _fse_build,
     parse_zstd_dictionary,
-    xxh64,
 )
+from core_spark.functions.xxhash import xxh64
 
 MAGIC = 0xFD2FB528
 _BLOCK = 64 * 1024  # output bytes per block (well under the 128 KiB cap)

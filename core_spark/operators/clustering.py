@@ -174,7 +174,9 @@ def persisted_quantized(vecs: DataFrame) -> DataFrame:
     input-sized."""
     from pyspark import StorageLevel
 
-    return vecs.persist(StorageLevel.MEMORY_AND_DISK)
+    from core_spark.plans.registry import scope
+
+    return scope().persist(vecs, StorageLevel.MEMORY_AND_DISK)
 
 
 # Fold the per-(cluster, pos) floor-means straight into the one-row

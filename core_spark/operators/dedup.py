@@ -359,11 +359,13 @@ def blocked_jaccard_pairs(
     # structures are likewise materialized state, not recomputed.
     from pyspark import StorageLevel
 
-    kept = (
+    from core_spark.plans.registry import scope
+
+    kept = scope().persist(
         sh.withColumn("df", F.count("*").over(w))
         .filter(F.col("df") <= MAX_SHINGLE_DF)
-        .drop("df")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .drop("df"),
+        StorageLevel.MEMORY_AND_DISK,
     )
     sizes = kept.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     # inverted-index pairing as a co-partitioned self-join on

@@ -185,6 +185,8 @@ def triangle_counts(
     """
     from pyspark import StorageLevel
 
+    from core_spark.plans.registry import scope
+
     # The input pair pipeline (e.g. MinHash sigs -> LSH -> verify) is
     # the expensive subtree and feeds four branches (two degree
     # projections + the orientation join); the oriented edge list
@@ -193,8 +195,9 @@ def triangle_counts(
     # once per branch (measured ~5.9s -> ~3.5s at sf0.1 for
     # q_graph_triangles, where the single pair pipeline is ~2s of
     # the remainder).
-    fwd = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist(
-        StorageLevel.MEMORY_AND_DISK
+    fwd = scope().persist(
+        pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+        StorageLevel.MEMORY_AND_DISK,
     )
     deg = (
         fwd.select(F.col("a").alias("node"))
@@ -208,11 +211,14 @@ def triangle_counts(
         .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"), "b")
     )
     a_first = (da < db) | ((da == db) & (F.col("a") < F.col("b")))
-    eo = keyed.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
-        F.when(a_first, db).otherwise(da).alias("dv"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    eo = scope().persist(
+        keyed.select(
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
+            F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("v"),
+            F.when(a_first, db).otherwise(da).alias("dv"),
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     e1, e2 = eo.alias("e1"), eo.alias("e2")
     lt = (F.col("e1.dv") < F.col("e2.dv")) | (
         (F.col("e1.dv") == F.col("e2.dv")) & (F.col("e1.v") < F.col("e2.v"))

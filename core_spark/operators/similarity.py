@@ -781,7 +781,9 @@ def embed_ingest_classify(
             # extra semi pass would be pure local overhead.
             from pyspark import StorageLevel
 
-            cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
+            from core_spark.plans.registry import scope
+
+            cand = scope().persist(cand, StorageLevel.MEMORY_AND_DISK)
             vb = vb.join(
                 F.broadcast(
                     cand.select(F.col("doc_b").alias("_b")).distinct()

@@ -22,7 +22,7 @@ from core_spark.operators.clustering import (
     quantize_vectors,
     train_centroids_row,
 )
-from core_spark.plans.registry import query
+from core_spark.plans.registry import query, scope
 
 _K = 8
 _ROUNDS = 3
@@ -136,7 +136,7 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assignment, query probes AND both sides of the distance join —
     # each consumer would otherwise re-scan and re-quantize.
     vecs = persisted_quantized(quantize_vectors(emb))
-    cents = train_centroids_row(vecs, _K, _ROUNDS).persist()
+    cents = scope().persist(train_centroids_row(vecs, _K, _ROUNDS))
     # Map-side assignment keeps the corpus vector on the row, and the
     # 20-row probe frame carries the query vector — the cell join then
     # needs no corpus re-join by id for either side (r13 opt: the old

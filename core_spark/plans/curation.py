@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from core_spark.io import load_table
-from core_spark.plans.registry import query
+from core_spark.plans.registry import query, scope
 
 # ------------------------------------------------------------------ split
 # Salted content-independent hash split. The salt keeps the assignment
@@ -330,9 +330,9 @@ def q_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-text-pass discipline as _minhash_dup_pairs).
     from pyspark import StorageLevel
 
-    d1 = docs.join(canon, "doc_id").persist(StorageLevel.MEMORY_AND_DISK)
-    sh1 = _with_shingles(d1, "text", [F.col("doc_id")]).persist(
-        StorageLevel.MEMORY_AND_DISK
+    d1 = scope().persist(docs.join(canon, "doc_id"), StorageLevel.MEMORY_AND_DISK)
+    sh1 = scope().persist(
+        _with_shingles(d1, "text", [F.col("doc_id")]), StorageLevel.MEMORY_AND_DISK
     )
     sigs = minhash_signatures(d1, k=16, shingles=sh1)
     cand = lsh_candidates(sigs, bands=4, rows=4)

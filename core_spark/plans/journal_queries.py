@@ -5,14 +5,16 @@ journal → read → header parse → protowire decode → aggregate)."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from core_spark.functions.framing import decode_journal, encode_fixed_frame
+from core_spark.functions.framing import (
+    decode_journal,
+    encode_fixed_frame,
+    parse_proto_schema,
+)
 from core_spark.io import load_table
-from core_spark.plans.registry import query
+from core_spark.plans.registry import query, scope
 from core_spark.sources.journal import Journal
 
 
@@ -39,7 +41,7 @@ def q_journal_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broker append/read lifecycle, SURVEY §3.1-3.2, re-expressed as
     fragment files + manifest)."""
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="q_journal_")
+    root = scope().tempdir("q_journal_")
     j = Journal(root, "declared/events")
     # Three appends as pure DataFrame filters over the event-id range
     # (ids are dense from 0, so id < 3000 IS the first 3k events) —
@@ -66,6 +68,13 @@ def q_journal_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------- framed journal
+_NGRAM_SCHEMA = (
+    "1:uuid:bytes, 2:ngram:str, 3:count:varint, "
+    "4:meta:message(1:shard:varint, 2:slot:varint), "
+    "5:samples:packed_varint"
+)
+
+
 @query(
     "q_framed_journal",
     oracle="""
@@ -108,55 +117,39 @@ def q_framed_journal(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("event_id") % 3).alias("s2"),
     )
 
+    spec = parse_proto_schema(_NGRAM_SCHEMA)
+
     def encode(batches):
-        """Self-contained protowire encoder (workers have no repo)."""
+        """One protobuf body per row, fields in field order."""
         import pandas as pd
 
-        def varint(n):
-            out = bytearray()
-            while True:
-                b = n & 0x7F
-                n >>= 7
-                out.append(b | (0x80 if n else 0))
-                if not n:
-                    return bytes(out)
-
-        def ld(no, raw):  # length-delimited field
-            return varint(no << 3 | 2) + varint(len(raw)) + raw
+        from core_spark.functions.protowire import encode_message
 
         for pdf in batches:
-            bodies = []
-            for r in pdf.itertuples(index=False):
-                meta = varint(1 << 3) + varint(int(r.shard)) + varint(
-                    2 << 3
-                ) + varint(int(r.slot))
-                packed = varint(int(r.s0)) + varint(int(r.s1)) + varint(int(r.s2))
-                body = (
-                    ld(1, bytes(r.uuid))
-                    + ld(2, r.ngram.encode("utf-8"))
-                    + varint(3 << 3)
-                    + varint(int(r.count))
-                    + ld(4, meta)
-                    + ld(5, packed)
+            bodies = [
+                encode_message(
+                    {
+                        "uuid": bytes(r.uuid),
+                        "ngram": r.ngram,
+                        "count": int(r.count),
+                        "meta": {"shard": int(r.shard), "slot": int(r.slot)},
+                        "samples": [int(r.s0), int(r.s1), int(r.s2)],
+                    },
+                    spec,
                 )
-                bodies.append(body)
+                for r in pdf.itertuples(index=False)
+            ]
             yield pd.DataFrame({"body": bodies})
 
     bodies = src.mapInPandas(encode, schema="body binary")
     payloads = bodies.select(encode_fixed_frame(F.col("body")).alias("payload"))
 
-    root = tempfile.mkdtemp(prefix="q_framed_")
+    root = scope().tempdir("q_framed_")
     j = Journal(root, "framed/ngrams")
     j.append(payloads)
 
     raw = j.read(spark).select("payload")
-    decoded = decode_journal(
-        raw,
-        "application/x-protobuf",
-        "1:uuid:bytes, 2:ngram:str, 3:count:varint, "
-        "4:meta:message(1:shard:varint, 2:slot:varint), "
-        "5:samples:packed_varint",
-    )
+    decoded = decode_journal(raw, "application/x-protobuf", _NGRAM_SCHEMA)
     return (
         decoded.groupBy("ngram")
         .agg(
@@ -215,7 +208,7 @@ def q_append_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    root = tempfile.mkdtemp(prefix="q_append_codec_")
+    root = scope().tempdir("q_append_codec_")
     j = Journal(root, "declared/codec-events")
     for lo, fmt in ((0, "jsonl.zst"), (700, "jsonl.xz"), (1400, "jsonl.gz")):
         hi = lo + 700
@@ -330,14 +323,14 @@ def q_audit_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql.window import Window
 
-    ranked = events.withColumn(
-        "rn",
-        F.row_number().over(
-            Window.orderBy("user_id", "event_id")
-        ) - 1,
-    ).cache()
+    ranked = scope().persist(
+        events.withColumn(
+            "rn",
+            F.row_number().over(Window.orderBy("user_id", "event_id")) - 1,
+        )
+    )
     n = ranked.count()
-    root = tempfile.mkdtemp(prefix="q_audit_scan_")
+    root = scope().tempdir("q_audit_scan_")
     from core_spark.catalog import CatalogStore, JournalSpec
 
     CatalogStore(root).apply(
@@ -360,7 +353,6 @@ def q_audit_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             .sortWithinPartitions("rn")
             .drop("rn"),
         )
-    ranked.unpersist()
     audit = j.scan_audit(
         begin=100,
         end=2100,

@@ -51,7 +51,7 @@ from core_spark.operators.similarity import (
     hyperplanes,
     knn_bruteforce,
 )
-from core_spark.plans.registry import query
+from core_spark.plans.registry import query, scope
 
 # ---------------------------------------------------------- DuckDB bits
 def duck_shingles(src: str = "documents") -> str:
@@ -179,8 +179,8 @@ def _minhash_dup_pairs(docs: DataFrame) -> DataFrame:
 
     from core_spark.operators.dedup import _with_shingles
 
-    sh = _with_shingles(docs, "text", [F.col("doc_id")]).persist(
-        StorageLevel.MEMORY_AND_DISK
+    sh = scope().persist(
+        _with_shingles(docs, "text", [F.col("doc_id")]), StorageLevel.MEMORY_AND_DISK
     )
     sigs = minhash_signatures(docs, k=_MINHASH_K, shingles=sh)
     cand = lsh_candidates(sigs, bands=_BANDS, rows=_ROWS)
@@ -442,8 +442,8 @@ def q_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # four verification join sides (two verify calls x two sides) —
     # the same single-text-pass discipline as _minhash_dup_pairs
     # (r14 opt, guide §2.3/§5).
-    sh = _with_shingles(docs, "text", [F.col("doc_id")]).persist(
-        StorageLevel.MEMORY_AND_DISK
+    sh = scope().persist(
+        _with_shingles(docs, "text", [F.col("doc_id")]), StorageLevel.MEMORY_AND_DISK
     )
     sigs = minhash_signatures(docs, k=_MINHASH_K, shingles=sh)
     banded = banded_signatures(sigs, bands=_BANDS, rows=_ROWS)
@@ -978,9 +978,10 @@ def _winnow_prints(spark: SparkSession, docs: DataFrame) -> DataFrame:
     # query without the cache (r14 opt, guide §4.1/§5).
     from pyspark import StorageLevel
 
-    return d.mapInPandas(
-        winnow_pos, schema="doc_id long, fph long, pos long"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    return scope().persist(
+        d.mapInPandas(winnow_pos, schema="doc_id long, fph long, pos long"),
+        StorageLevel.MEMORY_AND_DISK,
+    )
 
 
 def _interval_ledger(iv: DataFrame) -> DataFrame:

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from core_spark.io import load_table
-from core_spark.plans.registry import query
+from core_spark.plans.registry import query, scope
 
 # ------------------------------------------------------------ domain mix
 #
@@ -775,7 +775,7 @@ def _bpe_rounds(v, rounds: int, apply_last: bool):
     from pyspark import StorageLevel
 
     tops = []
-    v = v.persist(StorageLevel.MEMORY_AND_DISK)
+    v = scope().persist(v, StorageLevel.MEMORY_AND_DISK)
     for r in range(1, rounds + 1):
         pairs = (
             v.filter(F.expr("size(s) >= 2"))
@@ -800,9 +800,12 @@ def _bpe_rounds(v, rounds: int, apply_last: bool):
         )
         tops.append(top.select(F.lit(r).alias("round"), "p1", "p2", "n_merge"))
         if r < rounds or apply_last:
-            v = v.crossJoin(F.broadcast(top.select("p1", "p2"))).select(
-                "w", "cnt", F.expr(_SPARK_MERGE_APPLY).alias("s")
-            ).persist(StorageLevel.MEMORY_AND_DISK)
+            v = scope().persist(
+                v.crossJoin(F.broadcast(top.select("p1", "p2"))).select(
+                    "w", "cnt", F.expr(_SPARK_MERGE_APPLY).alias("s")
+                ),
+                StorageLevel.MEMORY_AND_DISK,
+            )
     return tops, v
 
 

@@ -22,14 +22,12 @@ streaming/store_sql.py for the sizing contract.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from core_spark.io import load_table
-from core_spark.plans.registry import query
+from core_spark.plans.registry import query, scope
 from core_spark.streaming.store_sql import SQLStore
 
 def serve_pages(df: DataFrame, keys: list[str], page_size: int):
@@ -116,30 +114,27 @@ def q_bike_cycles(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization is lossless AND the store-side SQL agrees with
     the declarative form. Reference: QueryCycleStmt served from the
     SQLStore, examples/bike-share/application.go:134-199."""
-    tmp = tempfile.mkdtemp(prefix="bike_store_")
-    try:
-        store = SQLStore(os.path.join(tmp, "state.db"), shard="cycles-0")
-        rides = load_table(spark, sf_dir, "events").select(
-            "event_id",
-            "user_id",
-            F.col("event_type").alias("station"),
+    tmp = scope().tempdir("bike_store_")
+    store = SQLStore(os.path.join(tmp, "state.db"), shard="cycles-0")
+    rides = load_table(spark, sf_dir, "events").select(
+        "event_id",
+        "user_id",
+        F.col("event_type").alias("station"),
+    )
+    store.materialize("rides", rides, batch_id=0, key_cols=("event_id",))
+    store.snapshot("cycles", _CYCLES_SQL)
+    rows = [
+        r
+        for page in store.query_pages(
+            "cycles", keys=("user_id",), page_size=256
         )
-        store.materialize("rides", rides, batch_id=0, key_cols=("event_id",))
-        store.snapshot("cycles", _CYCLES_SQL)
-        rows = [
-            r
-            for page in store.query_pages(
-                "cycles", keys=("user_id",), page_size=256
-            )
-            for r in page
-        ]
-        store.close()
-        return spark.createDataFrame(
-            [(int(u), int(r), int(c)) for u, r, c in rows],
-            "user_id bigint, rides bigint, returns bigint",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        for r in page
+    ]
+    store.close()
+    return spark.createDataFrame(
+        [(int(u), int(r), int(c)) for u, r, c in rows],
+        "user_id bigint, rides bigint, returns bigint",
+    )
 
 
 def _cms_serve_oracle() -> str:
@@ -169,78 +164,71 @@ def q_cms_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch size (the mergeable fixed-memory summary); the serve
     side reads only the delta journal, so query cost scales with
     batches, and compaction (Journal.compact) folds history."""
-    import shutil as _sh
-    import tempfile as _tf
-
     from pyspark.sql import functions as _F
 
     from core_spark.plans.sketches import _cms_pairs
     from core_spark.sources.journal import Journal
     from core_spark.streaming.shard import ShardConfig, run_shard
 
-    work = _tf.mkdtemp(prefix="cms_serve_")
-    try:
-        src = os.path.join(work, "src")
-        load_table(spark, sf_dir, "events").select("user_id").repartition(
-            4
-        ).write.parquet(src)
+    work = scope().tempdir("cms_serve_")
+    src = os.path.join(work, "src")
+    load_table(spark, sf_dir, "events").select("user_id").repartition(
+        4
+    ).write.parquet(src)
 
-        cfg = ShardConfig(
-            source_glob=os.path.join(src, "*.parquet"),
-            source_schema="user_id bigint",
-            out_root=os.path.join(work, "out"),
-            out_journal="cms/deltas",
-            shard_id="cms-serve-0",
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            max_files_per_trigger=2,  # >1 fragment => merge is exercised
+    cfg = ShardConfig(
+        source_glob=os.path.join(src, "*.parquet"),
+        source_schema="user_id bigint",
+        out_root=os.path.join(work, "out"),
+        out_journal="cms/deltas",
+        shard_id="cms-serve-0",
+        checkpoint_dir=os.path.join(work, "ckpt"),
+        max_files_per_trigger=2,  # >1 fragment => merge is exercised
+    )
+
+    def cms_deltas(df):
+        return (
+            df.select(_F.col("user_id").cast("string").alias("key"))
+            .select(_F.explode(_cms_pairs(_F.col("key"))).alias("p"))
+            .groupBy("p.r", "p.c")
+            .agg(_F.count("*").cast("bigint").alias("cnt"))
         )
 
-        def cms_deltas(df):
-            return (
-                df.select(_F.col("user_id").cast("string").alias("key"))
-                .select(_F.explode(_cms_pairs(_F.col("key"))).alias("p"))
-                .groupBy("p.r", "p.c")
-                .agg(_F.count("*").cast("bigint").alias("cnt"))
-            )
+    run_shard(spark, cfg, cms_deltas).awaitTermination(300)
 
-        run_shard(spark, cfg, cms_deltas).awaitTermination(300)
+    # serve FROM the journal: counters = sum of committed deltas
+    j = Journal(os.path.join(work, "out"), "cms/deltas")
+    counters = (
+        j.read(spark)
+        .groupBy("r", "c")
+        .agg(_F.sum("cnt").cast("bigint").alias("cnt"))
+    )
 
-        # serve FROM the journal: counters = sum of committed deltas
-        j = Journal(os.path.join(work, "out"), "cms/deltas")
-        counters = (
-            j.read(spark)
-            .groupBy("r", "c")
-            .agg(_F.sum("cnt").cast("bigint").alias("cnt"))
-        )
-
-        keyed = load_table(spark, sf_dir, "events").select(
-            _F.col("user_id").cast("string").alias("key")
-        )
-        keys = keyed.groupBy("key").agg(
-            _F.count("*").cast("bigint").alias("exact_cnt")
-        )
-        kp = keys.select(
-            "key", "exact_cnt", _F.explode(_cms_pairs(_F.col("key"))).alias("p")
-        ).select("key", "exact_cnt", "p.r", "p.c")
-        out = (
-            kp.join(_F.broadcast(counters), ["r", "c"])
-            .groupBy("key", "exact_cnt")
-            .agg(_F.min("cnt").alias("est_cnt"))
-            .orderBy(_F.desc("est_cnt"), "key")
-            .limit(20)
-        )
-        # the journal read is lazy: drain before the temp dir holding
-        # the fragments disappears — through the PAGED serve path
-        # like every other storage-backed serve (`key` is the unique
-        # cursor; the top-20 is bounded by construction, but the
-        # serve-tier invariant stays uniform: no request
-        # materializes more than one page).
-        rows = [
-            r for pg in serve_pages(out, ["key"], page_size=8) for r in pg
-        ]
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        _sh.rmtree(work, ignore_errors=True)
+    keyed = load_table(spark, sf_dir, "events").select(
+        _F.col("user_id").cast("string").alias("key")
+    )
+    keys = keyed.groupBy("key").agg(
+        _F.count("*").cast("bigint").alias("exact_cnt")
+    )
+    kp = keys.select(
+        "key", "exact_cnt", _F.explode(_cms_pairs(_F.col("key"))).alias("p")
+    ).select("key", "exact_cnt", "p.r", "p.c")
+    out = (
+        kp.join(_F.broadcast(counters), ["r", "c"])
+        .groupBy("key", "exact_cnt")
+        .agg(_F.min("cnt").alias("est_cnt"))
+        .orderBy(_F.desc("est_cnt"), "key")
+        .limit(20)
+    )
+    # served eagerly through the PAGED serve path
+    # like every other storage-backed serve (`key` is the unique
+    # cursor; the top-20 is bounded by construction, but the
+    # serve-tier invariant stays uniform: no request
+    # materializes more than one page).
+    rows = [
+        r for pg in serve_pages(out, ["key"], page_size=8) for r in pg
+    ]
+    return spark.createDataFrame(rows, out.schema)
 
 
 _FRONTIER_ORACLE = """
@@ -330,9 +318,6 @@ def q_bfs_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     on host — the natural crawl partitioning — and compaction folds
     re-discoveries; serve cost scales with the frontier, not the
     crawl history."""
-    import shutil as _sh
-    import tempfile as _tf
-
     from core_spark.examples.crawl_pipeline import (
         discover_candidates,
         schedule_frontier,
@@ -341,41 +326,37 @@ def q_bfs_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from core_spark.streaming.shard import ShardConfig, run_shard
 
     docs = load_table(spark, sf_dir, "documents")
-    work = _tf.mkdtemp(prefix="frontier_serve_")
-    try:
-        src = os.path.join(work, "src")
-        docs.select("doc_id", "text").repartition(4).write.parquet(src)
+    work = scope().tempdir("frontier_serve_")
+    src = os.path.join(work, "src")
+    docs.select("doc_id", "text").repartition(4).write.parquet(src)
 
-        cfg = ShardConfig(
-            source_glob=os.path.join(src, "*.parquet"),
-            source_schema="doc_id long, text string",
-            out_root=os.path.join(work, "out"),
-            out_journal="frontier/candidates",
-            shard_id="frontier-0",
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            max_files_per_trigger=2,  # >1 batch => incremental upkeep
-        )
+    cfg = ShardConfig(
+        source_glob=os.path.join(src, "*.parquet"),
+        source_schema="doc_id long, text string",
+        out_root=os.path.join(work, "out"),
+        out_journal="frontier/candidates",
+        shard_id="frontier-0",
+        checkpoint_dir=os.path.join(work, "ckpt"),
+        max_files_per_trigger=2,  # >1 batch => incremental upkeep
+    )
 
-        run_shard(spark, cfg, discover_candidates).awaitTermination(300)
+    run_shard(spark, cfg, discover_candidates).awaitTermination(300)
 
-        # serve FROM the journal: the scheduler never re-discovers
-        j = Journal(os.path.join(work, "out"), "frontier/candidates")
-        cands = j.read(spark).select(
-            "host", "url", "canon", "lastmod", "allowed", "delay_s"
-        )
-        out = schedule_frontier(cands)
-        # the journal read is lazy: drain before the temp dir holding
-        # the fragments disappears — through the PAGED serve path
-        # ((host, pos) is the unique cursor), so no single request
-        # materializes more than one page however large the frontier.
-        rows = [
-            r
-            for pg in serve_pages(out, ["host", "pos"], page_size=256)
-            for r in pg
-        ]
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        _sh.rmtree(work, ignore_errors=True)
+    # serve FROM the journal: the scheduler never re-discovers
+    j = Journal(os.path.join(work, "out"), "frontier/candidates")
+    cands = j.read(spark).select(
+        "host", "url", "canon", "lastmod", "allowed", "delay_s"
+    )
+    out = schedule_frontier(cands)
+    # served eagerly through the PAGED serve path
+    # ((host, pos) is the unique cursor), so no single request
+    # materializes more than one page however large the frontier.
+    rows = [
+        r
+        for pg in serve_pages(out, ["host", "pos"], page_size=256)
+        for r in pg
+    ]
+    return spark.createDataFrame(rows, out.schema)
 
 
 def _dedup_index_serve_oracle() -> str:
@@ -431,9 +412,6 @@ def q_bands_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     only — bounded per doc by the band count, compacted by
     Journal.compact, bloom-indexable on sig; probes touch the index
     via the (band, sig) bucket join, never the corpus text."""
-    import shutil as _sh
-    import tempfile as _tf
-
     from core_spark.operators.dedup import (
         banded_signatures,
         lsh_probe,
@@ -445,78 +423,74 @@ def q_bands_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from core_spark.streaming.shard import ShardConfig, run_shard
 
     docs = load_table(spark, sf_dir, "documents")
-    work = _tf.mkdtemp(prefix="lsh_serve_")
-    try:
-        src = os.path.join(work, "src")
-        docs.filter(F.col("doc_id") % 10 != 0).select(
-            "doc_id", "text"
-        ).repartition(4).write.parquet(src)
+    work = scope().tempdir("lsh_serve_")
+    src = os.path.join(work, "src")
+    docs.filter(F.col("doc_id") % 10 != 0).select(
+        "doc_id", "text"
+    ).repartition(4).write.parquet(src)
 
-        cfg = ShardConfig(
-            source_glob=os.path.join(src, "*.parquet"),
-            source_schema="doc_id long, text string",
-            out_root=os.path.join(work, "out"),
-            out_journal="lshidx/bands",
-            shard_id="lsh-serve-0",
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            max_files_per_trigger=2,  # >1 batch => incremental upkeep
-        )
+    cfg = ShardConfig(
+        source_glob=os.path.join(src, "*.parquet"),
+        source_schema="doc_id long, text string",
+        out_root=os.path.join(work, "out"),
+        out_journal="lshidx/bands",
+        shard_id="lsh-serve-0",
+        checkpoint_dir=os.path.join(work, "ckpt"),
+        max_files_per_trigger=2,  # >1 batch => incremental upkeep
+    )
 
-        def index_deltas(df):
-            return banded_signatures(
-                minhash_signatures(df, k=_MINHASH_K),
-                bands=_BANDS,
-                rows=_ROWS,
-            )
-
-        run_shard(spark, cfg, index_deltas).awaitTermination(300)
-
-        # serve FROM the journal: the probe never re-bands the corpus
-        j = Journal(os.path.join(work, "out"), "lshidx/bands")
-        index = j.read(spark).select("doc_id", "band", "sig")
-
-        batch = docs.filter(F.col("doc_id") % 10 == 0)
-        banded_b = banded_signatures(
-            minhash_signatures(batch, k=_MINHASH_K),
+    def index_deltas(df):
+        return banded_signatures(
+            minhash_signatures(df, k=_MINHASH_K),
             bands=_BANDS,
             rows=_ROWS,
         )
-        cand = lsh_probe(banded_b, index).select(
-            F.col("doc_new").alias("doc_a"),
-            F.col("doc_idx").alias("doc_b"),
-        )
-        thr = F.col("inter") * 10 >= F.col("uni") * 7
-        n_corpus = (
-            verify_jaccard(cand, docs)
-            .filter(thr)
-            .groupBy("doc_a")
-            .agg(F.count("*").alias("n_corpus"))
-        )
-        out = (
-            batch.select("doc_id")
-            .join(n_corpus, batch.doc_id == n_corpus.doc_a, "left")
-            .select(
-                "doc_id",
-                F.coalesce("n_corpus", F.lit(0))
-                .cast("bigint")
-                .alias("n_corpus"),
-                F.when(
-                    F.coalesce("n_corpus", F.lit(0)) > 0,
-                    F.lit("dup_of_corpus"),
-                )
-                .otherwise(F.lit("unique"))
-                .alias("status"),
+
+    run_shard(spark, cfg, index_deltas).awaitTermination(300)
+
+    # serve FROM the journal: the probe never re-bands the corpus
+    j = Journal(os.path.join(work, "out"), "lshidx/bands")
+    index = j.read(spark).select("doc_id", "band", "sig")
+
+    batch = docs.filter(F.col("doc_id") % 10 == 0)
+    banded_b = banded_signatures(
+        minhash_signatures(batch, k=_MINHASH_K),
+        bands=_BANDS,
+        rows=_ROWS,
+    )
+    cand = lsh_probe(banded_b, index).select(
+        F.col("doc_new").alias("doc_a"),
+        F.col("doc_idx").alias("doc_b"),
+    )
+    thr = F.col("inter") * 10 >= F.col("uni") * 7
+    n_corpus = (
+        verify_jaccard(cand, docs)
+        .filter(thr)
+        .groupBy("doc_a")
+        .agg(F.count("*").alias("n_corpus"))
+    )
+    out = (
+        batch.select("doc_id")
+        .join(n_corpus, batch.doc_id == n_corpus.doc_a, "left")
+        .select(
+            "doc_id",
+            F.coalesce("n_corpus", F.lit(0))
+            .cast("bigint")
+            .alias("n_corpus"),
+            F.when(
+                F.coalesce("n_corpus", F.lit(0)) > 0,
+                F.lit("dup_of_corpus"),
             )
-            .orderBy("doc_id")
+            .otherwise(F.lit("unique"))
+            .alias("status"),
         )
-        # journal read is lazy: drain before the temp dir goes —
-        # through the paged serve path (doc_id cursor): one row per
-        # queried doc, never more than a page per request
-        rows = [
-            r
-            for pg in serve_pages(out, ["doc_id"], page_size=256)
-            for r in pg
-        ]
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        _sh.rmtree(work, ignore_errors=True)
+        .orderBy("doc_id")
+    )
+    # served eagerly through the paged serve path (doc_id cursor): one row per
+    # queried doc, never more than a page per request
+    rows = [
+        r
+        for pg in serve_pages(out, ["doc_id"], page_size=256)
+        for r in pg
+    ]
+    return spark.createDataFrame(rows, out.schema)

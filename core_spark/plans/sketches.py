@@ -42,7 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from core_spark.io import load_table
-from core_spark.plans.registry import query
+from core_spark.plans.registry import query, scope
 
 # ------------------------------------------------------------ kmv sketch
 _KMV_K = 64
@@ -976,11 +976,11 @@ def _pr_build_and_loop(li, orders, level, width) -> DataFrame:
     # the loop reuses — each round's rank join sees
     # hashpartitioning(u, width) on the cached side with no Exchange
     # above the InMemoryTableScan, and shuffles only the rank vector.
-    graph = (
+    graph = scope().persist(
         und.join(deg.hint("shuffle_hash"), "u")
         .select("u", "v", "d")
-        .repartition(width, "u")
-        .persist(level)
+        .repartition(width, "u"),
+        level,
     )
     # Eager fill is REQUIRED, not an optimization: under AQE the
     # cached plan's output partitioning is unknown until its

@@ -4,7 +4,6 @@ operators — registered without oracles, driver records rows-only)."""
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid as py_uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -12,11 +11,33 @@ from pyspark.sql import functions as F
 
 from core_spark.io import load_table
 from core_spark.plans.message import message_view
-from core_spark.plans.registry import query
+from core_spark.plans.registry import query, scope, session_conf
 from core_spark.streaming.read_committed import (
     MESSAGE_SCHEMA,
     stream_read_committed,
 )
+
+
+def _to_memory(
+    spark: SparkSession, stream: DataFrame, name: str, ckpt: str, mode: str
+) -> None:
+    """Run `stream` to the end of its input into the memory table
+    `name`. Stateful-op parallelism follows spark.sql.shuffle.partitions,
+    and a caller session's default (200) means 200 tasks per
+    micro-batch for a few thousand rows, so the stream runs at a pinned
+    width; the caller's ORDER BY over the table plans at its own."""
+    with session_conf(spark, "spark.sql.shuffle.partitions", "16"):
+        q = (
+            stream.writeStream.format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .outputMode(mode)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
 
 
 @query(
@@ -59,7 +80,7 @@ def q_join1_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = events.filter(F.col("event_id") % 2 == 0)
     b = events.filter(F.col("event_id") % 2 == 1)
 
-    work = tempfile.mkdtemp(prefix="q_join1_stream_")
+    work = scope().tempdir("q_join1_stream_")
     q1, q2 = events.stat.approxQuantile("us", [1 / 3, 2 / 3], 0.001)
     bounds = [(None, int(q1)), (int(q1), int(q2)), (int(q2), None)]
     for side, df in (("a", a), ("b", b)):
@@ -111,22 +132,7 @@ def q_join1_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     name = "q_join1_stream_" + py_uuid.uuid4().hex[:8]
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _to_memory(spark, joined, name, os.path.join(work, "ckpt"), "append")
     return spark.sql(
         f"SELECT a_event, b_event, user_id, "
         f"unix_micros(a_ts) AS a_us, unix_micros(b_ts) AS b_us "
@@ -167,7 +173,7 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     msgs = message_view(events).select(
         "event_id", "user_id", "value", "off", "producer", "clock", "flags"
     )
-    work = tempfile.mkdtemp(prefix="q_dedup_stream_")
+    work = scope().tempdir("q_dedup_stream_")
     src = os.path.join(work, "src")
     os.makedirs(src)
     # Three offset-ordered chunks cut at approximate terciles — pure
@@ -190,27 +196,10 @@ def q_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src + "/*")
     )
-    # Stateful-op parallelism follows spark.sql.shuffle.partitions; a
-    # caller session's default (200) means 200 Python-worker tasks per
-    # micro-batch for 20 producers — pin a sane width for this query
-    # and restore the caller's setting afterwards.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        q = (
-            stream_read_committed(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _to_memory(
+        spark, stream_read_committed(stream), name,
+        os.path.join(work, "ckpt"), "append",
+    )
     return spark.sql(
         f"SELECT event_id, user_id, value, off, producer, clock, flags "
         f"FROM {name} ORDER BY off"
@@ -247,7 +236,7 @@ def q_agg_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "ts", "event_type", "value", F.unix_micros("ts").alias("us")
     )
-    work = tempfile.mkdtemp(prefix="q_window_stream_")
+    work = scope().tempdir("q_window_stream_")
     q1, q2 = events.stat.approxQuantile("us", [1 / 3, 2 / 3], 0.001)
     bounds = [(None, int(q1)), (int(q1), int(q2)), (int(q2), None)]
     os.makedirs(os.path.join(work, "in"))
@@ -277,22 +266,7 @@ def q_agg_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "q_window_stream_" + py_uuid.uuid4().hex[:8]
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .outputMode("complete")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    _to_memory(spark, agg, name, os.path.join(work, "ckpt"), "complete")
     return spark.sql(
         f"SELECT unix_micros(win.start) AS win_us, event_type, n, sum_cents "
         f"FROM {name} ORDER BY win_us, event_type"

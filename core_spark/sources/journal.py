@@ -608,6 +608,85 @@ class Journal:
         raise AppendConflict(f"fence CAS for {shard} contended {max_attempts} times")
 
     # ------------------------------------------------------------- append
+    def _tmp_path(self) -> str:
+        return os.path.join(self.frag_dir, "_tmp-" + py_uuid.uuid4().hex[:8])
+
+    def _place(self, tmp: str, begin: int, n: int, suffix: str = "") -> str:
+        """Move the written spool `tmp` holding `n` rows from offset
+        `begin` to its fragment name, and return the name.
+
+        The name is content-addressed, the reference's begin-end-sha1sum
+        (protocol.proto:383-411): identical retried content maps to the
+        identical name, so a re-upload after a lost CAS race is a no-op
+        reuse, never an orphan. That holds within one JVM only: a
+        writer restarted after a crash may encode the same rows to
+        other bytes (see _content_hash), and its retry leaves the first
+        file as a vacuum-reclaimable orphan."""
+        name = f"frag-{begin:020d}-{begin + n:020d}-{_content_hash(tmp)}{suffix}"
+        final = os.path.join(self.frag_dir, name)
+        if os.path.exists(final):
+            # idempotent reuse (file or directory fragment)
+            if os.path.isdir(tmp):
+                shutil.rmtree(tmp, ignore_errors=True)
+            else:
+                os.unlink(tmp)
+        else:
+            os.rename(tmp, final)
+        return name
+
+    def _write_columnar(
+        self,
+        out: DataFrame,
+        fmt: str,
+        begin: int,
+        spec,
+        path_postfix: tuple[str, ...] = (),
+    ) -> tuple[str, int, dict, dict, dict]:
+        """Write `out` as one parquet or ORC fragment from offset
+        `begin`: (name, rows, zone maps, manifest blooms, meta)."""
+        tmp = self._tmp_path()
+        writer = out.write.mode("overwrite")
+        if spec is not None and spec.bloom_columns:
+            # Two-level point-lookup skipping (r11): besides the
+            # MANIFEST-level fragment blooms below, have the file
+            # writer plant its own per-row-group bloom filters for the
+            # same listed columns — parquet split-block SBBF / ORC
+            # BLOOM_FILTER_UTF8 — so the scan engine skips row groups
+            # INSIDE the fragments a point lookup still has to read.
+            # Absent columns are ignored by the writers; cost is
+            # per-batch. Adaptive sizing fits each SBBF to the chunk's
+            # distinct values; without it parquet-mr writes every
+            # filter at its 1 MiB maximum, however few rows the
+            # fragment holds.
+            if fmt == "parquet":
+                writer = writer.option(
+                    "parquet.bloom.filter.adaptive.enabled", "true"
+                )
+                for c in spec.bloom_columns:
+                    writer = writer.option(
+                        f"parquet.bloom.filter.enabled#{c}", "true"
+                    )
+            else:
+                writer = writer.option(
+                    "orc.bloom.filter.columns", ",".join(spec.bloom_columns)
+                )
+        if path_postfix:
+            writer = writer.partitionBy(*path_postfix)
+        getattr(writer, fmt)(tmp)
+        n, stats = _footer_info(tmp)
+        # a path-postfix tree records no schema: partition discovery
+        # types its key columns from the paths, not as written
+        meta = {} if path_postfix else {"schema_json": out.schema.json()}
+        # Bloom index over spec-listed columns (opt-in; one
+        # column-pruned driver read of the just-written fragment, so
+        # the cost scales with the batch and the listed columns only).
+        blooms = (
+            _build_blooms(tmp, fmt, spec.bloom_columns)
+            if spec is not None and spec.bloom_columns
+            else {}
+        )
+        return self._place(tmp, begin, n), n, stats, blooms, meta
+
     def append(
         self,
         df: DataFrame,
@@ -654,9 +733,6 @@ class Journal:
                 )
 
         begin = m.next_offset
-        tmp = os.path.join(
-            self.frag_dir, "_tmp-" + py_uuid.uuid4().hex[:8]
-        )
         # Stamp durable per-row offsets: single partition => row order
         # is the append order (per-journal serialization contract).
         stamped = df.coalesce(1).withColumn(
@@ -664,7 +740,6 @@ class Journal:
         )
         from core_spark.sources.codec_fragments import CODEC_FMTS
 
-        meta: dict = {}
         if fmt in CODEC_FMTS:
             # Byte-stream fragment in a random-access codec container
             # (gazette's codec-suffixed fragment files,
@@ -685,6 +760,7 @@ class Journal:
                 write_jsonl_zst,
             )
 
+            tmp = self._tmp_path()
             txt = tmp + "-txt"
             stamped.selectExpr("to_json(struct(*)) AS value").coalesce(
                 1
@@ -701,77 +777,17 @@ class Journal:
             }[fmt]
             n = build(part, tmp, codec_chunk_bytes)
             shutil.rmtree(txt, ignore_errors=True)
+            # gazette's codec-suffix naming
+            frag_name = self._place(tmp, begin, n, "." + fmt)
             stats, blooms = {}, {}
             meta = {"schema_json": stamped.schema.json()}
         else:
             if fmt not in ("parquet", "orc"):
                 raise ValueError(f"unsupported fragment format {fmt!r}")
-            spec = self._spec()
-            writer = stamped.write.mode("overwrite")
-            if spec is not None and spec.bloom_columns:
-                # Two-level point-lookup skipping (r11): besides the
-                # MANIFEST-level fragment blooms below, have the file
-                # writer plant its own per-row-group bloom filters
-                # for the same listed columns — parquet split-block
-                # SBBF / ORC BLOOM_FILTER_UTF8 — so the scan engine
-                # skips row groups INSIDE the fragments a point
-                # lookup still has to read. Absent columns are
-                # ignored by the writers; cost is per-batch. Adaptive
-                # sizing fits each SBBF to the chunk's distinct values;
-                # without it parquet-mr writes every filter at its
-                # 1 MiB maximum, however few rows the fragment holds.
-                if fmt == "parquet":
-                    writer = writer.option(
-                        "parquet.bloom.filter.adaptive.enabled", "true"
-                    )
-                    for c in spec.bloom_columns:
-                        writer = writer.option(
-                            f"parquet.bloom.filter.enabled#{c}", "true"
-                        )
-                else:
-                    writer = writer.option(
-                        "orc.bloom.filter.columns",
-                        ",".join(spec.bloom_columns),
-                    )
-            if path_postfix:
-                writer = writer.partitionBy(*path_postfix)
-            getattr(writer, fmt)(tmp)
-            n, stats = _footer_info(tmp)
-            if not path_postfix:
-                # a path-postfix tree records none: partition discovery
-                # types its key columns from the paths, not as written
-                meta = {"schema_json": stamped.schema.json()}
-
-            # Bloom index over spec-listed string columns (opt-in; one
-            # column-pruned driver read of the just-written fragment, so
-            # the cost scales with the batch and the listed columns only).
-            blooms = (
-                _build_blooms(tmp, fmt, spec.bloom_columns)
-                if spec is not None and spec.bloom_columns
-                else {}
+            frag_name, n, stats, blooms, meta = self._write_columnar(
+                stamped, fmt, begin, self._spec(), path_postfix
             )
-
-        # Content-addressed name, the reference's begin-end-sha1sum
-        # (protocol.proto:383-411): identical retried content maps to
-        # the identical name, so a re-upload after a lost CAS race is
-        # a no-op reuse, never an orphan. That holds within one JVM
-        # only: a writer restarted after a crash may encode the same
-        # rows to other bytes (see _content_hash), and its retry
-        # leaves the first file as a vacuum-reclaimable orphan.
-        frag_name = (
-            f"frag-{begin:020d}-{begin + n:020d}-{_content_hash(tmp)}"
-        )
-        if fmt in CODEC_FMTS:
-            frag_name += "." + fmt  # gazette's codec-suffix naming
         final = os.path.join(self.frag_dir, frag_name)
-        if os.path.exists(final):
-            # idempotent reuse (file or directory fragment)
-            if os.path.isdir(tmp):
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                os.unlink(tmp)
-        else:
-            os.rename(tmp, final)
 
         # Append-path flow control (token bucket over the fragment's
         # real bytes): a capped journal's writers sleep off their debt
@@ -1146,9 +1162,6 @@ class Journal:
         from functools import reduce
 
         for run in todo:
-            tmp = os.path.join(
-                self.frag_dir, "_tmp-" + py_uuid.uuid4().hex[:8]
-            )
             df = reduce(
                 lambda a, b: a.unionByName(b),
                 (self._load_fragment(spark, f) for f in run),
@@ -1156,52 +1169,29 @@ class Journal:
             out = df.coalesce(1)
             if cluster_by:
                 out = out.sortWithinPartitions(*cluster_by)
-            writer = out.write.mode("overwrite")
-            if spec is not None and spec.bloom_columns:
-                # compaction keeps the file-level bloom contract the
-                # append path established (r11): merged fragments
-                # carry fresh per-row-group SBBF filters too, sized to
-                # their distinct values as on append
-                writer = writer.option(
-                    "parquet.bloom.filter.adaptive.enabled", "true"
-                )
-                for c in spec.bloom_columns:
-                    writer = writer.option(
-                        f"parquet.bloom.filter.enabled#{c}", "true"
-                    )
-            writer.parquet(tmp)
-            # content-addressed like append: a retried compaction of
-            # the same run produces the same name, never an orphan
-            name = (
-                f"frag-{run[0].begin:020d}-{run[-1].end:020d}"
-                f"-{_content_hash(tmp)}"
+            # Same writer as append: the merged file keeps the
+            # file-level bloom contract, and its manifest blooms are
+            # REBUILT from it (an OR of the run's filters would also be
+            # sound, but a rebuild resets accumulated fill) under the
+            # CURRENT spec — compaction is when an index catches up
+            # with a bloom_columns change. A run's rows span exactly
+            # [first.begin, last.end), so its name is content-addressed
+            # like an append's: a retried compaction never orphans.
+            name, n, stats, blooms, meta = self._write_columnar(
+                out, "parquet", run[0].begin, spec
             )
-            final = os.path.join(self.frag_dir, name)
-            if os.path.isdir(final):
-                shutil.rmtree(tmp, ignore_errors=True)
-            else:
-                os.rename(tmp, final)
-            new_dirs.append(final)
+            new_dirs.append(os.path.join(self.frag_dir, name))
             replaced[run[0].seq] = Fragment(
                 seq=run[0].seq,
                 begin=run[0].begin,
                 end=run[-1].end,
-                n_records=sum(f.n_records for f in run),
+                n_records=n,
                 path=os.path.join("fragments", name),
                 mod_time=max(f.mod_time for f in run),
                 fmt="parquet",
-                stats=_footer_info(final)[1],
-                # Merged blooms are REBUILT from the merged file (an
-                # OR of the run's filters would also be sound, but a
-                # rebuild resets accumulated fill) under the CURRENT
-                # spec — compaction is when an index catches up with
-                # a bloom_columns change.
-                blooms=(
-                    _build_blooms(final, "parquet", spec.bloom_columns)
-                    if spec is not None and spec.bloom_columns
-                    else {}
-                ),
-                meta={"schema_json": out.schema.json()},
+                stats=stats,
+                blooms=blooms,
+                meta=meta,
             )
             dropped.update(f.seq for f in run)
 

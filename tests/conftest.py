@@ -7,6 +7,7 @@ REPO = Path(__file__).resolve().parents[1]
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
+from core_spark.plans import registry  # noqa: E402
 from core_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -17,6 +18,14 @@ SF_CORRECT = "/root/testdata/sf0.01"
 def spark():
     s = get_spark(app_name="core_spark-tests", master="local[8]", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(autouse=True)
+def close_query_scope():
+    """Release what the test's registry queries allocated (the lifetime
+    contract in plans/registry.py)."""
+    yield
+    registry.close()
 
 
 def spark_jobs(spark, fn):

@@ -14,7 +14,9 @@ session counters: a query whose build runs Spark jobs (connected
 components' checkpoint rounds) draws a different number of them from
 run to run. Each dump renumbers all three in order of first appearance
 (`canonical_ids`), so two dumps of the same code in fresh processes are
-byte-identical and a diff shows only structural change.
+byte-identical and a diff shows only structural change. Each query's
+scope is closed once its plan is written, so no query's cached blocks
+or temp dirs carry over to the next.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from core_spark.plans import registry  # noqa: E402
 from core_spark.plans.registry import REGISTRY  # noqa: E402
 from core_spark.session import get_spark  # noqa: E402
 
@@ -71,6 +74,8 @@ def main() -> int:
         except Exception as exc:  # a query that cannot even plan is a red flag
             print(f"{name}: PLAN ERROR {type(exc).__name__}: {exc}", flush=True)
             continue
+        finally:
+            registry.close()
         plan = canonical_ids(plan)
         (out / f"{name}.txt").write_text(plan)
         nx = plan.count("Exchange")

@@ -1,6 +1,7 @@
 """Time individual registry queries with bench.py's exact methodology
 (warm run, then min of N fresh-cache noop-sink runs, clearCache + JVM
-GC between) — the isolated before/after evidence for optimization
+GC between) — each run's query scope is closed before the next run
+starts, outside the timed window — the isolated before/after evidence for optimization
 rounds.
 
 Usage: python tools/qtime.py --names q_a,q_b [--runs 2] [--json OUT]
@@ -17,6 +18,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from core_spark.plans import registry  # noqa: E402
 from core_spark.plans.registry import REGISTRY  # noqa: E402
 from core_spark.session import get_spark  # noqa: E402
 
@@ -40,6 +42,7 @@ def main() -> int:
         df.write.format("noop").mode("overwrite").save()
         runs = []
         for i in range(args.runs):
+            registry.close()
             spark.catalog.clearCache()
             spark.sparkContext._jvm.System.gc()
             spark.sparkContext.setJobDescription(f"qtime:{name}:{i}")
@@ -47,6 +50,7 @@ def main() -> int:
             df = q.fn(spark, args.sf_dir)
             df.write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
+        registry.close()
         spark.catalog.clearCache()
         out[name] = round(min(runs), 4)
         print(f"TIMED {name} {out[name]} (runs: {[round(r, 3) for r in runs]})", flush=True)

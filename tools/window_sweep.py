@@ -9,6 +9,15 @@ Usage: python tools/window_sweep.py [--sf-dir /root/testdata/sf0.01]
        [--all]                # every registered query, not just 50
        [--json OUT.json]      # write {name: row} like CORRECTNESS_r{N}
 Prints one line per query and a final FAILED list; exit 1 if any.
+
+Each query is also a leak check: after the comparison the sweep calls
+`registry.close()`, and a query fails if the session then holds a
+persisted RDD, a directory under the temp dir or a session conf it
+did not hold before the query (`leaks`). So `--all` is the 213-query leak
+sweep as well. The views and the UTC session time zone that
+`__spark_entry__.queries()` sets up before every query are set up once
+before the first one.
+
 The --all --json form is the per-round full-registry artifact
 (SWEEP_r{N}.json): driver-grade evidence at sf0.01 for the ~150
 names whose driver row predates the current window (VERDICT r11
@@ -20,11 +29,48 @@ import argparse
 import importlib.util
 import os
 import sys
+import tempfile
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
 ).split()
+
+# q_coloc_join's bucketed tables live for the whole session on purpose
+# (plans/relational.py), under this temp dir.
+SESSION_DIRS = {"core_spark_bucketed"}
+
+
+def session_state(spark) -> tuple[set, set, dict]:
+    """What a query could leave in `spark`'s session: persisted RDD ids,
+    directories under the temp dir, and the session conf. Files there
+    are not counted: the JVM extracts a codec's native library (snappy)
+    there on first use, and it lives as long as the JVM."""
+    tmp = tempfile.gettempdir()
+    return (
+        set(spark.sparkContext._jsc.getPersistentRDDs().keys()),
+        {e for e in os.listdir(tmp) if os.path.isdir(os.path.join(tmp, e))}
+        - SESSION_DIRS,
+        spark.conf.getAll,
+    )
+
+
+def leaks(before: tuple, after: tuple) -> list[str]:
+    """What `after` holds that `before` did not, one phrase per kind."""
+    rdds = after[0] - before[0]
+    dirs = after[1] - before[1]
+    conf = {
+        k for k in before[2].keys() | after[2].keys()
+        if before[2].get(k) != after[2].get(k)
+    }
+    out = []
+    if rdds:
+        out.append(f"{len(rdds)} persisted RDDs")
+    if dirs:
+        out.append(f"temp dirs {sorted(dirs)}")
+    if conf:
+        out.append(f"conf {sorted(conf)}")
+    return out
 
 
 def main() -> int:
@@ -45,6 +91,9 @@ def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
+    from core_spark.io import register_views
+    from core_spark.plans import registry
+
     spark = SparkSession.builder.master("local[8]").getOrCreate()
     con = duckdb.connect()
     for t in TABLES:
@@ -58,9 +107,11 @@ def main() -> int:
         names = sorted(qs)
     else:
         names = sorted(qs)[:50]
+    register_views(spark, args.sf_dir)
     bad = []
     rows: dict[str, dict] = {}
     for name in names:
+        before = session_state(spark)
         try:
             sdf = qs[name](spark, args.sf_dir).toPandas()
             if name not in osql:
@@ -101,6 +152,14 @@ def main() -> int:
                 "err": f"{type(e).__name__}: {str(e)[:200]}",
             }
             bad.append(name)
+        finally:
+            registry.close()
+            left = leaks(before, session_state(spark))
+            if left:
+                print(f"{name}: LEFT {'; '.join(left)}")
+                rows[name]["left"] = left
+                if name not in bad:
+                    bad.append(name)
     if args.json:
         import json
 
