@@ -110,13 +110,18 @@ atexit.register(close)
 
 @contextmanager
 def session_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
-    """Set a session conf for the `with` block, then restore it."""
-    prev = spark.conf.get(key)
+    """Set a session conf for the `with` block, then restore it: a key
+    the caller never set (the driver's default session) is unset
+    again, so the session keeps following the default."""
+    prev = spark.conf.get(key, None)
     spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set(key, prev)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:

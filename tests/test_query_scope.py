@@ -97,3 +97,11 @@ def test_exit_close_tolerates_a_stopped_session(tmp_path):
     assert "ROWS True" in out.stdout
     assert "Traceback" not in out.stderr, out.stderr[-3000:]
     assert list(tmp_path.iterdir()) == []
+
+
+def test_session_conf_unsets_a_key_the_caller_never_set(spark):
+    key = "spark.sql.files.maxRecordsPerFile"
+    assert key not in spark.conf.getAll
+    with registry.session_conf(spark, key, "7"):
+        assert spark.conf.get(key) == "7"
+    assert key not in spark.conf.getAll
