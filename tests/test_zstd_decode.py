@@ -1,14 +1,17 @@
 """From-spec RFC 8878 zstd decoder (functions/zstd_decode.py),
 pinned against pyarrow's (independent, C) zstd compressor across
-levels and data shapes. The content checksum's XXH64 is
-functions/xxhash.py, pinned in tests/test_xxhash.py."""
+levels and data shapes, plus the XXH64 its content checksum verifies
+with (functions/xxhash.py) pinned against Spark's own JVM xxhash64
+and the published empty-input vector."""
 
+import os
 import random
 import struct
 
 import pyarrow as pa
 import pytest
 
+from core_spark.functions import zstd_decode
 from core_spark.functions.xxhash import xxh64
 from core_spark.functions.zstd_decode import (
     ZstdDecodeError,
@@ -80,6 +83,28 @@ def test_content_checksum_verified_not_skipped():
     evil[-1] ^= 0x01
     with pytest.raises(ZstdDecodeError, match="checksum"):
         zstd_decompress(bytes(evil))
+
+
+def test_xxh64_matches_spark_jvm_xxhash64(spark):
+    # Spark's xxhash64 on a binary column IS canonical XXH64 with
+    # seed 42 — an independent JVM implementation to pin against.
+    # The decoder must verify checksums with the shared functions.xxhash.
+    import pyspark.sql.functions as F
+
+    assert zstd_decode.xxh64 is xxh64
+    datas = [b"", b"a", b"hello world", os.urandom(7), os.urandom(31),
+             os.urandom(32), os.urandom(33), os.urandom(1000)]
+    df = spark.createDataFrame(
+        [(i, bytearray(d)) for i, d in enumerate(datas)], "i int, b binary"
+    )
+    jvm = {r["i"]: r["h"] for r in df.select(
+        "i", F.xxhash64("b").alias("h")).collect()}
+    for i, d in enumerate(datas):
+        mine = zstd_decode.xxh64(d, seed=42)
+        signed = mine - (1 << 64) if mine >= (1 << 63) else mine
+        assert jvm[i] == signed
+    # the published empty-input vector, seed 0
+    assert zstd_decode.xxh64(b"") == 0xEF46DB3751D8E999
 
 
 def test_corrupt_shapes_raise_named_error():
