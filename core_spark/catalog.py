@@ -20,11 +20,15 @@ Matching semantics (label_extensions.go):
 
 from __future__ import annotations
 
+import json
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from core_spark.sources.stores import FSManifestStore
 
 
 @dataclass(frozen=True)
@@ -322,103 +326,69 @@ def validate_spec(spec: JournalSpec) -> None:
 
 
 
-class _VersionedCAS:
-    """Shared versioned-JSON CAS store: v{N}.json files, O_EXCL
-    create (conditional PUT on object stores). One implementation for
-    both spec catalogs, so protocol hardening lands once."""
+class _SpecCatalog:
+    """Specs keyed by `_key`, stored as the versions of one
+    FSManifestStore (the journal manifest's store, conditional PUT on
+    object stores). Each apply creates version cur + 1 from the specs
+    at cur, or loses to a concurrent apply and raises ApplyConflict."""
 
-    def __init__(self, root: str, subdir: str, conflict_what: str):
-        import json as _json
-        import os as _os
-
-        self._json = _json
-        self._os = _os
-        self._what = conflict_what
-        self.dir = _os.path.join(root, subdir)
-        _os.makedirs(self.dir, exist_ok=True)
-
-    def version(self) -> int:
-        # tolerate stray files (editor backups, v.json): only a pure
-        # digit run between 'v' and '.json' is a version
-        vs = [
-            int(f[1:-5])
-            for f in self._os.listdir(self.dir)
-            if f.startswith("v") and f.endswith(".json") and f[1:-5].isdigit()
-        ]
-        return max(vs, default=0)
-
-    def read_latest(self):
-        v = self.version()
-        if v == 0:
-            return []
-        with open(self._os.path.join(self.dir, f"v{v}.json")) as fh:
-            return self._json.load(fh)
-
-    def commit(self, expect_version, payload_obj) -> int:
-        cur = self.version()
-        if expect_version is not None and expect_version != cur:
-            raise ApplyConflict(f"version {expect_version} != current {cur}")
-        new_v = cur + 1
-        path = self._os.path.join(self.dir, f"v{new_v}.json")
-        payload = self._json.dumps(payload_obj)
-        try:
-            fd = self._os.open(
-                path, self._os.O_CREAT | self._os.O_EXCL | self._os.O_WRONLY
-            )
-        except FileExistsError as e:
-            raise ApplyConflict(
-                f"{self._what} v{new_v} concurrently applied"
-            ) from e
-        with self._os.fdopen(fd, "w") as fh:
-            fh.write(payload)
-        return new_v
-
-
-class CatalogStore:
-    """Persistent spec catalog with check-and-set Apply — the engine's
-    metastore, replacing the reference's Etcd keyspace + Apply RPC
-    (broker/protocol/protocol.proto:703-726: upserts/deletions CAS'd
-    on mod revision). Versions are O_EXCL-created JSON files, same
-    protocol as the journal manifest (conditional PUT on object
-    stores)."""
+    _subdir = _what = ""
 
     def __init__(self, root: str):
-        self._cas = _VersionedCAS(root, "_catalog", "catalog")
-        self.dir = self._cas.dir
+        self.dir = os.path.join(root, self._subdir)
+        self._store = FSManifestStore(self.dir)
 
-    def _version(self) -> int:
-        return self._cas.version()
+    def version(self) -> int:
+        """Current catalog version (Etcd mod-revision analog)."""
+        return max(self._store.list_versions(), default=0)
 
-    def specs(self) -> tuple[JournalSpec, ...]:
-        return tuple(
-            JournalSpec.from_dict(d) for d in self._cas.read_latest()
-        )
+    def _specs_at(self, v: int) -> tuple:
+        if v == 0:
+            return ()
+        return tuple(self._from_dict(d) for d in json.loads(self._store.read(v)))
+
+    def specs(self) -> tuple:
+        return self._specs_at(self.version())
 
     def apply(
         self,
-        upserts: tuple[JournalSpec, ...] = (),
+        upserts: tuple = (),
         deletions: tuple[str, ...] = (),
         expect_version: int | None = None,
     ) -> int:
         """Upsert/delete specs atomically; CAS on catalog version."""
         for s in upserts:
-            validate_spec(s)
-        by_name = {s.name: s for s in self.specs()}
-        for name in deletions:
-            by_name.pop(name, None)
+            self._validate(s)
+        cur = self.version()
+        if expect_version is not None and expect_version != cur:
+            raise ApplyConflict(f"version {expect_version} != current {cur}")
+        by_key = {self._key(s): s for s in self._specs_at(cur)}
+        for k in deletions:
+            by_key.pop(k, None)
         for s in upserts:
-            by_name[s.name] = s
-        return self._cas.commit(
-            expect_version,
-            [s.to_dict() for s in sorted(by_name.values(), key=lambda s: s.name)],
-        )
+            by_key[self._key(s)] = s
+        payload = json.dumps([by_key[k].to_dict() for k in sorted(by_key)])
+        if not self._store.put_if_absent(cur + 1, payload):
+            raise ApplyConflict(f"{self._what} v{cur + 1} concurrently applied")
+        return cur + 1
+
+
+class CatalogStore(_SpecCatalog):
+    """Persistent spec catalog with check-and-set Apply — the engine's
+    metastore, replacing the reference's Etcd keyspace + Apply RPC
+    (broker/protocol/protocol.proto:703-726: upserts/deletions CAS'd
+    on mod revision), stored under `<root>/_catalog`."""
+
+    _subdir, _what = "_catalog", "catalog"
+    _from_dict = staticmethod(JournalSpec.from_dict)
+    _validate = staticmethod(validate_spec)
+
+    @staticmethod
+    def _key(spec: JournalSpec) -> str:
+        return spec.name
 
     def resolve(self, spark: SparkSession, selector: LabelSelector) -> DataFrame:
         return resolve(spark, selector, self.specs())
-
-    def version(self) -> int:
-        """Current catalog version (Etcd mod-revision analog)."""
-        return self._version()
 
 
 class WatchedList:
@@ -555,35 +525,15 @@ def validate_shard_spec(spec: ShardSpec) -> None:
         raise SpecValidation("max_files_per_trigger must be >= 1")
 
 
-class ShardCatalog:
+class ShardCatalog(_SpecCatalog):
     """ShardSpec catalog with the same version-CAS Apply protocol as
     CatalogStore (consumer Apply RPC, consumer/shard_api.go List/
     Apply), stored under `<root>/_shards`."""
 
-    def __init__(self, root: str):
-        self._cas = _VersionedCAS(root, "_shards", "shard catalog")
-        self.dir = self._cas.dir
+    _subdir, _what = "_shards", "shard catalog"
+    _from_dict = staticmethod(ShardSpec.from_dict)
+    _validate = staticmethod(validate_shard_spec)
 
-    def version(self) -> int:
-        return self._cas.version()
-
-    def specs(self) -> tuple[ShardSpec, ...]:
-        return tuple(ShardSpec.from_dict(d) for d in self._cas.read_latest())
-
-    def apply(
-        self,
-        upserts: tuple[ShardSpec, ...] = (),
-        deletions: tuple[str, ...] = (),
-        expect_version: int | None = None,
-    ) -> int:
-        for s in upserts:
-            validate_shard_spec(s)
-        by_id = {s.id: s for s in self.specs()}
-        for sid in deletions:
-            by_id.pop(sid, None)
-        for s in upserts:
-            by_id[s.id] = s
-        return self._cas.commit(
-            expect_version,
-            [s.to_dict() for s in sorted(by_id.values(), key=lambda s: s.id)],
-        )
+    @staticmethod
+    def _key(spec: ShardSpec) -> str:
+        return spec.id

@@ -95,7 +95,7 @@ class ParquetError(ValueError):
     """Named parse failure: corrupt or non-parquet input."""
 
 
-class _Reader:
+class _ThriftReader:
     __slots__ = ("raw", "i")
 
     def __init__(self, raw: bytes, i: int = 0) -> None:
@@ -262,7 +262,7 @@ def _stat_value(b: bytes | None, ptype: int | None):
     return None
 
 
-def _parse_statistics(r: _Reader, depth: int) -> dict:
+def _parse_statistics(r: _ThriftReader, depth: int) -> dict:
     out: dict = {}
     for fid, wt in r.fields(depth):
         if fid == 5 and wt == _BINARY:
@@ -276,7 +276,7 @@ def _parse_statistics(r: _Reader, depth: int) -> dict:
     return out
 
 
-def _parse_column_meta(r: _Reader, depth: int) -> dict:
+def _parse_column_meta(r: _ThriftReader, depth: int) -> dict:
     out: dict = {"stats": {}}
     for fid, wt in r.fields(depth):
         if fid == 3 and wt == _LIST:
@@ -308,7 +308,7 @@ def _parse_column_meta(r: _Reader, depth: int) -> dict:
     return out
 
 
-def _parse_page_location(r: _Reader, depth: int) -> dict:
+def _parse_page_location(r: _ThriftReader, depth: int) -> dict:
     out: dict = {}
     for fid, wt in r.fields(depth):
         if fid == 1 and wt in _INT_TYPES:
@@ -327,7 +327,7 @@ def parse_offset_index(raw: bytes) -> list[dict]:
     index): [{offset, compressed_page_size, first_row_index}] — the
     page-granular ranged-GET plan inside one column chunk.
     first_row_index is relative to the row group."""
-    r = _Reader(raw)
+    r = _ThriftReader(raw)
     pages: list[dict] = []
     for fid, wt in r.fields():
         if fid == 1 and wt == _LIST:
@@ -351,7 +351,7 @@ def parse_column_index(
     This is the finest pruning granularity parquet offers — a
     predicate can skip PAGES inside a row group it must otherwise
     read."""
-    r = _Reader(raw)
+    r = _ThriftReader(raw)
     null_pages: list[bool] = []
     mins: list[bytes] = []
     maxs: list[bytes] = []
@@ -429,7 +429,7 @@ def parse_page_index(raw: bytes, col: dict, ptype: int | None = None):
     return oi, ci
 
 
-def _parse_column_chunk(r: _Reader, depth: int) -> dict:
+def _parse_column_chunk(r: _ThriftReader, depth: int) -> dict:
     out: dict = {}
     for fid, wt in r.fields(depth):
         if fid == 2 and wt in _INT_TYPES:
@@ -449,7 +449,7 @@ def _parse_column_chunk(r: _Reader, depth: int) -> dict:
     return out
 
 
-def _parse_row_group(r: _Reader, depth: int) -> dict:
+def _parse_row_group(r: _ThriftReader, depth: int) -> dict:
     out: dict = {"columns": []}
     for fid, wt in r.fields(depth):
         if fid == 1 and wt == _LIST:
@@ -496,6 +496,8 @@ def _schema_leaves(elements: list[dict]) -> dict:
     for el in elements[1:]:
         if not stack:
             raise ParquetError("schema elements outnumber the tree")
+        if el["name"] is None:
+            raise ParquetError("schema element has no name")
         stack[-1] -= 1  # this element fills one slot of the open group
         d, rp, dr, levels = defs[-1], reps[-1], d_rep[-1], lv[-1]
         if el["rep"] == 1:  # OPTIONAL
@@ -551,7 +553,7 @@ def parse_parquet_footer(raw: bytes) -> dict:
     # clamp the walk to exactly the footer bytes: a truncated or
     # crafted footer must raise, never read the tail length/magic
     # (or anything before the footer) as thrift data
-    r = _Reader(raw[len(raw) - 8 - flen : len(raw) - 8])
+    r = _ThriftReader(raw[len(raw) - 8 - flen : len(raw) - 8])
     out: dict = {"schema": [], "row_groups": []}
     for fid, wt in r.fields():
         if fid == 1 and wt in _INT_TYPES:
@@ -683,7 +685,7 @@ _ENC_DELTA_BINARY, _ENC_DELTA_LENGTH, _ENC_DELTA_BYTE_ARRAY = 5, 6, 7
 _ENC_BYTE_STREAM_SPLIT = 9
 
 
-def _parse_page_header(r: _Reader) -> dict:
+def _parse_page_header(r: _ThriftReader) -> dict:
     """One thrift-compact PageHeader: {type, uncompressed_page_size,
     compressed_page_size, num_values, encoding,
     def_level_encoding}."""
@@ -796,7 +798,7 @@ def _rle_hybrid(data: bytes, bit_width: int, count: int) -> list[int]:
     if bit_width > 32:
         raise ParquetError(f"RLE bit width {bit_width} out of range")
     vals: list[int] = []
-    r = _Reader(data)
+    r = _ThriftReader(data)
     mask = (1 << bit_width) - 1
     byte_w = (bit_width + 7) // 8
     while len(vals) < count:
@@ -824,7 +826,7 @@ def _rle_hybrid(data: bytes, bit_width: int, count: int) -> list[int]:
     return vals[:count]
 
 
-def _delta_binary(r: _Reader, expect: int | None = None) -> list[int]:
+def _delta_binary(r: _ThriftReader, expect: int | None = None) -> list[int]:
     """DELTA_BINARY_PACKED (the v2 int encoding): header (block
     size, miniblocks/block, total count, first value), then blocks
     of zigzag min-delta + per-miniblock bit widths + bit-packed
@@ -873,7 +875,7 @@ def _delta_binary(r: _Reader, expect: int | None = None) -> list[int]:
     return out
 
 
-def _delta_length_byte_array(r: _Reader, n: int) -> list[bytes]:
+def _delta_length_byte_array(r: _ThriftReader, n: int) -> list[bytes]:
     """DELTA_LENGTH_BYTE_ARRAY: delta-packed lengths, then the
     concatenated value bytes."""
     lengths = _delta_binary(r, n)
@@ -886,7 +888,7 @@ def _delta_length_byte_array(r: _Reader, n: int) -> list[bytes]:
     return out
 
 
-def _delta_byte_array(r: _Reader, n: int) -> list[bytes]:
+def _delta_byte_array(r: _ThriftReader, n: int) -> list[bytes]:
     """DELTA_BYTE_ARRAY (incremental/front-coded strings):
     delta-packed shared-prefix lengths + delta-length suffixes."""
     prefixes = _delta_binary(r, n)
@@ -998,7 +1000,7 @@ def read_column_chunk(
     out_defs: list = []
     out_reps: list = []
     while len(out) < total:
-        r = _Reader(raw, i)
+        r = _ThriftReader(raw, i)
         hdr = _parse_page_header(r)
         body = raw[r.i : r.i + hdr["compressed_page_size"]]
         if len(body) != hdr["compressed_page_size"]:
@@ -1128,17 +1130,17 @@ def read_column_chunk(
         elif enc == _ENC_DELTA_BINARY:
             if ptype not in (_PT_INT32, _PT_INT64):
                 raise ParquetError("DELTA_BINARY_PACKED on a non-int column")
-            vals = _delta_binary(_Reader(plain, pos), n_present)
+            vals = _delta_binary(_ThriftReader(plain, pos), n_present)
         elif enc == _ENC_DELTA_LENGTH:
             if ptype != _PT_BYTE_ARRAY:
                 raise ParquetError("DELTA_LENGTH on a non-byte-array column")
-            vals = _delta_length_byte_array(_Reader(plain, pos), n_present)
+            vals = _delta_length_byte_array(_ThriftReader(plain, pos), n_present)
         elif enc == _ENC_DELTA_BYTE_ARRAY:
             if ptype != _PT_BYTE_ARRAY:
                 raise ParquetError(
                     "DELTA_BYTE_ARRAY on a non-byte-array column"
                 )
-            vals = _delta_byte_array(_Reader(plain, pos), n_present)
+            vals = _delta_byte_array(_ThriftReader(plain, pos), n_present)
         elif enc == _ENC_BYTE_STREAM_SPLIT:
             # byte k of value i lives at stream k, position i —
             # re-interleave, then decode as PLAIN
@@ -1537,7 +1539,7 @@ _SBBF_SALT = (
 )
 
 
-def _parse_bloom_header(r: _Reader) -> dict:
+def _parse_bloom_header(r: _ThriftReader) -> dict:
     """BloomFilterHeader (thrift compact): {1: numBytes i32,
     2: algorithm union, 3: hash union, 4: compression union} — the
     unions carry one empty-struct branch each; the BRANCH ID is the
@@ -1629,7 +1631,7 @@ def read_parquet_bloom(
             continue
         if not 0 <= off < len(raw):
             raise ParquetError("bloom offset escapes the file")
-        r = _Reader(raw, off)
+        r = _ThriftReader(raw, off)
         hdr = _parse_bloom_header(r)
         bitset = raw[r.i : r.i + hdr["num_bytes"]]
         if len(bitset) != hdr["num_bytes"]:

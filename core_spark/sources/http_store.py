@@ -45,7 +45,7 @@ import urllib.error
 import urllib.request
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from core_spark.sources.stores import ManifestStore
+from core_spark.sources.stores import ManifestStore, version_of
 
 
 class ObjectStoreServer:
@@ -176,12 +176,8 @@ class HTTPManifestStore(ManifestStore):
             f"{self.base_url}/?prefix={self.prefix}/v"
         ) as resp:
             keys = json.loads(resp.read())
-        out = []
-        for k in keys:
-            leaf = k.rsplit("/", 1)[-1]
-            if leaf.startswith("v") and leaf.endswith(".json"):
-                out.append(int(leaf[1:-5]))
-        return out
+        vs = (version_of(k.rsplit("/", 1)[-1]) for k in keys)
+        return [v for v in vs if v is not None]
 
     def read(self, version: int) -> str:
         with urllib.request.urlopen(self._url(version)) as resp:

@@ -41,6 +41,7 @@ from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from core_spark.sources.stores import FSManifestStore, ManifestStore
 
@@ -171,17 +172,28 @@ def _content_hash(path: str) -> str:
 def _columnar_reader(spark: SparkSession, f: "Fragment"):
     """Spark's reader for parquet/orc fragment `f`, under the schema
     the manifest recorded for it: the schema Spark's inference would
-    read back from the fragment's footer, so planning a read launches
-    no inference job."""
+    read back from a flat fragment's footer, and a path-postfix tree's
+    key columns as written, so planning a read launches no inference
+    job."""
     reader = spark.read.format(f.fmt)
     sj = f.meta.get("schema_json")
     if sj is None:
-        # inferred: a manifest from before fragments recorded their
-        # schema, or a path-postfix tree (see append)
+        # inferred: a flat fragment from a manifest written before
+        # fragments recorded their schema
         return reader
-    from pyspark.sql.types import StructType
+    return reader.schema(T.StructType.fromJson(json.loads(sj)))
 
-    return reader.schema(StructType.fromJson(json.loads(sj)))
+
+class UnrecordedSchema(ValueError):
+    """A path-postfix fragment from a manifest that recorded no schema:
+    its key columns' written types are unknown, and types guessed from
+    the paths could change values (the string "+5" reads as 5)."""
+
+    def __init__(self, journal: str, path: str):
+        super().__init__(
+            f"journal {journal!r} fragment {path!r} is a path-postfix "
+            "tree with no recorded schema; re-append its rows to read them"
+        )
 
 
 def _dir_has_postfix(p: str) -> bool:
@@ -307,7 +319,7 @@ def _bloom_may_match(blooms: dict, col: str, op: str, value) -> bool:
     return _bloom_may_contain(blooms[col], value)
 
 
-def _build_blooms(path: str, fmt: str, cols) -> dict:
+def _build_blooms(path: str, fmt: str, cols, keys=None) -> dict:
     """Per-column bloom hex maps for a written fragment, computed on
     the DRIVER from one column-pruned pyarrow read. This replaced a
     per-append Spark job (scan + md5-explode + distinct + collect): the
@@ -320,15 +332,29 @@ def _build_blooms(path: str, fmt: str, cols) -> dict:
     rendering, stored with the ``int:`` type prefix the probe keys on)
     and take four 16-bit slices mod _BLOOM_BITS — exactly the
     read-side _bloom_positions, which the journal tests and the
-    q_audit_scan DuckDB oracle pin bit-exactly."""
+    q_audit_scan DuckDB oracle pin bit-exactly.
+
+    `keys`: a path-postfix tree's key fields (a StructType, as the
+    fragment's recorded schema types them). A listed string or integer
+    key column is read back under its type, as Spark reads it, so its
+    map is keyed as written. Other keys stay out of the partitioning:
+    pyarrow ignores them, and cannot parse some types (decimal)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
-    # partitioning="hive" restores path-postfix (key=value) columns the
-    # way Spark's read-side discovery does, so a postfix column listed
-    # in bloom_columns still gets its map; a flat fragment is untouched
-    dset = ds.dataset(path, format=fmt, partitioning="hive")
+    partitioning = None
+    if keys:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        listed = [
+            f
+            for f in to_arrow_schema(keys)
+            if f.name in cols
+            and (pa.types.is_string(f.type) or pa.types.is_integer(f.type))
+        ]
+        partitioning = ds.partitioning(pa.schema(listed), flavor="hive")
+    dset = ds.dataset(path, format=fmt, partitioning=partitioning)
     picked: list[tuple[str, bool]] = []  # (col, is_int)
     for c in cols:
         if c not in dset.schema.names:
@@ -421,11 +447,12 @@ class Fragment:
     # serializations" with framing and schema belonging to the reader
     # (message/interfaces.go:121-124) — here the manifest IS the
     # reader's schema carrier. Byte-opaque codec fragments
-    # (jsonl.zst/.xz/.gz) cannot be read without it; flat parquet/orc
-    # fragments are read under it instead of a schema-inference job.
-    # Path-postfix trees carry none, and neither do fragments from
-    # older manifests; both are read under Spark's inference. Default
-    # keeps those manifests parsing.
+    # (jsonl.zst/.xz/.gz) cannot be read without it; parquet/orc
+    # fragments, path-postfix trees included, are read under it
+    # instead of a schema-inference job. Fragments from older
+    # manifests carry none: a flat one is read under Spark's
+    # inference, a postfix one raises UnrecordedSchema. Default keeps
+    # those manifests parsing.
     meta: dict = field(default_factory=dict)
 
 
@@ -674,14 +701,19 @@ class Journal:
             writer = writer.partitionBy(*path_postfix)
         getattr(writer, fmt)(tmp)
         n, stats = _footer_info(tmp)
-        # a path-postfix tree records no schema: partition discovery
-        # types its key columns from the paths, not as written
-        meta = {} if path_postfix else {"schema_json": out.schema.json()}
+        # The schema as Spark reads the fragment back: a path-postfix
+        # tree's key columns follow the data columns, in template
+        # order, each with its written type (discovery would type them
+        # from the path strings instead).
+        written = out.schema
+        keys = T.StructType([written[c] for c in path_postfix])
+        schema = [f for f in written if f.name not in path_postfix] + keys.fields
+        meta = {"schema_json": T.StructType(schema).json()}
         # Bloom index over spec-listed columns (opt-in; one
         # column-pruned driver read of the just-written fragment, so
         # the cost scales with the batch and the listed columns only).
         blooms = (
-            _build_blooms(tmp, fmt, spec.bloom_columns)
+            _build_blooms(tmp, fmt, spec.bloom_columns, keys)
             if spec is not None and spec.bloom_columns
             else {}
         )
@@ -721,8 +753,9 @@ class Journal:
         `path_postfix`: column names laid out Hive-style inside the
         fragment (`date=…/hour=…`) — the JournalSpec path-postfix
         template (protocol.proto:248-266), which exists precisely so
-        batch readers get partition pruning over fragment contents;
-        Spark's partition discovery restores the columns on read and
+        batch readers get partition pruning over fragment contents.
+        The recorded schema types the key columns as written, and
+        Spark's partition discovery restores their values on read and
         prunes subdirectories for free.
         """
         m = self.manifest()
@@ -876,6 +909,8 @@ class Journal:
             return read_codec_fragment(
                 spark, p, f.fmt, f.meta.get("schema_json")
             )
+        if "schema_json" not in f.meta and _dir_has_postfix(p):
+            raise UnrecordedSchema(self.name, f.path)
         return _columnar_reader(spark, f).load(p)
 
     # --------------------------------------------------------------- read

@@ -10,8 +10,9 @@ UPDATE). Here the contract is narrower and sharper: a manifest version
 file is written AT MOST ONCE — `put_if_absent` either creates
 version N or reports that someone else already did.
 
-- FSManifestStore: local/NFS filesystems via O_CREAT|O_EXCL — the
-  POSIX conditional create.
+- FSManifestStore: local/NFS filesystems via link(2) of a written
+  spool — the POSIX conditional create. It also stores the journal
+  and shard catalogs (core_spark/catalog.py).
 - MemoryCASStore: an in-memory model of an object store's conditional
   PUT (S3 `If-None-Match: *`, GCS `x-goog-if-generation-match: 0`,
   Azure `If-None-Match: *`) — the semantics a production S3/GCS/ABFS
@@ -27,7 +28,18 @@ protocol, fence acquisition, registers) is backend-agnostic.
 from __future__ import annotations
 
 import os
+import re
 import threading
+
+# A version file is named exactly as `f"v{n}.json"` names it; anything
+# else in the directory (an editor backup, a stray `v.json`) is not one.
+_VERSION_FILE = re.compile(r"v(0|[1-9][0-9]*)\.json")
+
+
+def version_of(name: str) -> int | None:
+    """The version a file name holds, or None if it is not one."""
+    m = _VERSION_FILE.fullmatch(name)
+    return int(m.group(1)) if m else None
 
 
 class ManifestStore:
@@ -45,7 +57,8 @@ class ManifestStore:
 
 
 class FSManifestStore(ManifestStore):
-    """O_EXCL-based conditional create on a filesystem directory."""
+    """Conditional create on a filesystem directory: link(2) of a
+    written spool, which fails with EEXIST atomically."""
 
     def __init__(self, directory: str):
         self.directory = directory
@@ -55,11 +68,8 @@ class FSManifestStore(ManifestStore):
         return os.path.join(self.directory, f"v{version}.json")
 
     def list_versions(self) -> list[int]:
-        return [
-            int(f[1:-5])
-            for f in os.listdir(self.directory)
-            if f.startswith("v") and f.endswith(".json")
-        ]
+        vs = (version_of(f) for f in os.listdir(self.directory))
+        return [v for v in vs if v is not None]
 
     def read(self, version: int) -> str:
         with open(self._path(version)) as fh:

@@ -44,3 +44,31 @@ def spark_jobs(spark, fn):
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def stream_journal(spark, root, name, checkpoint):
+    """Every row of journal `name` served through
+    `readStream.format("journal")` into a memory sink, as a DataFrame
+    over the sink's table."""
+    import uuid
+
+    from core_spark.sources.datasource import journal_datasource
+
+    spark.dataSource.register(journal_datasource())
+    table = f"journal_{uuid.uuid4().hex}"
+    q = (
+        spark.readStream.format("journal")
+        .option("root", root)
+        .option("name", name)
+        .load()
+        .writeStream.format("memory")
+        .queryName(table)
+        .option("checkpointLocation", str(checkpoint))
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.table(table)

@@ -401,7 +401,7 @@ def test_map_values_decode():
     assert v == {"outer": {"inner": 9}} and i == len(data)
 
 
-def test_nested_records_pin_against_java_avro_writer(spark):
+def test_nested_records_pin_against_java_avro_writer(spark, tmp_path):
     """Record-in-record, record-in-array, array-of-array and
     map-of-record pinned against the JAVA Avro encoder (the
     avro-1.12 jar on Spark's own classpath — a fully independent
@@ -409,7 +409,6 @@ def test_nested_records_pin_against_java_avro_writer(spark):
     library does all binary encoding), plus the record_path
     dotted-path convention."""
     import json
-    import tempfile
 
     from core_spark.functions.avro import (
         AvroError,
@@ -466,7 +465,7 @@ def test_nested_records_pin_against_java_avro_writer(spark):
     jschema = jvm.org.apache.avro.Schema.Parser().parse(json.dumps(schema))
     dw = jvm.org.apache.avro.generic.GenericDatumWriter(jschema)
     w = jvm.org.apache.avro.file.DataFileWriter(dw)
-    path = tempfile.mkdtemp() + "/nested.avro"
+    path = str(tmp_path) + "/nested.avro"
     w.create(jschema, jvm.java.io.File(path))
     reader = jvm.org.apache.avro.generic.GenericDatumReader(jschema)
     fac = jvm.org.apache.avro.io.DecoderFactory.get()
@@ -499,14 +498,13 @@ def test_nested_records_pin_against_java_avro_writer(spark):
         record_path(got[0], "id.x")
 
 
-def test_nested_fuzz_against_java_avro_writer(spark):
+def test_nested_fuzz_against_java_avro_writer(spark, tmp_path):
     """Deterministic fuzz: random nested rows (nullable record,
     ragged array-of-array, map of nullable records) through the Java
     encoder across null and deflate codecs — every shape decodes to
     the JSON the Java JsonDecoder consumed."""
     import json
     import random
-    import tempfile
 
     from core_spark.functions.avro import (
         avro_block_records,
@@ -563,7 +561,7 @@ def test_nested_fuzz_against_java_avro_writer(spark):
         w = jvm.org.apache.avro.file.DataFileWriter(dw)
         if codec == "deflate":
             w.setCodec(jvm.org.apache.avro.file.CodecFactory.deflateCodec(6))
-        path = tempfile.mkdtemp() + f"/fuzz-{codec}.avro"
+        path = str(tmp_path) + f"/fuzz-{codec}.avro"
         w.create(jschema, jvm.java.io.File(path))
         for r in rows_json:
             w.append(
@@ -585,12 +583,11 @@ def test_nested_fuzz_against_java_avro_writer(spark):
         assert got == want, codec
 
 
-def test_enum_fixed_and_decimal_over_fixed_pin_java(spark):
+def test_enum_fixed_and_decimal_over_fixed_pin_java(spark, tmp_path):
     """Enums (symbol strings), fixed (raw bytes) and decimal-over-
     fixed pinned against the Java Avro encoder (fixed values ride
     the Avro-JSON latin-1 convention into the JsonDecoder)."""
     import json
-    import tempfile
     from decimal import Decimal
 
     from core_spark.functions.avro import (
@@ -630,7 +627,7 @@ def test_enum_fixed_and_decimal_over_fixed_pin_java(spark):
     jschema = jvm.org.apache.avro.Schema.Parser().parse(json.dumps(schema))
     dw = jvm.org.apache.avro.generic.GenericDatumWriter(jschema)
     w = jvm.org.apache.avro.file.DataFileWriter(dw)
-    path = tempfile.mkdtemp() + "/ef.avro"
+    path = str(tmp_path) + "/ef.avro"
     w.create(jschema, jvm.java.io.File(path))
     reader = jvm.org.apache.avro.generic.GenericDatumReader(jschema)
     fac = jvm.org.apache.avro.io.DecoderFactory.get()
@@ -659,13 +656,12 @@ def test_enum_fixed_and_decimal_over_fixed_pin_java(spark):
         _read_value(write_long(5), 0, spec)
 
 
-def test_remaining_common_logical_types_pin_java(spark):
+def test_remaining_common_logical_types_pin_java(spark, tmp_path):
     """timestamp-millis, time-micros/millis and uuid (the remaining
     COMMON logical types) decode — pinned against the Java encoder;
     truly exotic ones (duration…) still raise by name."""
     import datetime as dt
     import json
-    import tempfile
 
     from core_spark.functions.avro import (
         avro_block_records,
@@ -695,7 +691,7 @@ def test_remaining_common_logical_types_pin_java(spark):
     jschema = jvm.org.apache.avro.Schema.Parser().parse(json.dumps(schema))
     dw = jvm.org.apache.avro.generic.GenericDatumWriter(jschema)
     w = jvm.org.apache.avro.file.DataFileWriter(dw)
-    path = tempfile.mkdtemp() + "/lt.avro"
+    path = str(tmp_path) + "/lt.avro"
     w.create(jschema, jvm.java.io.File(path))
     reader = jvm.org.apache.avro.generic.GenericDatumReader(jschema)
     fac = jvm.org.apache.avro.io.DecoderFactory.get()
@@ -718,12 +714,11 @@ def test_remaining_common_logical_types_pin_java(spark):
     assert got[1]["tus"] == dt.time(0, 0)
 
 
-def test_named_type_references_resolve(spark):
+def test_named_type_references_resolve(spark, tmp_path):
     """A schema reusing a defined record/enum/fixed by NAME (the
     ``["null", "c"]`` form) decodes — references resolve through
     collect_named_types, pinned against the Java encoder."""
     import json
-    import tempfile
 
     from core_spark.functions.avro import (
         avro_block_records,
@@ -755,7 +750,7 @@ def test_named_type_references_resolve(spark):
     jschema = jvm.org.apache.avro.Schema.Parser().parse(json.dumps(schema))
     dw = jvm.org.apache.avro.generic.GenericDatumWriter(jschema)
     w = jvm.org.apache.avro.file.DataFileWriter(dw)
-    path = tempfile.mkdtemp() + "/named.avro"
+    path = str(tmp_path) + "/named.avro"
     w.create(jschema, jvm.java.io.File(path))
     reader = jvm.org.apache.avro.generic.GenericDatumReader(jschema)
     fac = jvm.org.apache.avro.io.DecoderFactory.get()
@@ -778,7 +773,7 @@ def test_named_type_references_resolve(spark):
     ]
 
 
-def test_r12_logical_types_pin_java(spark):
+def test_r12_logical_types_pin_java(spark, tmp_path):
     """local-timestamp-millis/micros over long, uuid over fixed[16],
     and duration over fixed[12] pinned against the Java Avro encoder
     (the r12 fence lift — verdict ask #4). Fixed values ride the
@@ -788,7 +783,6 @@ def test_r12_logical_types_pin_java(spark):
     shapes/sizes raise."""
     import datetime
     import json
-    import tempfile
     import uuid as _uuid
 
     from core_spark.functions.avro import (
@@ -844,7 +838,7 @@ def test_r12_logical_types_pin_java(spark):
     jschema = jvm.org.apache.avro.Schema.Parser().parse(json.dumps(schema))
     dw = jvm.org.apache.avro.generic.GenericDatumWriter(jschema)
     w = jvm.org.apache.avro.file.DataFileWriter(dw)
-    path = tempfile.mkdtemp() + "/r12lt.avro"
+    path = str(tmp_path) + "/r12lt.avro"
     w.create(jschema, jvm.java.io.File(path))
     reader = jvm.org.apache.avro.generic.GenericDatumReader(jschema)
     fac = jvm.org.apache.avro.io.DecoderFactory.get()

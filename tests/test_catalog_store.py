@@ -53,6 +53,26 @@ def test_apply_cas_conflict(tmp_path):
     assert {s.name for s in cs.specs()} == {"demo/a", "demo/c"}
 
 
+def test_apply_racing_a_concurrent_apply_conflicts(tmp_path, monkeypatch):
+    """An apply builds its version from the specs at the version it
+    commits after: a concurrent apply landing in between makes it
+    raise ApplyConflict, never commit over the other's spec."""
+    cs = CatalogStore(str(tmp_path))
+    cs.apply(upserts=(_spec("demo/a"),))
+    read = cs._specs_at
+
+    def racing_read(v):
+        CatalogStore(str(tmp_path)).apply(upserts=(_spec("demo/c"),))
+        return read(v)
+
+    monkeypatch.setattr(cs, "_specs_at", racing_read)
+    with pytest.raises(ApplyConflict, match="catalog v2 concurrently applied"):
+        cs.apply(upserts=(_spec("demo/b"),))
+    monkeypatch.undo()
+    assert {s.name for s in cs.specs()} == {"demo/a", "demo/c"}
+    assert cs.version() == 2
+
+
 def test_validation(tmp_path):
     cs = CatalogStore(str(tmp_path))
     with pytest.raises(SpecValidation, match="fragment_length"):

@@ -1,13 +1,15 @@
-"""Journal data source: batch read parity with Journal.read, and the
-streaming tail picking up fragments appended AFTER the query starts —
-the MessageProducer-override path (consumer/interfaces.go:117-141)."""
+"""Journal stream source: parity with Journal.read, and the streaming
+tail picking up fragments appended AFTER the query starts — the
+MessageProducer-override path (consumer/interfaces.go:117-141)."""
 
-import os
+from decimal import Decimal
 
+import pytest
 from pyspark.sql import functions as F
 
 from core_spark.sources.datasource import journal_datasource
-from core_spark.sources.journal import Journal
+from core_spark.sources.journal import Journal, UnrecordedSchema
+from tests.conftest import stream_journal
 
 
 def _setup(spark, tmp_path):
@@ -22,17 +24,12 @@ def _setup(spark, tmp_path):
     return root, j, df
 
 
-def test_batch_read_matches_journal_read(spark, tmp_path):
+def test_stream_matches_journal_read(spark, tmp_path):
     root, j, df = _setup(spark, tmp_path)
-    got = (
-        spark.read.format("journal")
-        .option("root", root)
-        .option("name", "ds/events")
-        .load()
-    )
-    assert sorted((r.k, r.v, r._offset) for r in got.collect()) == sorted(
-        (r.k, r.v, r._offset) for r in j.read(spark).drop("_journal").collect()
-    )
+    got = stream_journal(spark, root, "ds/events", tmp_path / "ckpt")
+    want = j.read(spark).drop("_journal")
+    assert got.dtypes == want.dtypes
+    assert sorted(got.collect()) == sorted(want.collect())
     assert got.count() == 100
 
 
@@ -104,11 +101,11 @@ def test_shard_tails_journal_source_end_to_end(spark, tmp_path):
     assert totals == {"a": 3, "b": 2, "c": 1}
 
 
-def test_partitioned_fragments_served_with_discovery(spark, tmp_path):
-    """Hive path-postfix fragments (partitionBy) must be readable
-    through format("journal") — partition columns restored from the
-    key=value path segments, matching Journal.read's native-discovery
-    view (values AND inferred column types)."""
+def test_partitioned_fragments_stream_like_journal_read(spark, tmp_path):
+    """Hive path-postfix fragments (partitionBy) stream through
+    format("journal") with their partition columns restored from the
+    key=value path segments: the same values and column types as
+    Journal.read."""
     root = str(tmp_path / "journals")
     j = Journal(root, "ds/part")
     df = spark.range(0, 40).select(
@@ -118,16 +115,10 @@ def test_partitioned_fragments_served_with_discovery(spark, tmp_path):
     )
     j.append(df.filter(F.col("k") < 25), path_postfix=("day", "site"))
     j.append(df.filter(F.col("k") >= 25), path_postfix=("day", "site"))
-    spark.dataSource.register(journal_datasource())
 
-    got = (
-        spark.read.format("journal")
-        .option("root", root)
-        .option("name", "ds/part")
-        .load()
-    )
+    got = stream_journal(spark, root, "ds/part", tmp_path / "ckpt")
     want = j.read(spark).drop("_journal")
-    assert dict(got.dtypes) == dict(want.dtypes)
+    assert got.dtypes == want.dtypes
     key = lambda r: (r.k, r.day, r.site, r._offset)  # noqa: E731
     assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
     assert got.count() == 40
@@ -170,32 +161,76 @@ def test_partitioned_tail_streams_through_manifest(spark, tmp_path):
         q.stop()
 
 
-def test_partition_type_inference_matches_native_edge_forms(spark, tmp_path):
-    """The python datasource's partition-type ladder must agree with
-    Spark's native discovery on the forms where Python's int()/float()
-    are laxer (ADVICE r3): '+5' IS int natively (and reads back as 5),
-    while '1_000', 'inf', 'nan' are strings; 'NaN' (Java case) is
-    double. A disagreement would give the same journal two schemas
-    depending on the read path."""
-    root = str(tmp_path / "journals")
-    j = Journal(root, "ds/edge")
-    rows = [("+5", "1_000", "inf", "NaN"), ("7", "22", "nan", "Infinity")]
-    df = spark.createDataFrame(rows, "a string, b string, c string, d string")
-    j.append(df.withColumn("k", F.lit(1)), path_postfix=("a", "b", "c", "d"))
-    spark.dataSource.register(journal_datasource())
+def test_postfix_keys_read_back_as_written(spark, tmp_path):
+    """A path-postfix tree's key columns read back with the values and
+    types they were written with, through each reader of the tree:
+    Journal.read, the stream source, and the bloom maps append builds
+    from the key columns. Typed from the path strings instead, "+5"
+    would read as the int 5 and the bigint `day` as an int."""
+    from core_spark.catalog import CatalogStore, JournalSpec
+    from core_spark.sources.journal import _BLOOM_BITS, _bloom_positions
 
-    got = (
-        spark.read.format("journal")
-        .option("root", root)
-        .option("name", "ds/edge")
-        .load()
+    root = str(tmp_path / "journals")
+    CatalogStore(root).apply(
+        upserts=(JournalSpec("ds/edge", bloom_columns=("a", "day")),)
     )
-    want = j.read(spark).drop("_journal")
-    assert dict(got.dtypes) == dict(want.dtypes)
-    for d in (dict(got.dtypes),):
-        assert d["a"] == "int", d      # '+5' parses as int natively
-        assert d["b"] == "string", d   # '1_000' does not
-        assert d["c"] == "string", d   # lowercase inf/nan are strings
-        assert d["d"] == "double", d   # Java NaN/Infinity literals
-    key = lambda r: (r.k, r.a, r.b, r.c, str(r.d))  # noqa: E731
-    assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
+    j = Journal(root, "ds/edge")
+    rows = [(0, "+5", 1), (1, "1_000", 2), (2, "NaN", 2), (3, "+5", 3)]
+    df = spark.createDataFrame(rows, "k bigint, a string, day bigint")
+    # a decimal key, not bloom-listed: pyarrow cannot parse its paths
+    df = df.selectExpr("*", "CAST(k / 4 AS DECIMAL(6, 2)) AS q")
+    frag = j.append(df, path_postfix=("a", "day", "q"))
+
+    dtypes = [("k", "bigint"), ("_offset", "bigint"), ("a", "string"),
+              ("day", "bigint"), ("q", "decimal(6,2)")]
+    want = sorted(
+        (k, a, day, Decimal(k) / 4, k) for k, a, day in rows
+    )
+    key = lambda r: (r.k, r.a, r.day, r.q, r._offset)  # noqa: E731
+    read = j.read(spark).drop("_journal")
+    streamed = stream_journal(spark, root, "ds/edge", tmp_path / "ckpt")
+    for got in (read, streamed):
+        assert got.dtypes == dtypes
+        assert sorted(map(key, got.collect())) == want
+
+    def bloom(values, prefix):
+        m = bytearray(_BLOOM_BITS // 8)
+        for v in values:
+            for p in _bloom_positions(v):
+                m[p // 8] |= 1 << (p % 8)
+        return prefix + bytes(m).hex()
+
+    assert frag.blooms == {
+        "a": bloom({"+5", "1_000", "NaN"}, ""),
+        "day": bloom({"1", "2", "3"}, "int:"),
+    }
+    pruned = j.read(spark, where=[("a", "=", "+5")])
+    assert sorted(r.k for r in pruned.collect()) == [0, 3]
+
+
+def test_unrecorded_schemas(spark, tmp_path):
+    """A manifest from before appends recorded schemas: a flat
+    fragment streams under its footer's schema, and a path-postfix one
+    raises UnrecordedSchema naming the journal and the fragment."""
+    root = str(tmp_path / "journals")
+    df = spark.range(0, 6).selectExpr("id AS k", "id % 2 AS day")
+    for name, postfix in (("old/flat", ()), ("old/postfix", ("day",))):
+        j = Journal(root, name)
+        j.append(df, path_postfix=postfix)
+        want = j.read(spark).drop("_journal")
+        m = j.manifest()
+        for f in m.fragments:
+            f.meta = {}
+        m.version += 1
+        j._commit_manifest(m)
+        ckpt = tmp_path / name.replace("/", "-")
+        if not postfix:
+            got = stream_journal(spark, root, name, ckpt)
+            assert got.dtypes == want.dtypes
+            assert sorted(got.collect()) == sorted(want.collect())
+            continue
+        path = m.fragments[0].path
+        with pytest.raises(UnrecordedSchema, match=f"'{name}' fragment '{path}'"):
+            j.read(spark)
+        with pytest.raises(Exception, match="UnrecordedSchema"):
+            stream_journal(spark, root, name, ckpt)

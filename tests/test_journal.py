@@ -11,7 +11,7 @@ from core_spark.sources.journal import (
     Manifest,
     RegisterMismatch,
 )
-from tests.conftest import spark_jobs
+from tests.conftest import spark_jobs, stream_journal
 
 
 @pytest.fixture
@@ -136,12 +136,10 @@ def test_hive_postfix_partition_pruning(spark, journal):
 
 def test_orc_fragments_and_mixed_format_journal(spark, tmp_path):
     """Per-fragment file format: ORC appends read back through
-    Journal.read AND the native data source, including a journal that
+    Journal.read AND the stream source, including a journal that
     migrated parquet -> orc mid-history (per-fragment fmt in the
     manifest, per-fragment reader on scan)."""
     from pyspark.sql import functions as F
-
-    from core_spark.sources.datasource import journal_datasource
 
     root = str(tmp_path / "journals")
     j = Journal(root, "fmt/mixed")
@@ -161,14 +159,8 @@ def test_orc_fragments_and_mixed_format_journal(spark, tmp_path):
     mid = j.read(spark, begin=5, end=25)
     assert sorted(r._offset for r in mid.collect()) == list(range(5, 25))
 
-    spark.dataSource.register(journal_datasource())
-    native = (
-        spark.read.format("journal")
-        .option("root", root)
-        .option("name", "fmt/mixed")
-        .load()
-    )
-    assert sorted((r.k, r.v, r._offset) for r in native.collect()) == rows
+    streamed = stream_journal(spark, root, "fmt/mixed", tmp_path / "ckpt")
+    assert sorted((r.k, r.v, r._offset) for r in streamed.collect()) == rows
 
     import pytest as _pytest
 
@@ -1409,20 +1401,38 @@ def test_old_manifest_reads_through_inference(spark, journal):
     assert sorted(got.collect()) == sorted(want.collect())
 
 
-def test_postfix_journal_reads_through_discovery(spark, journal):
-    """A path-postfix tree records no schema: partition discovery
-    types its key columns from the paths (`day` reads as int, though
-    it was written as bigint), so its reads keep Spark's inference."""
+def test_postfix_journal_reads_under_recorded_schema(spark, journal):
+    """A path-postfix tree records its schema too, key columns after
+    the data columns with their written types: reading it plans with
+    no Spark job, `day` reads as the bigint it was written as (not the
+    int partition discovery would type), and a filter on it still
+    prunes partitions. Without a recorded schema the read raises
+    UnrecordedSchema, naming the journal and the fragment."""
+    import re
+
+    from core_spark.sources.journal import UnrecordedSchema
+
     df = spark.range(0, 20).selectExpr("id AS k", "id % 3 AS day")
     journal.append(df.filter("k < 10"), path_postfix=("day",))
     journal.append(df.filter("k >= 10"), path_postfix=("day",))
-    assert all(not f.meta for f in journal.manifest().fragments)
     for begin in (None, 10):
         got, jobs = spark_jobs(spark, lambda: journal.read(spark, begin=begin))
-        assert jobs >= 1
-        assert dict(got.dtypes)["day"] == "int"
-    rows = journal.read(spark).collect()
+        assert jobs == 0
+        assert got.dtypes[:3] == [
+            ("k", "bigint"), ("_offset", "bigint"), ("day", "bigint")
+        ]
+    full = journal.read(spark)
+    rows = full.collect()
     assert sorted((r.k, r.day) for r in rows) == [(k, k % 3) for k in range(20)]
+    day2 = full.filter("day = 2")
+    plan = day2._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*day#\d+L = 2", plan), plan
+    assert sorted(r.k for r in day2.collect()) == [2, 5, 8, 11, 14, 17]
+
+    _strip_schemas(journal)
+    path = journal.manifest().fragments[0].path
+    with pytest.raises(UnrecordedSchema, match=f"'test/journal-0' fragment '{path}'"):
+        journal.read(spark)
 
 
 def test_bloom_fold_over_chunks_equals_whole_column(tmp_path):

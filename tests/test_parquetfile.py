@@ -91,6 +91,26 @@ def test_corrupt_inputs_raise_named_error():
             parse_parquet_footer(bad)
 
 
+def test_unnamed_schema_element_raises_named_error():
+    """A footer flip that turns a schema element's name (field 4) into
+    an unknown field leaves the element with no name: the footer parse
+    raises ParquetError, not a TypeError from joining its path."""
+    buf = io.BytesIO()
+    pq.write_table(pa.table({"a": [1, 2], "zzname": ["x", "y"]}), buf)
+    raw = buf.getvalue()
+    footer = len(raw) - 8 - int.from_bytes(raw[-8:-4], "little")
+    # the footer's first copy is the schema element's name; a column
+    # chunk's path_in_schema repeats it later
+    at = raw.index(b"\x06zzname", footer) - 1
+    # compact-protocol field header: delta 1 from repetition_type (3),
+    # type binary (8); delta 6 makes it field 9, skipped as binary
+    assert raw[at] == 0x18
+    assert parse_parquet_footer(raw)["schema"] == ["a", "zzname"]
+    flipped = raw[:at] + bytes([0x68]) + raw[at + 1:]
+    with pytest.raises(ParquetError, match="no name"):
+        parse_parquet_footer(flipped)
+
+
 def test_random_tail_bytes_never_hang_or_fabricate():
     import random
 
@@ -419,7 +439,7 @@ def test_read_column_byte_stream_split():
 
 def test_page_checksums_verified_not_skipped():
     from core_spark.functions.parquetfile import (
-        _Reader,
+        _ThriftReader,
         _parse_page_header,
         parse_parquet_footer,
         read_parquet_column,
@@ -447,7 +467,7 @@ def test_page_checksums_verified_not_skipped():
         f = parse_parquet_footer(raw)
         col = f["row_groups"][0]["columns"][0]
         start = col.get("dictionary_page_offset") or col["data_page_offset"]
-        r = _Reader(raw, start)
+        r = _ThriftReader(raw, start)
         _parse_page_header(r)
         evil = bytearray(raw)
         evil[r.i + 5] ^= 0xFF

@@ -270,3 +270,164 @@ def test_per_document_kernels_use_doc_kernel():
         "through columns.payload_kernel"
     )
     assert not importing, f"per_doc bodies import per document: {importing}"
+
+
+# Top-level core_spark defs that only tests/ reference, each with why
+# it stays in the engine package for now. Keys are module paths under
+# core_spark, dotted, then the def's name.
+TEST_ONLY = {
+    "catalog.WatchedList": "selector watch; its one engine caller, "
+                           "streaming.routed.RoutedPublisher, is test-only",
+    "examples.bike_share.bike_history": "public API example entry point",
+    "examples.bike_share.detect_cycles": "public API example entry point",
+    "examples.bike_share.ingest_rides": "public API example entry point",
+    "examples.bike_share.recent_rides": "public API example entry point",
+    "examples.crawl_pipeline.plan_crawl": "public API example entry point",
+    "examples.curation_stream.clean_read": "public API example entry point",
+    "examples.curation_stream.corpus_stats": "public API example entry point",
+    "examples.curation_stream.run_curation": "public API example entry point",
+    "examples.media_pipeline.media_read": "public API example entry point",
+    "examples.media_pipeline.media_stats": "public API example entry point",
+    "examples.media_pipeline.run_media_curation": "public API example "
+                                                  "entry point",
+    "examples.stream_sum.run_and_verify": "public API example entry point",
+    "examples.word_count.query_prefix": "public API example entry point",
+    "examples.word_count.run_word_count": "public API example entry point",
+    "functions.avro.record_path": "dotted-path accessor over decoded "
+                                  "records; no query reads by path",
+    "functions.descriptors.descriptor_set_to_spec": "its one engine caller, "
+        "framing.fixed_framing_from_descriptor, is test-only",
+    "functions.framing.fixed_framing_from_descriptor": "engine API no "
+        "query or sink calls; keep it or delete it with its caller",
+    "functions.gzipfile.gzip_members": "inflating member walk, the "
+        "verification tier the split planner is tested against",
+    "functions.latex._expected_latex": "expected-value oracle for tests",
+    "functions.markdown._expected_md": "expected-value oracle for tests",
+    "functions.notebook._expected_cells": "expected-value oracle for tests",
+    "functions.orcfile.orc_rowgroup_prune": "ORC row-group verdicts no "
+                                            "query consults",
+    "functions.orcfile.read_orc_map_column": "MAP column reader no query "
+                                             "calls",
+    "functions.parquetfile.parquet_verify_chunk_stats": "chunk-statistics "
+        "cross-check, a test oracle",
+    "functions.parquetfile.read_parquet_map_column": "MAP column reader no "
+                                                     "query calls",
+    "functions.parquetfile.read_parquet_struct_list": "nested column reader "
+                                                      "no query calls",
+    "functions.protowire.encode_ngram_count": "test-side fixture encoder",
+    "functions.rtf._expected_text": "expected-value oracle for tests",
+    "multimodal.columns.audio_frame_features": "audio feature column no "
+                                               "query calls",
+    "multimodal.docx._expected_blocks": "expected-value oracle for tests",
+    "multimodal.gif.gif_encode_anim": "fixture encoder for the decoder "
+                                      "tests",
+    "multimodal.jpeg._quantized_coeffs": "coefficient oracle for the "
+                                         "decoder tests",
+    "multimodal.jpeg.jpeg_encode_progressive": "fixture encoder for the "
+                                               "decoder tests",
+    "multimodal.mp4.fmp4_duration_ms": "only examples.media_pipeline "
+                                       "calls it",
+    "multimodal.odt._expected_paragraphs": "expected-value oracle for tests",
+    "multimodal.pdf.pdf_meta": "only examples.media_pipeline calls it",
+    "multimodal.wav._write_extended": "fixture encoder helper (build_aiff)",
+    "multimodal.wav.aiff_decode": "only audio_frame_features and "
+                                  "examples.media_pipeline call it",
+    "multimodal.wav.alaw_encode": "fixture encoder for the decoder tests",
+    "multimodal.wav.build_aiff": "fixture encoder for the decoder tests",
+    "multimodal.wav.ima_adpcm_encode": "fixture encoder for the decoder "
+                                       "tests",
+    "multimodal.wav.ms_adpcm_encode": "fixture encoder for the decoder "
+                                      "tests",
+    "multimodal.wav.ulaw_encode": "fixture encoder for the decoder tests",
+    "multimodal.xlsx._expected_cells": "expected-value oracle for tests",
+    "operators.skew.salted_join": "skew-join operator no query calls",
+    "sources.http_store.HTTPManifestStore": "object-store conditional-PUT "
+        "client the store tests run against ObjectStoreServer",
+    "sources.http_store.ObjectStoreServer": "in-process HTTP bucket for "
+                                            "the store tests",
+    "sources.stores.MemoryCASStore": "in-memory conditional-PUT model for "
+                                     "the contention tests",
+    "streaming.publisher.ack_intents": "transactional publish no query or "
+                                       "sink uses",
+    "streaming.publisher.publish_uncommitted": "transactional publish no "
+                                               "query or sink uses",
+    "streaming.routed.RoutedPublisher": "selector-routed publisher no "
+                                        "shard or query runs",
+}
+
+
+def test_no_new_test_only_engine_code():
+    """No engine code that only tests call: every top-level def in
+    core_spark is reachable from engine code, or allowlisted in
+    TEST_ONLY, and every TEST_ONLY entry is still test-only.
+
+    Engine code is core_spark's module-level statements (query
+    registration decorators included), tools/, perfbench/ (not its
+    tests), bench.py and __spark_entry__.py, and the bodies of the
+    defs they reach. A name counts as referenced where it is loaded
+    or read as an attribute, matched by name alone, so a collision
+    can only hide a test-only def, never flag a live one. A def only
+    a test-only def calls is test-only too."""
+    import ast
+    import pathlib
+
+    import core_spark
+
+    def refs(node):
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.ImportFrom):
+                # an alias hides the imported name from the loads
+                out.update(a.name for a in n.names if a.asname)
+        return out
+
+    pkg = pathlib.Path(core_spark.__file__).parent
+    repo = pkg.parent
+    defs, body, roots = {}, {}, set()
+    for path in sorted(pkg.rglob("*.py")):
+        mod = ".".join(path.relative_to(pkg).with_suffix("").parts)
+        for top in ast.parse(path.read_text()).body:
+            if not isinstance(
+                top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                roots |= refs(top)
+                continue
+            key = f"{mod}.{top.name}"
+            defs[key] = top.name
+            body[key] = refs(top) - {top.name}
+            if any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", "") == "query"
+                for d in top.decorator_list
+            ):
+                roots.add(top.name)  # registered in REGISTRY
+    engine = [
+        *(repo / "tools").rglob("*.py"),
+        *(p for p in (repo / "perfbench").rglob("*.py") if "tests" not in p.parts),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+    for path in engine:
+        roots |= refs(ast.parse(path.read_text()))
+    live = {k for k, name in defs.items() if name in roots}
+    while True:
+        reached = set().union(*(body[k] for k in live))
+        new = {k for k, name in defs.items() if k not in live and name in reached}
+        if not new:
+            break
+        live |= new
+    tested = set()
+    for path in (repo / "tests").rglob("*.py"):
+        tested |= refs(ast.parse(path.read_text()))
+    test_only = {k for k, name in defs.items() if k not in live and name in tested}
+
+    new = sorted(test_only - TEST_ONLY.keys())
+    stale = sorted(TEST_ONLY.keys() - test_only)
+    assert not new, (
+        f"{new}: only tests reference these — call them from engine code, "
+        "move them to tests/, or allowlist them in TEST_ONLY with a reason"
+    )
+    assert not stale, f"{stale} are no longer test-only — drop them from TEST_ONLY"

@@ -172,3 +172,25 @@ def test_http_conditional_put_race_admits_one(bucket):
         t.join()
     assert sorted(codes).count(200) == 1
     assert sorted(codes).count(412) == 15
+
+
+@pytest.mark.parametrize("stray", ["v.json", "vbak.json"])
+def test_stray_names_are_not_versions(tmp_path, stray):
+    """Only `v<n>.json` is a version file: a stray name in a journal's
+    manifest dir or a catalog's dir is neither read nor counted."""
+    from core_spark.catalog import CatalogStore, JournalSpec
+
+    j = Journal(str(tmp_path), "stray/j")
+    j.update_registers(set_registers={"k": "1"})
+    cat = CatalogStore(str(tmp_path))
+    cat.apply(upserts=(JournalSpec("stray/j"),))
+    for d in (j.manifest_dir, cat.dir):
+        (tmp_path / d / stray).write_text("junk")
+    m = j.manifest()
+    assert (m.version, m.registers) == (1, {"k": "1"})
+    j.update_registers(set_registers={"k": "2"})
+    assert j.manifest().version == 2
+    assert cat.version() == 1
+    assert [s.name for s in cat.specs()] == ["stray/j"]
+    assert cat.apply(deletions=("stray/j",), expect_version=1) == 2
+    assert cat.specs() == ()
